@@ -231,7 +231,7 @@ def long_to_tiles(df: DataFrame, meta: RasterMeta, tile: int = 256,
     n_ty = math.ceil(rows / tile)
     n_tx = math.ceil(cols / tile)
 
-    def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pack(key, pdf):
         ty, tx = int(key[0]), int(key[1])
         h = min(tile, rows - ty * tile)
         w = min(tile, cols - tx * tile)

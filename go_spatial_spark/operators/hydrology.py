@@ -19,12 +19,14 @@ Two execution paths, per SURVEY.md §2.5 / §7:
     topological sweep, init value 1.
 
 - **distributed path** (the 100 TB design): D8 accumulation is
-  *order-independent* (integer sums along a forest), so a tile-local
-  topological solve + inter-tile inflow fixpoint produces bit-identical
-  results to the sequential replay. Each round is one cogrouped
-  applyInPandas over (ty,tx); inflows grow monotonically and converge
-  in <= (longest flow path / tile size) rounds. Per-round metrics
-  (changed inflows, total mass) support checkpoint/resume.
+  *order-independent* (integer sums along a forest), so it runs as a
+  two-pass boundary-graph solve (Barnes, Environ. Model. Softw. 2017)
+  that is bit-identical to the sequential replay in a fixed number of
+  Spark jobs, however many tile edges a flow path crosses. Pass 1
+  accumulates each tile locally and emits its perimeter graph; the
+  driver solves that graph once (O(n_tiles * 4 * tile) rows); pass 2
+  adds the resolved inflows. FD8 and the fill/breach operators still
+  iterate an inter-tile fixpoint, one checkpointed round at a time.
 """
 
 from __future__ import annotations
@@ -254,121 +256,116 @@ def d8_accum_np(dem: np.ndarray, meta: RasterMeta,
     return np.where(valid, acc, nodata)
 
 
-def _tile_solve(dirs: np.ndarray, ext_in: np.ndarray, nodata: float):
-    """Topological accumulation inside one tile given external inflows.
-    Returns (acc array, list of (d_row_off, d_col_off, lrow, lcol, contrib)
-    outflow records in local coords + direction offsets)."""
+def _tile_graph(dirs: np.ndarray, nodata: float):
+    """One pointer tile as a forest over flat cell indices: (valid,
+    in-tile receiver or -1, exit mask, receiver row, receiver col)."""
     h, w = dirs.shape
-    valid = dirs >= 0
-    acc = np.where(valid, 1.0 + ext_in, 0.0)
-    indeg = np.zeros((h, w), dtype=np.int32)
-    # internal receivers
-    d = dirs.astype(np.int32)
-    for n in range(8):
-        src = valid & (d == n + 1)
-        rr, cc = np.nonzero(src)
-        tr, tc = rr + DY[n], cc + DX[n]
-        inside = (tr >= 0) & (tr < h) & (tc >= 0) & (tc < w)
-        np.add.at(indeg, (tr[inside], tc[inside]), 1)
-    # topological sweep (python loop over tile cells)
-    stack = list(zip(*np.nonzero(valid & (indeg == 0))))
-    outflows = []
-    while stack:
-        r, c = stack.pop()
-        k = d[r, c]
-        if k > 0:
-            rn, cn = r + DY[k - 1], c + DX[k - 1]
-            if 0 <= rn < h and 0 <= cn < w:
-                acc[rn, cn] += acc[r, c]
-                indeg[rn, cn] -= 1
-                if indeg[rn, cn] == 0:
-                    stack.append((rn, cn))
-            else:
-                outflows.append((rn, cn, acc[r, c]))
-    return acc, outflows
+    valid = (dirs != nodata).ravel()
+    d = np.where(valid, dirs.ravel(), 0).astype(np.int64)
+    rr, cc = np.divmod(np.arange(h * w), w)
+    tr, tc = rr + np.array((0,) + DY)[d], cc + np.array((0,) + DX)[d]
+    inside = (tr >= 0) & (tr < h) & (tc >= 0) & (tc < w)
+    return valid, np.where(inside & (d > 0), tr * w + tc, -1), ~inside, tr, tc
 
 
-def d8_flow_accum(dem_tiles: DataFrame, meta: RasterMeta, tile: int = 256,
-                  max_rounds: int = 64) -> DataFrame:
-    """Distributed D8 accumulation: tile-local topo solve + inter-tile
-    inflow fixpoint. Exact (integer sums are order-independent).
+def _accumulate(nxt: np.ndarray, acc: np.ndarray) -> np.ndarray:
+    """Add every node's mass into everything downstream of it, over a
+    forest of receiver indices (-1 = root), one frontier of ready nodes
+    per step (Kahn). Integer-valued float64 sums are exact in any order."""
+    has = nxt >= 0
+    indeg = np.bincount(nxt[has], minlength=nxt.size)
+    front = np.flatnonzero(has & (indeg == 0))
+    while front.size:
+        np.add.at(acc, nxt[front], acc[front])
+        tgt, n = np.unique(nxt[front], return_counts=True)
+        indeg[tgt] -= n
+        front = tgt[has[tgt] & (indeg[tgt] == 0)]
+    return acc
 
-    Each round: cogroup(pointer tiles, inflows) -> applyInPandas ->
-    outflow records -> groupBy(dest cell).sum -> next inflows.
-    Converges when the inflow multiset stops changing (monotone,
-    bounded); the inflow table is tiny (boundary cells only).
+
+def _path_ends(nxt: np.ndarray) -> np.ndarray:
+    """Root of every node's path (pointer doubling)."""
+    end = np.where(nxt >= 0, nxt, np.arange(nxt.size))
+    while not np.array_equal(end[end], end):
+        end = end[end]
+    return end
+
+
+def d8_flow_accum(dem_tiles: DataFrame, meta: RasterMeta,
+                  tile: int = 256) -> DataFrame:
+    """Distributed D8 accumulation as a two-pass boundary-graph solve
+    (R. Barnes, Environ. Model. Softw. 2017), bit-identical to
+    `d8_accum_np` in a fixed number of Spark jobs.
+
+    Pointer tiles come from one halo-1 stencil, materialised once by
+    ``localCheckpoint``. Pass 1 accumulates each tile locally and emits,
+    for each exit cell, its local mass and the out-of-tile cell it lands
+    on (``src = -1``), and for each valid perimeter cell the landing
+    cell its in-tile path exits to. The driver collects these
+    O(n_tiles * 4 * tile) rows and solves the perimeter forest once:
+    ``I(L) = base(L) + sum(I(p) for p with next(p) = L)``. Pass 2 re-runs
+    each tile's sweep with the inflows ``I`` added at their cells.
     """
-    spark = dem_tiles.sparkSession
-    nodata = meta.nodata
+    cols, nodata = meta.cols, meta.nodata
+    n_tx = math.ceil(cols / tile)
     ptr_tiles = run_stencil(dem_tiles, meta, d8_pointer_kernel,
-                            halo=1, tile=tile).cache()
-    ptr_tiles.count()
+                            halo=1, tile=tile).localCheckpoint()
 
-    inflow_schema = "row int, col int, inflow double"
-    inflows = spark.createDataFrame([], inflow_schema)
+    def tiles(it):
+        for pdf in it:
+            for t in pdf.itertuples(index=False):
+                dirs = np.frombuffer(t.data, dtype=np.float64)
+                yield t.ty * n_tx + t.tx, t.ty * tile, t.tx * tile, t.w, \
+                    _tile_graph(dirs.reshape(t.h, t.w), nodata)
 
-    def make_rounder(emit_acc: bool):
-        def fn(key, ptr_pdf: pd.DataFrame, in_pdf: pd.DataFrame):
-            ty, tx = int(key[0]), int(key[1])
-            if ptr_pdf.empty:
-                return pd.DataFrame(
-                    columns=["row", "col", "v"]).astype(
-                        {"row": "int32", "col": "int32", "v": "float64"})
-            t = ptr_pdf.iloc[0]
-            h, w = int(t.h), int(t.w)
-            dirs = np.frombuffer(t.data, dtype=np.float64).reshape(h, w)
-            dirs = np.where(dirs == nodata, -1.0, dirs)
-            ext = np.zeros((h, w))
-            if not in_pdf.empty:
-                lr = in_pdf["row"].to_numpy() - ty * tile
-                lc = in_pdf["col"].to_numpy() - tx * tile
-                ext[lr, lc] = in_pdf["inflow"].to_numpy()
-            acc, outs = _tile_solve(dirs, ext, nodata)
-            if emit_acc:
-                rr, cc = np.nonzero(dirs >= 0)
-                return pd.DataFrame({
-                    "row": (rr + ty * tile).astype(np.int32),
-                    "col": (cc + tx * tile).astype(np.int32),
-                    "v": acc[rr, cc]})
-            if not outs:
-                return pd.DataFrame(
-                    columns=["row", "col", "v"]).astype(
-                        {"row": "int32", "col": "int32", "v": "float64"})
-            o = np.array(outs)
-            return pd.DataFrame({
-                "row": (o[:, 0] + ty * tile).astype(np.int32),
-                "col": (o[:, 1] + tx * tile).astype(np.int32),
-                "v": o[:, 2]})
-        return fn
+    def boundary(it):
+        for _, r0, c0, w, (valid, nxt, exits, tr, tc) in tiles(it):
+            acc = _accumulate(nxt, valid.astype(np.float64))
+            land = (tr + r0) * cols + tc + c0
+            rr, cc = np.divmod(np.arange(nxt.size), w)
+            perim = np.flatnonzero(valid & ((rr == 0) | (rr == rr[-1])
+                                            | (cc == 0) | (cc == w - 1)))
+            end = _path_ends(nxt)[perim]
+            perim, end = perim[exits[end]], end[exits[end]]
+            ex = np.flatnonzero(exits)
+            yield pd.DataFrame({
+                "src": np.r_[np.full(ex.size, -1), (rr + r0)[perim] * cols
+                             + (cc + c0)[perim]],
+                "dst": np.r_[land[ex], land[end]],
+                "mass": np.r_[acc[ex], np.zeros(perim.size)]})
 
-    out_schema = "row int, col int, v double"
-    prev_sig = (-1, -1.0)
-    for _ in range(max_rounds):
-        with_keys = inflows.withColumn(
-            "ty", (F.col("row") / tile).cast("int")).withColumn(
-            "tx", (F.col("col") / tile).cast("int"))
-        outflow = (ptr_tiles.groupBy("ty", "tx")
-                   .cogroup(with_keys.groupBy("ty", "tx"))
-                   .applyInPandas(make_rounder(False), schema=out_schema))
-        # localCheckpoint: truncate per-round lineage (see the W/D
-        # fixpoints — plan analysis cost otherwise grows with rounds)
-        new_inflows = (outflow.groupBy("row", "col")
-                       .agg(F.sum("v").alias("inflow"))).localCheckpoint()
-        sig_row = new_inflows.agg(
-            F.count("*"), F.coalesce(F.sum("inflow"), F.lit(0.0))).first()
-        sig = (sig_row[0], float(sig_row[1]))
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-        inflows = new_inflows
+    edges = ptr_tiles.mapInPandas(
+        boundary, schema="src long, dst long, mass double").toPandas()
+    src, dst = edges["src"].to_numpy(), edges["dst"].to_numpy()
+    lands = src < 0
+    nodes, inv = np.unique(dst[lands], return_inverse=True)
+    inflow = np.bincount(inv, weights=edges["mass"].to_numpy()[lands],
+                         minlength=nodes.size)
+    # every path row ends at an exit cell, so its dst is a node too
+    path = ~lands & np.isin(src, nodes)
+    nxt = np.full(nodes.size, -1)
+    nxt[np.searchsorted(nodes, src[path])] = np.searchsorted(nodes, dst[path])
+    inflow = _accumulate(nxt, inflow)
+    nr, nc = np.divmod(nodes, cols)
+    key = nr // tile * n_tx + nc // tile
+    resolved = {}
+    for k in np.unique(key):
+        m = key == k
+        resolved[int(k)] = (nr[m] % tile, nc[m] % tile, inflow[m])
 
-    with_keys = inflows.withColumn(
-        "ty", (F.col("row") / tile).cast("int")).withColumn(
-        "tx", (F.col("col") / tile).cast("int"))
-    acc = (ptr_tiles.groupBy("ty", "tx")
-           .cogroup(with_keys.groupBy("ty", "tx"))
-           .applyInPandas(make_rounder(True), schema=out_schema))
-    return acc.select("row", "col", F.col("v").alias("accum"))
+    def finish(it):
+        for k, r0, c0, w, (valid, nxt, _, _, _) in tiles(it):
+            acc = valid.astype(np.float64)
+            if k in resolved:
+                lr, lc, v = resolved[k]
+                acc[lr * w + lc] += v
+            idx = np.flatnonzero(valid)
+            yield pd.DataFrame({"row": (idx // w + r0).astype(np.int32),
+                                "col": (idx % w + c0).astype(np.int32),
+                                "accum": _accumulate(nxt, acc)[idx]})
+
+    return ptr_tiles.mapInPandas(
+        finish, schema="row int, col int, accum double")
 
 
 # ---------------------------------------------------------------------------
@@ -476,7 +473,8 @@ def _fd8_tile_solve(zpad: np.ndarray, ext_in: np.ndarray, nodata: float):
 def fd8_flow_accum(dem_tiles: DataFrame, meta: RasterMeta, tile: int = 256,
                    max_rounds: int = 64) -> DataFrame:
     """Distributed FD8: halo-1 padded DEM tiles + inter-tile inflow
-    fixpoint (same shape as d8_flow_accum; contributions are additive)."""
+    fixpoint, one cogrouped applyInPandas and one localCheckpoint per
+    round (contributions are additive)."""
     from go_spatial_spark.grid import padded_tiles
     spark = dem_tiles.sparkSession
     nodata = meta.nodata
@@ -484,7 +482,7 @@ def fd8_flow_accum(dem_tiles: DataFrame, meta: RasterMeta, tile: int = 256,
     ptiles.count()
 
     def make_rounder(emit_acc: bool):
-        def fn(key, tile_pdf: pd.DataFrame, in_pdf: pd.DataFrame):
+        def fn(key, tile_pdf, in_pdf):
             ty, tx = int(key[0]), int(key[1])
             empty = pd.DataFrame(
                 {"row": pd.Series(dtype="int32"),
@@ -1232,7 +1230,7 @@ def _spill_w_tiles(dem_cached: DataFrame, meta: RasterMeta,
                     "ty", "tx", "src_dty", "src_dtx", "h", "w", "data"])
 
     def make_flood(emit_long: bool):
-        def fn(key, dem_pdf: pd.DataFrame, strips_pdf: pd.DataFrame):
+        def fn(key, dem_pdf, strips_pdf):
             ty, tx = int(key[0]), int(key[1])
             if dem_pdf.empty:
                 if emit_long:

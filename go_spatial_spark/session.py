@@ -12,6 +12,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_mem(phys_bytes: int | None = None) -> str:
+    """Driver heap for this host: half of physical memory, capped at
+    48g. Falls back to 4g where the page counts are not available."""
+    if phys_bytes is None:
+        try:
+            phys_bytes = (os.sysconf("SC_PAGE_SIZE")
+                          * os.sysconf("SC_PHYS_PAGES"))
+        except (AttributeError, ValueError, OSError):
+            return "4g"
+    return f"{min(phys_bytes // 2 >> 20, 48 << 10)}m"
+
+
 def get_spark(app: str = "go_spatial_spark", cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession.
@@ -24,6 +36,8 @@ def get_spark(app: str = "go_spatial_spark", cpus: int | None = None,
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cpus, 8)
+    driver_mem = (os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                  or default_driver_mem())
     # $SPARK_GRAFT_MASTER overrides the master verbatim — used by the
     # scaling bench to run the SAME job under multi-process executors
     # (local-cluster[n,c,mem]): each executor is a separate JVM with its
@@ -39,7 +53,7 @@ def get_spark(app: str = "go_spatial_spark", cpus: int | None = None,
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
@@ -94,10 +108,9 @@ def get_spark(app: str = "go_spatial_spark", cpus: int | None = None,
         # 7s steady-state at 16384^2 in this VM) — exactly the noise a
         # cluster executor with -Xms=-Xmx never sees. Costs ~1s/GB at
         # session start, excluded from every timed region.
-        mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
         builder = builder.config(
             "spark.driver.extraJavaOptions",
-            f"-Xms{mem} -XX:+AlwaysPreTouch")
+            f"-Xms{driver_mem} -XX:+AlwaysPreTouch")
     # $SPARK_GRAFT_EXTRA_CONF: semicolon-separated k=v pairs, applied
     # LAST so a probe can override any named config above — the whole
     # point of the hook is benchmark A/B experiments without code

@@ -2,10 +2,11 @@
 Go algorithms (fillDepressions.go, d8FlowAccumulation.go)."""
 
 import numpy as np
+import pytest
 
 from go_spatial_spark.grid import (
-    NODATA, RasterMeta, long_to_tiles, run_stencil, synthetic_dem,
-    synthetic_dem_numpy, tiles_to_long,
+    NODATA, TILE_SCHEMA, RasterMeta, long_to_tiles, run_stencil,
+    synthetic_dem, synthetic_dem_numpy, tiles_to_long,
 )
 from go_spatial_spark.operators import hydrology as H
 
@@ -55,10 +56,83 @@ def test_d8_flow_accum_distributed(spark):
     tiles = long_to_tiles(synthetic_dem(spark, ROWS, COLS), META, tile=TILE)
     got = _collect(H.d8_flow_accum(tiles, META, tile=TILE), "accum")
     assert np.array_equal(got, want)
-    # mass conservation: every valid cell contributes exactly 1
+    # mass conservation: every valid cell drains to exactly one
+    # terminal cell, so terminal accumulations sum to the valid count
     valid = dem_np != NODATA
     sinks = (H.d8_pointer_np(dem_np, META) == 0)
-    assert want[sinks].sum() >= valid.sum() * 0  # structural sanity
+    assert got[sinks].sum() == valid.sum()
+
+
+def _np_tiles(spark, dem, tile, keep_empty=True):
+    """Tile form of a dense DEM; ``keep_empty=False`` leaves out tiles
+    that hold only NoData, as a long-form source would."""
+    recs = []
+    for ty in range(-(-dem.shape[0] // tile)):
+        for tx in range(-(-dem.shape[1] // tile)):
+            a = np.ascontiguousarray(
+                dem[ty * tile:(ty + 1) * tile, tx * tile:(tx + 1) * tile])
+            if keep_empty or (a != NODATA).any():
+                recs.append((ty, tx, a.shape[0], a.shape[1], a.tobytes()))
+    return spark.createDataFrame(recs, TILE_SCHEMA)
+
+
+def _serpentine(rows, cols):
+    """Channel rows joined at alternating ends by one cell, NoData
+    between: one flow path snakes through every valid cell."""
+    dem = np.full((rows, cols), NODATA)
+    z = float(rows * cols)
+    for i, r in enumerate(range(0, rows, 2)):
+        cs = range(cols) if i % 2 == 0 else range(cols - 1, -1, -1)
+        for c in cs:
+            dem[r, c] = z
+            z -= 1.0
+        if r + 1 < rows:
+            dem[r + 1, c] = z
+            z -= 1.0
+    return dem
+
+
+def _nodata_tile_dem():
+    dem = synthetic_dem_numpy(40, 37)
+    dem[16:32, 16:32] = NODATA  # tile (1, 1) at tile 16
+    return dem
+
+
+def _tilted(rows, cols, seed=7):
+    r = np.arange(rows, dtype=np.float64)[:, None]
+    c = np.arange(cols, dtype=np.float64)[None, :]
+    noise = np.random.default_rng(seed).integers(0, 8, (rows, cols)) / 64.0
+    return 2.0 * (rows + cols) - r - 0.5 * c + noise
+
+
+D8_EDGE_CASES = {
+    "ragged_33x65_t16": (lambda: synthetic_dem_numpy(33, 65), 16, True),
+    "tile1": (lambda: synthetic_dem_numpy(11, 13), 1, True),
+    "tile2": (lambda: synthetic_dem_numpy(17, 15), 2, True),
+    "tile_ge_raster": (lambda: synthetic_dem_numpy(20, 23), 32, True),
+    "nodata_tile_present": (_nodata_tile_dem, 16, True),
+    "nodata_tile_absent": (_nodata_tile_dem, 16, False),
+    "tilted_64x40_t4": (lambda: _tilted(64, 40), 4, True),
+    "serpentine_15x24_t4": (lambda: _serpentine(15, 24), 4, True),
+}
+
+
+@pytest.mark.parametrize("case", sorted(D8_EDGE_CASES))
+def test_d8_flow_accum_edge_shapes(spark, case):
+    make, tile, keep_empty = D8_EDGE_CASES[case]
+    dem = make()
+    rows, cols = dem.shape
+    meta = RasterMeta(rows=rows, cols=cols)
+    want = H.d8_accum_np(dem, meta)
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    cached = field.get(cm).size()
+    acc = H.d8_flow_accum(_np_tiles(spark, dem, tile, keep_empty), meta,
+                          tile=tile)
+    got = _collect(acc, "accum", rows, cols)
+    assert np.array_equal(got, want)
+    assert field.get(cm).size() <= cached
 
 
 def test_fd8_flow_accum_distributed(spark):
