@@ -3,10 +3,12 @@
 A from-scratch, Spark-first re-expression of the query/data-processing
 capabilities of the GoSpatial reference (jblindsay/go-spatial): a dense
 raster grid model re-cast as tile-partitioned DataFrames, focal/window
-operators as halo-exchange `mapInPandas` kernels, hydrology as
-iterative-fixpoint drivers, plus the web-scale layer: H3-style cell
-indexing, point-in-polygon and kNN spatial joins, dedup / text-quality /
-similarity-search operators over Common-Crawl-style document tables.
+operators as halo-exchange `mapInPandas` kernels, hydrology as tiled
+drivers (D8 accumulation as a boundary-graph solve; FD8, fill and breach
+as inter-tile fixpoints), raster/LiDAR readers and writers, plus the
+point-in-polygon and kNN spatial joins behind the geocoded-pages
+pipeline (H3-style cell indexing), and dedup / text-quality / corpus
+operators over Common-Crawl-style document tables.
 
 Design rules (see SURVEY.md):
 - DataFrame/SQL first; Catalyst does pushdown/pruning/broadcast.

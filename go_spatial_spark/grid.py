@@ -294,9 +294,10 @@ def tiles_to_long(tiles: DataFrame, meta: RasterMeta, tile: int = 256,
 # byte range — so strip extraction becomes a Catalyst `substring` over
 # the cached/bucketed tiles, entirely JVM-side, and the tile payload
 # crosses the Arrow boundary exactly once per stencil (into the
-# cogroup kernel). Cost: 2*halo_max*(h+w)*8 bytes per tile (~1.5% of
-# payload at halo_max=16, tile 512) — at 100 TB that is the storage
-# trade that removes a full 100 TB Arrow pass per operator invocation.
+# cogroup kernel). Cost: 2*halo_max*(h+w)*8 bytes per tile (256 KiB,
+# 12.5% of the 2 MiB payload at halo_max=16, tile 512) — at 100 TB that
+# is the storage trade that removes a full 100 TB Arrow pass per
+# operator invocation.
 #
 # Layout (halo_max = hm; hr = min(hm, h), hc = min(hm, w)):
 #   [0)                     top    : rows 0..hr, all cols    (hr x w)
@@ -306,8 +307,9 @@ def tiles_to_long(tiles: DataFrame, meta: RasterMeta, tile: int = 256,
 # Transposition makes column aprons contiguous per-column; receivers
 # transpose back (flag t=1). Row strips ship full-width to all three
 # vertical neighbors (diagonals crop receiver-side, flag t=2) — strip
-# traffic stays O(perimeter * halo) with a ~3x constant, still ~0.1%
-# of payload volume per tile at halo=1.
+# traffic stays O(perimeter * halo) with a ~3x constant: at halo=1 one
+# 512^2 tile sends 6 row strips + 2 column strips of 512 cells, 32 KiB
+# or ~1.6% of its payload.
 
 EDGE_HALO_DEFAULT = 16
 

@@ -178,15 +178,15 @@ def simhash_oracle_sql(docs_tbl: str = "documents", bits: int = 60) -> str:
     """
 
 
-# Bounded cache lifecycle (same contract as similarity._ivf_assign):
-# at most ONE call's persisted intermediate (the gram-partitioned g2
-# frame) lives at a time. g2 is the multi-TB exploded gram table at
-# production scale — without eviction a long session issuing many
-# ngram queries pins every call's copy in MEMORY_AND_DISK forever.
-# Eviction also keeps plan-cache substitution deterministic: stale
-# entries from a prior call otherwise get substituted into SOME
-# branches of the next call's plan (Spark's cache lookup is
-# plan-structural), splitting the shared gram exchange into several.
+# Bounded cache lifecycle: at most ONE call's persisted intermediate
+# (the gram-partitioned g2 frame) lives at a time. g2 is the multi-TB
+# exploded gram table at production scale — without eviction a long
+# session issuing many ngram queries pins every call's copy in
+# MEMORY_AND_DISK forever. Eviction also keeps plan-cache substitution
+# deterministic: stale entries from a prior call otherwise get
+# substituted into SOME branches of the next call's plan (Spark's
+# cache lookup is plan-structural), splitting the shared gram exchange
+# into several.
 _ngram_persisted: list[DataFrame] = []
 
 
@@ -238,10 +238,9 @@ def ngram_jaccard_top1(docs: DataFrame, n_gram: int = NGRAM,
           .repartition("gram")
           .persist(StorageLevel.MEMORY_AND_DISK))
     _ngram_persisted.append(g2)
-    # Eager materialization BARRIER (same rationale as
-    # similarity._ann_index): (1) the self-join's two sides otherwise
-    # race to populate the cache from concurrent map stages, each
-    # recomputing uncached blocks; (2) until the cached
+    # Eager materialization BARRIER: (1) the self-join's two sides
+    # otherwise race to populate the cache from concurrent map stages,
+    # each recomputing uncached blocks; (2) until the cached
     # AdaptiveSparkPlan is finalized its output partitioning reads as
     # unknown, so the join planner inserts TWO ENSURE_REQUIREMENTS
     # gram exchanges that re-shuffle the whole gram table — with the

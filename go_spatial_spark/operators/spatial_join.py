@@ -150,9 +150,10 @@ def pip_oracle_sql(points_sql: str, id_col: str = "doc_id") -> str:
 # kNN via cell-ring expansion
 # ---------------------------------------------------------------------------
 
-# Bounded cache lifecycle (same contract as dedup._ngram_persisted):
-# at most one knn_self call's per-stage resolved top-k frames (<= k
-# rows per resolved query each) are persisted at a time.
+# Bounded cache lifecycle: at most one knn_self call's per-stage
+# resolved top-k frames (<= k rows per resolved query each) are
+# persisted at a time; the next call (or release_knn_caches) unpersists
+# them.
 _knn_persisted: list[DataFrame] = []
 
 

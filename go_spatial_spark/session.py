@@ -24,6 +24,10 @@ def default_driver_mem(phys_bytes: int | None = None) -> str:
     return f"{min(phys_bytes // 2 >> 20, 48 << 10)}m"
 
 
+# python-worker daemon that forked workers inherit (see daemon.py)
+DAEMON_MODULE = "go_spatial_spark.daemon"
+
+
 def get_spark(app: str = "go_spatial_spark", cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession.
@@ -38,16 +42,8 @@ def get_spark(app: str = "go_spatial_spark", cpus: int | None = None,
         shuffle_partitions = max(2 * cpus, 8)
     driver_mem = (os.environ.get("SPARK_GRAFT_DRIVER_MEM")
                   or default_driver_mem())
-    # $SPARK_GRAFT_MASTER overrides the master verbatim — used by the
-    # scaling bench to run the SAME job under multi-process executors
-    # (local-cluster[n,c,mem]): each executor is a separate JVM with its
-    # own committed heap, GC, and Python-worker pool, which is what an
-    # N -> 4N cluster scale-out actually adds. cpus should then be the
-    # TOTAL core count (n*c) so shuffle partitioning is sized the same.
-    master = os.environ.get("SPARK_GRAFT_MASTER") or f"local[{cpus}]"
-    builder = SparkSession.builder.master(master)
     builder = (
-        builder
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
@@ -67,56 +63,15 @@ def get_spark(app: str = "go_spatial_spark", cpus: int | None = None,
         # per-worker import cost that made reuse=false expensive
         # (measured: 1024^2 stencil 2.1s -> 1.2s, Arrow cosine stage
         # 4s -> 1.3s at local[32], stable across trials)
-        .config("spark.python.daemon.module",
-                os.environ.get("SPARK_GRAFT_DAEMON",
-                               "go_spatial_spark.daemon"))
+        .config("spark.python.daemon.module", DAEMON_MODULE)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.host", "127.0.0.1")
     )
-    if master.startswith("local-cluster"):
-        # Executors are forked JVMs: they need the repo on PYTHONPATH
-        # (for the python-worker daemon module) and the same committed
-        # heap a cluster executor gets. Memory comes from the master
-        # string's per-executor MB figure.
-        repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        exec_mem_mb = master.rstrip("]").split(",")[-1].strip()
-        builder = (
-            builder
-            .config("spark.executor.memory", f"{exec_mem_mb}m")
-            .config("spark.executorEnv.PYTHONPATH", repo_root)
-            .config("spark.executorEnv.OMP_NUM_THREADS", "1")
-            .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
-            # The reuse=false workaround below targets the SINGLE-JVM
-            # local[32] worker-pool stall; a 2-core executor's pool of
-            # 2 reused workers can't stall, and reuse saves a measured
-            # ~0.7 s/stage of fork+handshake at 32 Python tasks — the
-            # cluster default a real executor runs with.
-            # SPARK_GRAFT_WORKER_REUSE overrides for A/B probes of the
-            # intermittent reused-worker handoff stall (see PLANS.md
-            # round-3 scaling notes).
-            .config("spark.python.worker.reuse",
-                    os.environ.get("SPARK_GRAFT_WORKER_REUSE", "true"))
-        )
-        if os.environ.get("SPARK_GRAFT_PRETOUCH"):
-            builder = builder.config(
-                "spark.executor.extraJavaOptions",
-                f"-Xms{exec_mem_mb}m -XX:+AlwaysPreTouch")
-    if os.environ.get("SPARK_GRAFT_PRETOUCH"):
-        # Benchmark mode: commit + zero the whole heap up front. The
-        # JVM's lazy heap growth otherwise charges page-commit faults to
-        # the first few *queries* (measured: first stencil run 28-48s vs
-        # 7s steady-state at 16384^2 in this VM) — exactly the noise a
-        # cluster executor with -Xms=-Xmx never sees. Costs ~1s/GB at
-        # session start, excluded from every timed region.
-        builder = builder.config(
-            "spark.driver.extraJavaOptions",
-            f"-Xms{driver_mem} -XX:+AlwaysPreTouch")
     # $SPARK_GRAFT_EXTRA_CONF: semicolon-separated k=v pairs, applied
     # LAST so a probe can override any named config above — the whole
     # point of the hook is benchmark A/B experiments without code
-    # edits (it was originally applied first, which silently no-op'd
-    # any probe of a config this function also sets, e.g. the AQE
-    # coalescing A/B in the round-5 ANN profile).
+    # edits (applied first, it would silently no-op any probe of a
+    # config this function also sets).
     for kv in os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";"):
         if "=" in kv:
             k, v = kv.split("=", 1)
@@ -187,8 +142,8 @@ def ensure_parallelism(df, min_parts: int | None = None):
     """Spread a DataFrame across the cluster if its scan produced too
     few partitions (small local files read as one split; at production
     scale the scan itself yields thousands). Cheap no-op when already
-    parallel — this guards the fan-out operators (explode-heavy dedup /
-    hashing) whose map-side work would otherwise serialize.
+    parallel — this guards explode-heavy fan-out operators whose
+    map-side work would otherwise serialize.
 
     The partition count comes from driver-side file stats
     (inputFiles + size/maxPartitionBytes) ONLY when the analyzed plan

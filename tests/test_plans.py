@@ -18,12 +18,6 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _formatted(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted") \
-        if False else df._jdf.queryExecution().toString()
-
-
 def test_filter_pushdown_to_parquet(spark, sf01):
     docs = spark.read.parquet(f"{sf01}/documents.parquet")
     q = docs.where(F.col("lang") == "en").select("doc_id", "lang")
@@ -63,7 +57,7 @@ def test_no_row_python_udfs_and_no_unbounded_single_partition(spark, sf01):
     failure mode)."""
     for name, fn in E.queries().items():
         if name in ("fill_depressions_tiled", "d8_flow_accum",
-                    "fd8_flow_accum", "breach_tiled", "hydro_invariants"):
+                    "breach_tiled", "hydro_invariants"):
             continue  # iterative drivers materialize eagerly (checked once)
         df = fn(spark, sf01)
         plan = _plan(df)
@@ -193,48 +187,6 @@ def test_ngram_pipeline_shares_gram_exchange(spark, sf001):
         assert "InMemoryTableScan" in plan
     finally:
         spark.catalog.clearCache()
-
-
-def test_cosine_topk_single_corpus_arrow_pass(spark, sf001):
-    """The fused ANN index (similarity._ann_index) must be the ONLY
-    mapInPandas over the corpus in cosine_topk's plan: one distinct
-    MapInPandas function instance (inside the cached index, its plan
-    text repeated under every InMemoryTableScan), with the consumers
-    (cogroup probes / buckets, both self-join sides) reading the cache
-    JVM-side. A second distinct instance means a consumer re-runs a
-    full-corpus Arrow transfer — the regression this test locks out.
-
-    The MapInPandas node prints no plan_id; its identity is the result
-    attribute id of the UDF call (``build(...)#4``) — identical across
-    cache re-displays, distinct per re-execution."""
-    import re
-
-    from go_spatial_spark.operators import similarity
-
-    emb = spark.read.parquet(f"{sf001}/embeddings.parquet")
-    try:
-        df = similarity.cosine_topk(emb)
-        plan = _plan(df)
-        ids = {m.group(1) for m in re.finditer(
-            r"MapInPandas \w+\([^)]*\)(#\d+)", plan)}
-        assert len(ids) == 1, plan
-        assert "InMemoryTableScan" in plan
-        # candidate scoring stays Arrow-vectorized, never row-Python
-        assert "BatchEvalPython" not in plan
-        # round-4 merge fusion: the candidate merge is ONE qid
-        # exchange serving both the cross-leg dedup agg and the top-k
-        # window — the old union.distinct() shape re-shuffled the full
-        # candidate set on (qid, nid, cos) first, and the IVF leg
-        # carried its own redundant distinct. Lock the shape: at most
-        # 3 hash exchanges total (2x cid cogroup + 1x qid merge; the
-        # LSH self-join broadcasts at test size), exactly 1 on qid.
-        ex = {m.group(2): m.group(1) for m in re.finditer(
-            r"Exchange hashpartitioning\((\w+)[^\n]*plan_id=(\d+)", plan)}
-        qid_ex = [k for k, v in ex.items() if v.startswith("qid")]
-        assert len(qid_ex) == 1, ex
-        assert len(ex) <= 3, ex
-    finally:
-        similarity.release_ann_caches()
 
 
 def test_pack_shards_is_distributed_prefix_sum(spark, sf001):
