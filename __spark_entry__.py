@@ -3,8 +3,8 @@
 ``entry(spark)`` smoke-runs the flagship point-in-polygon join on
 sf0.001. ``queries()`` exposes every implemented operator from
 SURVEY.md §2 as (spark, sf_dir) -> DataFrame; ``oracle_sql()`` gives
-the DuckDB-equivalent SQL (tables region nation customer supplier part
-orders lineitem events documents are pre-registered views).
+the DuckDB-equivalent SQL over the pre-registered views nation customer
+orders lineitem documents.
 
 Column names are aligned between each query and its oracle; float
 outputs are either exact-by-construction (integer-derived arithmetic,
@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, Window
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from go_spatial_spark.grid import (
     RasterMeta, long_to_tiles, run_stencil, synthetic_dem,
@@ -205,31 +205,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         _docs(spark, sf))
     q["host_quality_filter"] = lambda spark, sf: \
         webcurate.host_quality_filter(_docs(spark, sf))
-
-    # --- events (windowed aggregation / sessionization) -------------------
-    def events_hourly(spark, sf):
-        ev = spark.read.parquet(f"{sf}/events.parquet")
-        return (ev.withColumn("hour", F.expr(
-            "CAST(CAST(ts AS TIMESTAMP) AS LONG) DIV 3600"))
-                .groupBy("hour", "event_type")
-                .agg(F.count("*").alias("n"),
-                     F.round(F.sum("value"), 4).alias("sum_value")))
-    q["events_hourly"] = events_hourly
-
-    def events_sessions(spark, sf):
-        ev = spark.read.parquet(f"{sf}/events.parquet").withColumn(
-            "secs", F.expr("CAST(CAST(ts AS TIMESTAMP) AS LONG)"))
-        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        gap = F.col("secs") - F.lag("secs").over(w)
-        new_s = F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
-        sid = F.sum(new_s).over(
-            w.rowsBetween(Window.unboundedPreceding, 0))
-        return (ev.withColumn("sid", sid)
-                .groupBy("user_id", "sid")
-                .agg(F.count("*").alias("n_events"),
-                     F.min("secs").alias("start_s"),
-                     F.max("secs").alias("end_s")))
-    q["events_sessions"] = events_sessions
 
     # --- relational glue (TPC-H-style) -------------------------------------
     def tpch_q1(spark, sf):
@@ -464,18 +439,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["quality_score"] = lambda spark, sf: textstats.quality_score(
         _docs(spark, sf))
 
-    # --- corpus-level analytics (TF-IDF / decontamination / repetition) ---
-    from go_spatial_spark.operators import corpus
-    q["tfidf_topk"] = lambda spark, sf: corpus.tfidf_topk(_docs(spark, sf))
-    q["decontaminate"] = lambda spark, sf: corpus.decontaminate(
-        _docs(spark, sf))
-    q["repetition_stats"] = lambda spark, sf: corpus.repetition_stats(
-        _docs(spark, sf))
-    q["pack_shards"] = lambda spark, sf: corpus.pack_shards(
-        _docs(spark, sf), tokens_per_shard=10_000)
-    q["train_val_test_split"] = lambda spark, sf: \
-        corpus.train_val_test_split(_docs(spark, sf))
-
     assert len(q) <= 50, f"driver window is 50 rows; got {len(q)}"
     return q
 
@@ -571,43 +534,10 @@ def oracle_sql() -> dict[str, str]:
     o["ngram_jaccard_top1"] = dedup.ngram_jaccard_top1_oracle_sql()
     o["text_metrics"] = textstats.text_metrics_oracle_sql()
     o["quality_score"] = textstats.quality_score_oracle_sql()
-    from go_spatial_spark.operators import corpus
-    o["tfidf_topk"] = corpus.tfidf_topk_oracle_sql()
-    o["decontaminate"] = corpus.decontaminate_oracle_sql()
-    o["repetition_stats"] = corpus.repetition_stats_oracle_sql()
-    o["pack_shards"] = corpus.pack_shards_oracle_sql(
-        tokens_per_shard=10_000)
-    o["train_val_test_split"] = corpus.train_val_test_split_oracle_sql()
     from go_spatial_spark.operators import webcurate
     o["host_stats"] = webcurate.host_stats_oracle_sql()
     o["quota_sample"] = webcurate.quota_sample_oracle_sql()
     o["host_quality_filter"] = webcurate.host_quality_filter_oracle_sql()
-
-    o["events_hourly"] = """
-        SELECT CAST(floor(epoch(ts)) AS BIGINT) // 3600 AS hour, event_type,
-               count(*) AS n, round(sum(value), 4) AS sum_value
-        FROM events GROUP BY 1, 2"""
-    o["events_sessions"] = """
-        WITH e AS (
-          SELECT user_id, event_id, ts,
-                 CAST(floor(epoch(ts)) AS BIGINT) AS secs
-          FROM events),
-        gaps AS (
-          SELECT *, secs - lag(secs) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id) AS gap
-          FROM e),
-        marked AS (
-          SELECT *, CASE WHEN gap IS NULL OR gap > 1800 THEN 1 ELSE 0 END
-                    AS new_s
-          FROM gaps),
-        sids AS (
-          SELECT *, CAST(SUM(new_s) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sid
-          FROM marked)
-        SELECT user_id, sid, count(*) AS n_events,
-               min(secs) AS start_s, max(secs) AS end_s
-        FROM sids GROUP BY user_id, sid"""
 
     o["tpch_q1"] = """
         SELECT l_returnflag, l_linestatus,

@@ -15,15 +15,14 @@ This replaces the reference's latent k-d tree
 (/root/reference/structures/kdtree.go:14-105 — unused by any tool) as
 the point-index primitive.
 
-Everything here exists in three synchronized forms: NumPy (tile
-kernels), PySpark Column expressions (JVM-side, codegen'd), and SQL
-text in both Spark and DuckDB dialects (for oracles). The arithmetic is
-integer-only -> bit-identical everywhere.
+Everything here exists in two synchronized forms: PySpark Column
+expressions (JVM-side, codegen'd) and SQL text in both Spark and DuckDB
+dialects (for oracles). The arithmetic is integer-only -> bit-identical
+everywhere.
 """
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import Column, functions as F
 
 # 16-bit Morton spread masks (classic magic numbers)
@@ -33,34 +32,6 @@ _MASKS = (
     (2, 0x3333333333333333),
     (1, 0x5555555555555555),
 )
-
-
-# --- NumPy ---------------------------------------------------------------
-
-def spread_bits_np(v: np.ndarray) -> np.ndarray:
-    v = v.astype(np.int64) & 0xFFFF
-    for s, m in _MASKS:
-        v = (v | (v << s)) & m
-    return v
-
-
-def cell_id_np(x: np.ndarray, y: np.ndarray) -> np.ndarray:
-    """Morton interleave; y gets the odd (higher) bits."""
-    return (spread_bits_np(y) << 1) | spread_bits_np(x)
-
-
-def lonlat_to_xy_np(lon: np.ndarray, lat: np.ndarray, res: int):
-    n = float(1 << res)
-    x = np.floor((lon + 180.0) / 360.0 * n).astype(np.int64)
-    y = np.floor((lat + 90.0) / 180.0 * n).astype(np.int64)
-    np.clip(x, 0, (1 << res) - 1, out=x)
-    np.clip(y, 0, (1 << res) - 1, out=y)
-    return x, y
-
-
-def cell_of_lonlat_np(lon: np.ndarray, lat: np.ndarray, res: int) -> np.ndarray:
-    x, y = lonlat_to_xy_np(lon, lat, res)
-    return cell_id_np(x, y)
 
 
 # --- PySpark Columns -----------------------------------------------------
@@ -85,10 +56,6 @@ def xy_cols(lon: Column, lat: Column, res: int) -> tuple[Column, Column]:
 def cell_col(lon: Column, lat: Column, res: int) -> Column:
     x, y = xy_cols(lon, lat, res)
     return F.shiftleft(spread_bits_col(y), 1).bitwiseOR(spread_bits_col(x))
-
-
-def parent_cell_col(cell: Column, levels: int) -> Column:
-    return F.shiftright(cell, 2 * levels)
 
 
 # --- SQL text (dual dialect) --------------------------------------------

@@ -228,8 +228,6 @@ def long_to_tiles(df: DataFrame, meta: RasterMeta, tile: int = 256,
     sidecar in the same pack pass (see `edge_sidecar_bytes`).
     """
     rows, cols, nodata = meta.rows, meta.cols, meta.nodata
-    n_ty = math.ceil(rows / tile)
-    n_tx = math.ceil(cols / tile)
 
     def pack(key, pdf):
         ty, tx = int(key[0]), int(key[1])
@@ -256,7 +254,6 @@ def long_to_tiles(df: DataFrame, meta: RasterMeta, tile: int = 256,
         out = out.withMetadata("edges", {"halo_max": int(with_edges)})
     # NoData-only tiles produce no long rows → absent tiles are fine:
     # downstream treats absent neighbors as all-NoData.
-    _ = (n_ty, n_tx)
     return out
 
 

@@ -40,11 +40,12 @@ from go_spatial_spark.grid import NODATA, RasterMeta
 # helpers
 # ---------------------------------------------------------------------------
 
-def _long_form(spark: SparkSession, arr: np.ndarray, nodata: float,
-               src_path: str | None = None) -> DataFrame:
+def _long_form(spark: SparkSession, arr: np.ndarray,
+               nodata: float) -> DataFrame:
     """Distribute a decoded array as long form. The decode itself runs
     where the bytes are; this helper is used by driver-side decoders
-    (small fixture files). Large rasters go through _binary_decode."""
+    (small fixture files). Large rasters go through
+    _read_binary_distributed."""
     rows, cols = arr.shape
     mask = arr != nodata
     rr, cc = np.nonzero(mask)
@@ -187,9 +188,7 @@ def read_arcgis_ascii(spark: SparkSession, path: str):
     meta = RasterMeta(rows=rows, cols=cols, north=south + rows * cell,
                       south=south, east=west + cols * cell, west=west,
                       nodata=nodata)
-    vals = np.fromstring(" ".join(lines[data_start:]), sep=" ") \
-        if False else np.array(" ".join(lines[data_start:]).split(),
-                               dtype=np.float64)
+    vals = np.array(" ".join(lines[data_start:]).split(), dtype=np.float64)
     arr = vals.reshape(rows, cols)
     return meta, _long_form(spark, arr, nodata)
 
@@ -399,30 +398,11 @@ def _decode_tag_value(bo: str, typ: int, cnt: int, raw: bytes):
     return list(struct.unpack(bo + fmt * cnt, raw))
 
 
-def _parse_tiff_ifd(buf: bytes):
-    """Parse the first IFD -> (byte_order, {tag: decoded_value})."""
-    bo = "<" if buf[:2] == b"II" else ">"
-    magic, off = struct.unpack(bo + "HI", buf[2:8])
-    assert magic == 42, "classic TIFF only"
-    n = struct.unpack(bo + "H", buf[off:off + 2])[0]
-    tags = {}
-    for i in range(n):
-        e = buf[off + 2 + 12 * i: off + 14 + 12 * i]
-        tag, typ, cnt = struct.unpack(bo + "HHI", e[:8])
-        size = _TIFF_SIZES.get(typ, 1) * cnt
-        if size <= 4:
-            raw = e[8:8 + size]
-        else:
-            ptr = struct.unpack(bo + "I", e[8:12])[0]
-            raw = buf[ptr:ptr + size]
-        tags[tag] = _decode_tag_value(bo, typ, cnt, raw)
-    return bo, tags
-
-
 def _parse_tiff_ifd_seek(path: str):
-    """Header-only IFD parse with range reads (seek + read of the
-    entry table and out-of-line values) — never loads the payload, so
-    the driver's work is O(header) however large the file is."""
+    """Parse the first IFD -> (byte_order, {tag: decoded_value}).
+    Header-only, with range reads (seek + read of the entry table and
+    out-of-line values) — never loads the payload, so the driver's work
+    is O(header) however large the file is."""
     with open(path, "rb") as f:
         head = f.read(8)
         bo = "<" if head[:2] == b"II" else ">"
@@ -449,9 +429,7 @@ def _parse_tiff_ifd_seek(path: str):
 def geotiff_tags(spark: SparkSession, path: str) -> DataFrame:
     """PrintGeoTiffTags equivalent (tools/printGeoTiffTags.go:95-114):
     the parsed first-IFD tag table as a small DataFrame."""
-    with open(path, "rb") as f:
-        buf = f.read()
-    _, tags = _parse_tiff_ifd(buf)
+    _, tags = _parse_tiff_ifd_seek(path)
     rows = [(int(t), str(v)[:200]) for t, v in sorted(tags.items())]
     return spark.createDataFrame(rows, "tag int, value string")
 
@@ -573,17 +551,17 @@ def read_geotiff(spark: SparkSession, path: str):
 
     Whole-file driver decode (fixture path); the production scan is
     read_geotiff_distributed (block-parallel)."""
-    with open(path, "rb") as f:
-        buf = f.read()
-    bo, tags = _parse_tiff_ifd(buf)
+    bo, tags = _parse_tiff_ifd_seek(path)
     width, height = tags[256][0], tags[257][0]
     decode_block, nodata = _tiff_decoder(bo, tags)
     arr = np.zeros((height, width), dtype=np.float64)
-    for y0, x0, hh, ww, o, c in _tiff_blocks(tags):
-        data = decode_block(buf[o:o + c], hh, ww)
-        h2 = min(hh, height - y0)
-        w2 = min(ww, width - x0)
-        arr[y0:y0 + h2, x0:x0 + w2] = data[:h2, :w2]
+    with open(path, "rb") as f:
+        for y0, x0, hh, ww, o, c in _tiff_blocks(tags):
+            f.seek(o)
+            data = decode_block(f.read(c), hh, ww)
+            h2 = min(hh, height - y0)
+            w2 = min(ww, width - x0)
+            arr[y0:y0 + h2, x0:x0 + w2] = data[:h2, :w2]
     return _tiff_meta(tags, nodata), _long_form(spark, arr, nodata)
 
 

@@ -36,8 +36,8 @@ def test_pip_broadcasts_polygons(spark, sf01):
 
 
 # Queries whose executed plan may contain an Exchange SinglePartition,
-# each bounded BY CONSTRUCTION (never corpus-sized — the property the
-# round-3 verdict audited and pack_shards violated):
+# each bounded BY CONSTRUCTION (never corpus-sized — an unbounded one
+# funnels the whole input through one task):
 # - hillshade_trim: cumulative sums over the groupBy(bin) histogram —
 #   <= 256 rows reach the unpartitioned window, whatever the raster
 #   size (the map-side partial agg collapses the corpus first).
@@ -53,8 +53,8 @@ def test_no_row_python_udfs_and_no_unbounded_single_partition(spark, sf01):
     ArrowEvalPython and the pandas map/cogroup operators are the
     allowed Python surfaces; (2) no Exchange SinglePartition outside
     the documented bounded whitelist above — an unlisted one funnels
-    corpus-sized data through one task at 100 TB (the pack_shards
-    failure mode)."""
+    corpus-sized data through one task at 100 TB (for example a global
+    running-sum window with no partitioning)."""
     for name, fn in E.queries().items():
         if name in ("fill_depressions_tiled", "d8_flow_accum",
                     "breach_tiled", "hydro_invariants"):
@@ -187,71 +187,3 @@ def test_ngram_pipeline_shares_gram_exchange(spark, sf001):
         assert "InMemoryTableScan" in plan
     finally:
         spark.catalog.clearCache()
-
-
-def test_pack_shards_is_distributed_prefix_sum(spark, sf001):
-    """The running token sum must be the two-phase distributed prefix
-    sum: ONE parallel hashpartitioning(bucket) exchange for the local
-    cumsums plus a broadcast of the driver-scanned bucket offsets —
-    NEVER the naive global window's Exchange SinglePartition, which
-    funnels the whole corpus through one task (the round-3 verdict's
-    confirmed scale-killer)."""
-    from go_spatial_spark.operators import corpus
-
-    docs = spark.read.parquet(f"{sf001}/documents.parquet")
-    plan = _plan(corpus.pack_shards(docs, tokens_per_shard=10_000))
-    assert "SinglePartition" not in plan, plan
-    assert "hashpartitioning(bucket" in plan, plan
-    assert "BroadcastExchange" in plan, plan
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
-
-
-def test_decontaminate_broadcasts_probe_grams(spark, sf001):
-    """The probe (eval-set) gram dimension must broadcast — the
-    trillion-doc corpus side never shuffles on gram; per-doc overlap
-    re-aggregates on doc_id only."""
-    from go_spatial_spark.operators import corpus
-
-    docs = spark.read.parquet(f"{sf001}/documents.parquet")
-    plan = _plan(corpus.decontaminate(docs))
-    assert "BroadcastHashJoin" in plan, plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    # corpus side must not hash-partition on gram for the probe join
-    # (the only gram exchange allowed is the distinct() pre-agg)
-    assert "BatchEvalPython" not in plan
-
-
-def test_tfidf_join_is_hash_join(spark, sf001):
-    """tf x df joins on token: an equi-join (shuffle bounded by vocab
-    size) or AQE-broadcast df side — never a nested loop; top-k is a
-    per-doc window, no global sort."""
-    from go_spatial_spark.operators import corpus
-
-    docs = spark.read.parquet(f"{sf001}/documents.parquet")
-    plan = _plan(corpus.tfidf_topk(docs))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "BatchEvalPython" not in plan
-    # the window's sort is a per-partition sort under the doc_id
-    # exchange, never a global Exchange rangepartitioning
-    assert "rangepartitioning" not in plan.lower(), plan
-
-
-def test_tfidf_reuses_token_stream_exchange(spark, sf001):
-    """The df branch is derived from the tf aggregate and keeps tf's
-    partial_count in its subtree (via the always-true `tf >= 1`
-    guard), so the corpus-scale explode+shuffle of the token stream is
-    computed ONCE: the executed adaptive plan must contain a
-    ReusedExchange. Compile-time `explain` prints two subtrees — only
-    the runtime plan proves the reuse, which is why this test runs the
-    query."""
-    from go_spatial_spark.operators import corpus
-
-    docs = spark.read.parquet(f"{sf001}/documents.parquet")
-    out = corpus.tfidf_topk(docs)
-    out.collect()
-    executed = out._jdf.queryExecution().executedPlan().toString()
-    assert "isFinalPlan=true" in executed
-    assert "ReusedExchange" in executed, executed

@@ -129,6 +129,29 @@ def test_geotiff_tags(spark):
     assert tags[tags.tag == 256]["value"].iloc[0] == "[237]"
 
 
+def test_geotiff_tags_of_written_file(spark, tmp_path):
+    """The header parser behind every GeoTIFF read, on a file from
+    write_geotiff: all 13 tags the writer emits come back decoded."""
+    rows, cols = 7, 11
+    meta = RasterMeta(rows=rows, cols=cols, north=50.0, south=43.0,
+                      east=16.5, west=5.5, nodata=-9999.0)
+    p = str(tmp_path / "tags.tif")
+    io.write_geotiff(synthetic_dem(spark, rows, cols), meta, p)
+    got = dict(io.geotiff_tags(spark, p).collect())
+    assert sorted(got) == [256, 257, 258, 259, 262, 273, 277, 278, 279,
+                           339, 33550, 33922, 42113]
+    assert got[256] == f"[{cols}]" and got[257] == f"[{rows}]"
+    assert got[258] == "[64]"     # bits per sample
+    assert got[259] == "[1]"      # no compression
+    assert got[262] == "[1]" and got[277] == "[1]" and got[278] == "[1]"
+    assert got[339] == "[3]"      # IEEE float samples
+    assert got[279] == str([cols * 8] * rows)  # one strip per row
+    assert len(got[273].strip("[]").split(",")) == rows
+    assert got[33550] == str([1.0, 1.0, 0.0])
+    assert got[33922] == str([0.0, 0.0, 0.0, 5.5, 50.0, 0.0])
+    assert got[42113] == str(b"-9999.0\x00")  # GDAL_NODATA, ASCII
+
+
 def test_las_roundtrip(spark, tmp_path):
     """Synthesize a minimal LAS 1.2 file (point format 1) and read it
     back: scale/offset decode per las.go:85-93, bit fields per
