@@ -3,8 +3,7 @@
 ``entry(spark)`` smoke-runs the flagship point-in-polygon join on
 sf0.001. ``queries()`` exposes every implemented operator from
 SURVEY.md §2 as (spark, sf_dir) -> DataFrame; ``oracle_sql()`` gives
-the DuckDB-equivalent SQL over the pre-registered views nation customer
-orders lineitem documents.
+the DuckDB-equivalent SQL over the pre-registered view documents.
 
 Column names are aligned between each query and its oracle; float
 outputs are either exact-by-construction (integer-derived arithmetic,
@@ -24,7 +23,7 @@ from go_spatial_spark.grid import (
 )
 from go_spatial_spark import kernels, oracles
 from go_spatial_spark.geocode import geocode, geocode_sql
-from go_spatial_spark.operators import dedup, hydrology, textstats
+from go_spatial_spark.operators import hydrology
 from go_spatial_spark.operators.spatial_join import (
     knn_oracle_sql, knn_self, pip_oracle_sql, point_in_polygon,
     vector_points_to_raster,
@@ -144,8 +143,8 @@ def entry(spark: SparkSession) -> DataFrame:
 # are merged rather than dropped: the five format readers union into
 # read_rasters (fmt column), planar+geographic slope union on a mode
 # column, the five hydrology invariant rows unpivot into one long-form
-# hydro_invariants row, and token_stats+lang_id+fingerprint fuse into
-# text_metrics. Key mapping old -> new is recorded in COVERAGE.md.
+# hydro_invariants row. Key mapping old -> new is recorded in
+# COVERAGE.md.
 
 # Hydrology invariant-row columns, shared by the Spark unpivot and the
 # DuckDB oracle generator (parity test catches drift in either).
@@ -197,38 +196,6 @@ def _streams_grid(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-
-    # --- web-corpus curation (host accounting / sampling / filtering) ---
-    from go_spatial_spark.operators import webcurate
-    q["host_stats"] = lambda spark, sf: webcurate.host_stats(_docs(spark, sf))
-    q["quota_sample"] = lambda spark, sf: webcurate.quota_sample(
-        _docs(spark, sf))
-    q["host_quality_filter"] = lambda spark, sf: \
-        webcurate.host_quality_filter(_docs(spark, sf))
-
-    # --- relational glue (TPC-H-style) -------------------------------------
-    def tpch_q1(spark, sf):
-        li = spark.read.parquet(f"{sf}/lineitem.parquet")
-        return (li.groupBy("l_returnflag", "l_linestatus")
-                .agg(F.round(F.sum("l_quantity"), 4).alias("sum_qty"),
-                     F.round(F.sum("l_extendedprice"), 4).alias("sum_base_price"),
-                     F.count("*").alias("count_order")))
-    q["tpch_q1"] = tpch_q1
-
-    def revenue_by_nation(spark, sf):
-        cust = spark.read.parquet(f"{sf}/customer.parquet")
-        nat = spark.read.parquet(f"{sf}/nation.parquet")
-        orders = spark.read.parquet(f"{sf}/orders.parquet")
-        li = spark.read.parquet(f"{sf}/lineitem.parquet")
-        return (li.join(orders, li.l_orderkey == orders.o_orderkey)
-                .join(cust, orders.o_custkey == cust.c_custkey)
-                .join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey)
-                .groupBy("n_name")
-                .agg(F.round(F.sum(
-                    F.col("l_extendedprice") * (1 - F.col("l_discount"))),
-                    2).alias("revenue"),
-                    F.count("*").alias("n_items")))
-    q["revenue_by_nation"] = revenue_by_nation
 
     # --- spatial core -----------------------------------------------------
     q["cell_assign"] = lambda spark, sf: (
@@ -422,23 +389,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return read_las(spark, f"{_FMTQ}/pts64.las")
     q["read_las"] = read_las_q
 
-    # --- dedup / text ---------------------------------------------------
-    q["exact_dedup"] = lambda spark, sf: dedup.exact_dedup(_docs(spark, sf))
-    q["minhash_signatures"] = lambda spark, sf: dedup.minhash_signatures(
-        _docs(spark, sf))
-    q["minhash_lsh_pairs"] = lambda spark, sf: dedup.minhash_lsh_pairs(
-        _docs(spark, sf))
-    q["simhash"] = lambda spark, sf: dedup.simhash(_docs(spark, sf))
-    q["ngram_jaccard_top1"] = lambda spark, sf: dedup.ngram_jaccard_top1(
-        _docs(spark, sf))
-    # token_stats + lang_id + fingerprint fused into one per-doc scan
-    # (standalone operators remain in textstats and keep their pytest
-    # parity rows); quality_score stays separate — (lang, source) grain
-    q["text_metrics"] = lambda spark, sf: textstats.text_metrics(
-        _docs(spark, sf))
-    q["quality_score"] = lambda spark, sf: textstats.quality_score(
-        _docs(spark, sf))
-
     assert len(q) <= 50, f"driver window is 50 rows; got {len(q)}"
     return q
 
@@ -526,32 +476,4 @@ def oracle_sql() -> dict[str, str]:
                          ("arcgis_binary", fm64),
                          ("grass", fm64)])
     o["read_las"] = _LAS_ORACLE
-
-    o["exact_dedup"] = dedup.exact_dedup_oracle_sql()
-    o["minhash_signatures"] = dedup.minhash_signatures_oracle_sql()
-    o["minhash_lsh_pairs"] = dedup.minhash_lsh_pairs_oracle_sql()
-    o["simhash"] = dedup.simhash_oracle_sql()
-    o["ngram_jaccard_top1"] = dedup.ngram_jaccard_top1_oracle_sql()
-    o["text_metrics"] = textstats.text_metrics_oracle_sql()
-    o["quality_score"] = textstats.quality_score_oracle_sql()
-    from go_spatial_spark.operators import webcurate
-    o["host_stats"] = webcurate.host_stats_oracle_sql()
-    o["quota_sample"] = webcurate.quota_sample_oracle_sql()
-    o["host_quality_filter"] = webcurate.host_quality_filter_oracle_sql()
-
-    o["tpch_q1"] = """
-        SELECT l_returnflag, l_linestatus,
-               round(sum(l_quantity), 4) AS sum_qty,
-               round(sum(l_extendedprice), 4) AS sum_base_price,
-               count(*) AS count_order
-        FROM lineitem GROUP BY l_returnflag, l_linestatus"""
-    o["revenue_by_nation"] = """
-        SELECT n_name,
-               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-               count(*) AS n_items
-        FROM lineitem
-        JOIN orders ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        JOIN nation ON c_nationkey = n_nationkey
-        GROUP BY n_name"""
     return o

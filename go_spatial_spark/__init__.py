@@ -7,8 +7,7 @@ operators as halo-exchange `mapInPandas` kernels, hydrology as tiled
 drivers (D8 accumulation as a boundary-graph solve; FD8, fill and breach
 as inter-tile fixpoints), raster/LiDAR readers and writers, plus the
 point-in-polygon and kNN spatial joins behind the geocoded-pages
-pipeline (H3-style cell indexing), and dedup / text-quality operators
-over Common-Crawl-style document tables.
+pipeline (H3-style cell indexing).
 
 Design rules (see SURVEY.md):
 - DataFrame/SQL first; Catalyst does pushdown/pruning/broadcast.

@@ -405,9 +405,13 @@ def _parse_tiff_ifd_seek(path: str):
     is O(header) however large the file is."""
     with open(path, "rb") as f:
         head = f.read(8)
-        bo = "<" if head[:2] == b"II" else ">"
+        bo = {b"II": "<", b"MM": ">"}.get(head[:2])
+        if bo is None or len(head) < 8:
+            raise ValueError(f"{path}: not a TIFF file")
         magic, off = struct.unpack(bo + "HI", head[2:8])
-        assert magic == 42, "classic TIFF only"
+        if magic != 42:
+            raise ValueError(f"{path}: TIFF magic {magic}; only classic "
+                             f"TIFF (42) is supported, not BigTIFF (43)")
         f.seek(off)
         n = struct.unpack(bo + "H", f.read(2))[0]
         entries = f.read(12 * n)
@@ -624,7 +628,8 @@ _LAS_SCHEMA = ("x double, y double, z double, intensity int, "
 
 def _las_header(buf: bytes) -> tuple[int, int, int, int, tuple]:
     """Parse the LAS public header block (lasHeader.go fields)."""
-    assert buf[:4] == b"LASF", "not a LAS file"
+    if buf[:4] != b"LASF":
+        raise ValueError("not a LAS file (no LASF signature)")
     (offset_to_points,) = struct.unpack("<I", buf[96:100])
     fmt_id = buf[104]
     (rec_len,) = struct.unpack("<H", buf[105:107])
@@ -661,38 +666,19 @@ def _las_decode(raw_bytes: bytes, n: int, rec_len: int, fmt_id: int,
 def read_las(spark: SparkSession, path: str) -> DataFrame:
     """LAS v1.x -> point DataFrame (x, y, z, intensity, class,
     return_num, num_returns, gps_time). Scale/offset decode per
-    las.go:85-93; bit fields per lasPoint.go:69-149. Whole-file
-    single-task decode (the binaryFile path works on any Hadoop
-    filesystem); large files on shared/posix storage should use
-    `read_las_distributed`."""
-    bf = spark.read.format("binaryFile").load(path).select("content")
-
-    def run(it):
-        for pdf in it:
-            for t in pdf.itertuples(index=False):
-                buf = bytes(t.content)
-                off, fmt_id, rec_len, n_points, scales = _las_header(buf)
-                yield _las_decode(buf[off:], n_points, rec_len, fmt_id,
-                                  scales)
-
-    return bf.mapInPandas(run, schema=_LAS_SCHEMA)
-
-
-def read_las_distributed(spark: SparkSession, path: str,
-                         points_per_task: int | None = None) -> DataFrame:
-    """Record-range-parallel LAS scan: point records are fixed width
-    (las.go:66-93), so the driver parses the O(1) header and fans out
-    (start, count) record ranges; each task seek-reads only its own
-    byte span — a billion-point cloud decodes across the cluster
-    instead of on one core (same shape as read_geotiff_distributed).
-    Requires the path visible from executors (shared/posix storage)."""
+    las.go:85-93; bit fields per lasPoint.go:69-149. Point records are
+    fixed width (las.go:66-93), so the driver parses the O(1) header
+    and fans out (start, count) record ranges, about four per core;
+    each task seek-reads only its own byte span, so a large cloud
+    decodes across the cluster instead of on one core. The path must
+    be readable with open() on the driver and every executor (local
+    or shared posix storage)."""
     with open(path, "rb") as f:
         off, fmt_id, rec_len, n_points, scales = _las_header(f.read(227))
-    if points_per_task is None:
-        target = 4 * spark.sparkContext.defaultParallelism
-        points_per_task = max(1, -(-n_points // max(target, 1)))
-    ranges = [(s, min(points_per_task, n_points - s))
-              for s in range(0, n_points, points_per_task)]
+    target = 4 * spark.sparkContext.defaultParallelism
+    per_task = max(1, -(-n_points // target))
+    ranges = [(s, min(per_task, n_points - s))
+              for s in range(0, n_points, per_task)]
     rdf = spark.createDataFrame(ranges, "start long, cnt int") \
         .repartition(max(len(ranges), 1))
 
@@ -930,13 +916,11 @@ def las_info(spark: SparkSession, path: str) -> DataFrame:
     import datetime
     with open(path, "rb") as f:
         buf = f.read(227)
-    assert buf[:4] == b"LASF", "not a LAS file"
+    _, fmt_id, _, n_points, scales = _las_header(buf)
+    sx, sy, sz, ox, oy, oz = scales
     ver_major, ver_minor = buf[24], buf[25]
     (yday,) = struct.unpack("<H", buf[90:92])
     (year,) = struct.unpack("<H", buf[92:94])
-    fmt_id = buf[104]
-    (n_points,) = struct.unpack("<I", buf[107:111])
-    sx, sy, sz, ox, oy, oz = struct.unpack("<6d", buf[131:179])
     maxx, minx, maxy, miny, maxz, minz = struct.unpack("<6d", buf[179:227])
     if year > 0 and yday > 0:
         d = datetime.date(year, 1, 1) + datetime.timedelta(days=yday - 1)

@@ -11,7 +11,7 @@ import __spark_entry__ as entry_mod
 
 SF_DIR = "/root/testdata/sf0.01"
 # the views the oracles read
-TABLES = ["nation", "customer", "orders", "lineitem", "documents"]
+TABLES = ["documents"]
 
 
 @pytest.fixture()

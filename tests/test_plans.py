@@ -145,45 +145,3 @@ def test_dev_traditional_is_hash_join(spark):
     # the neighbor lookup is a real equi-join on the shifted keys
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan \
         or "BroadcastHashJoin" in plan
-
-
-def test_ngram_pipeline_shares_gram_exchange(spark, sf001):
-    """The round-6 shape: ONE persisted gram-partitioned frame (g2,
-    with the per-doc capped set size sz attached by window counts)
-    feeds both sides of a zero-exchange ShuffledHashJoin; the per-doc
-    sizes table is NEVER broadcast (one row per document is over
-    Spark's 8 GB broadcast cap at 100 TB — the round-5 verdict's one
-    scale-killer), and no per-doc or per-gram frame is broadcast
-    anywhere in the plan."""
-    from go_spatial_spark.operators import dedup
-    docs = spark.read.parquet(f"{sf001}/documents.parquet")
-    df = dedup.ngram_jaccard_top1(docs)
-    plan = _plan(df)
-    try:
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
-        # the only broadcast-free plan in the family: the hot-gram
-        # anti-join and per-doc sizes lookups are gone (window counts
-        # inside the gram pipeline replaced them)
-        assert "BroadcastExchange" not in plan, plan
-        # the only gram shuffles are the two REPARTITION_BY_COL inside
-        # the persisted g2 build (their text repeats under every
-        # InMemoryTableScan display with fresh plan_ids); the
-        # self-join reuses the cached hash(gram) clustering — ZERO
-        # ENSURE_REQUIREMENTS exchanges on gram (the eager count()
-        # barrier finalizes the cached AQE plan so its partitioning is
-        # visible to the join planner; without it both join sides
-        # re-shuffle the whole gram table).
-        import re
-        assert not re.search(
-            r"Exchange hashpartitioning\(gram[^\n]*ENSURE", plan), plan
-        assert re.search(
-            r"Exchange hashpartitioning\(gram[^\n]*REPARTITION_BY_COL",
-            plan), plan
-        # the self-join is the hinted ShuffledHashJoin over the shared
-        # cache, and the pair aggregation's exchange is the only
-        # corpus-scaled one left
-        assert "ShuffledHashJoin" in plan, plan
-        assert "InMemoryTableScan" in plan
-    finally:
-        spark.catalog.clearCache()

@@ -3,6 +3,7 @@
 == 429.42730712890625 in every format) plus writer round-trips."""
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from go_spatial_spark.grid import NODATA, RasterMeta, synthetic_dem, \
@@ -340,11 +341,13 @@ def test_read_geotiff_rgb_and_paletted(spark, tmp_path):
             assert got[(y, x)] == pal[idx[y, x]]
 
 
-def test_las_distributed_matches_single_task(spark, tmp_path):
-    """read_las_distributed fans fixed-width record ranges out across
-    >1 task and decodes byte-identically to the whole-file reader."""
+@pytest.mark.parametrize("n", [0, 1, 17, 50_000])
+def test_read_las_matches_point_formula(spark, tmp_path, n):
+    """read_las decodes exactly the values of the formula that wrote
+    the file, for a header-only file, one record, a ragged last record
+    range and a cloud that fans out across >1 task. All scales are
+    exact dyadics, so int*scale+offset is bit-identical in NumPy."""
     import struct
-    n = 50_000
     header = bytearray(227)
     header[0:4] = b"LASF"
     header[24], header[25] = 1, 2
@@ -355,24 +358,40 @@ def test_las_distributed_matches_single_task(spark, tmp_path):
     struct.pack_into("<I", header, 107, n)
     struct.pack_into("<6d", header, 131, 0.25, 0.5, 0.015625,
                      100.0, -50.0, 12.5)
-    import numpy as np
     i = np.arange(n, dtype=np.int64)
+    xi, yi, zi = (i * 3) % 100_000, (i * 7) % 90_001, (i * i) % 4096
+    inten, ret, cls = (i * 11) % 613, (i % 5) + 1, i % 13
+    gps = 1000.0 + i * 0.5
     rec = np.zeros((n, 28), dtype=np.uint8)
-    rec[:, 0:4] = ((i * 3) % 100_000).astype("<i4")[:, None].view(np.uint8)
-    rec[:, 4:8] = ((i * 7) % 90_001).astype("<i4")[:, None].view(np.uint8)
-    rec[:, 8:12] = ((i * i) % 4096).astype("<i4")[:, None].view(np.uint8)
-    rec[:, 12:14] = ((i * 11) % 613).astype("<u2")[:, None].view(np.uint8)
-    rec[:, 14] = ((i % 5) + 1) | (5 << 3)
-    rec[:, 15] = i % 13
-    rec[:, 20:28] = (1000.0 + i * 0.5)[:, None].view(np.uint8)
-    p = str(tmp_path / "big.las")
+    rec[:, 0:4] = xi.astype("<i4")[:, None].view(np.uint8)
+    rec[:, 4:8] = yi.astype("<i4")[:, None].view(np.uint8)
+    rec[:, 8:12] = zi.astype("<i4")[:, None].view(np.uint8)
+    rec[:, 12:14] = inten.astype("<u2")[:, None].view(np.uint8)
+    rec[:, 14] = ret | (5 << 3)
+    rec[:, 15] = cls
+    rec[:, 20:28] = gps[:, None].view(np.uint8)
+    p = str(tmp_path / "pts.las")
     with open(p, "wb") as f:
         f.write(bytes(header) + rec.tobytes())
 
-    single = io.read_las(spark, p)
-    dist = io.read_las_distributed(spark, p, points_per_task=7_000)
-    # 50k / 7k -> 8 record ranges = 8 independent tasks
-    assert dist.rdd.getNumPartitions() > 1
-    a = sorted(map(tuple, single.collect()))
-    b = sorted(map(tuple, dist.collect()))
-    assert a == b and len(a) == n
+    df = io.read_las(spark, p)
+    if n == 50_000:
+        assert df.rdd.getNumPartitions() > 1
+    got = df.toPandas().sort_values("gps_time").reset_index(drop=True)
+    want = pd.DataFrame({
+        "x": xi * 0.25 + 100.0, "y": yi * 0.5 - 50.0,
+        "z": zi * 0.015625 + 12.5, "intensity": inten.astype(np.int32),
+        "class": cls.astype(np.int32), "return_num": ret.astype(np.int32),
+        "num_returns": np.full(n, 5, dtype=np.int32), "gps_time": gps})
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
+
+
+@pytest.mark.parametrize("reader", ["geotiff_tags", "read_las", "las_info"])
+def test_malformed_header_raises_value_error(spark, tmp_path, reader):
+    """A file without the TIFF byte order / magic or the LAS signature
+    is rejected with ValueError (not an assert, which python -O
+    strips)."""
+    p = tmp_path / "junk.bin"
+    p.write_bytes(bytes(range(7, 256)) * 2)
+    with pytest.raises(ValueError):
+        getattr(io, reader)(spark, str(p))
