@@ -280,8 +280,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["max_elev_deviation"] = max_dev_q
 
     # --- hydrology ---------------------------------------------------------
-    # flow accumulations / tiled fill use 48-cell tiles (2x2 grid): the
-    # fixpoint round count scales with cross-tile hops of the longest path
+    # the tiled hydrology operators use 48-cell tiles (a 2x2 grid), so
+    # every flow and spill path crosses tile edges
     def _dem_tiles48(spark):
         return long_to_tiles(synthetic_dem(spark, GRID_ROWS, GRID_COLS),
                              META, tile=48)

@@ -9,9 +9,12 @@ each stage, a row goes to `<dir>/_metrics.jsonl` with row count,
 per-partition row counts (lineage at partition/tile granularity), and
 wall time.
 
-Iterative operators (fill/breach/flow-accum) checkpoint per *round*
-("<name>/round=<k>"), so a killed fixpoint loop resumes from its last
-completed round.
+The tiled hydrology operators checkpoint with `ckpt_dir`: fill
+persists the pass-1 relation of its perimeter-graph solve as one stage,
+so a killed run resumes from that completed pass; breach does the same
+for its spill surface, then checkpoints its remaining fixpoints per
+*round* ("<name>/round=<k>"), resuming from the last completed round.
+Flow accumulation does not checkpoint.
 """
 
 from __future__ import annotations

@@ -18,28 +18,31 @@ Two execution paths, per SURVEY.md §2.5 / §7:
     (first-max-wins over n=0..7, dist=[diag,cx,diag,cy,...]), FIFO
     topological sweep, init value 1.
 
-- **distributed path** (the 100 TB design): D8 accumulation is
-  *order-independent* (integer sums along a forest), so it runs as a
-  two-pass boundary-graph solve (Barnes, Environ. Model. Softw. 2017)
-  that is bit-identical to the sequential replay in a fixed number of
-  Spark jobs, however many tile edges a flow path crosses. Pass 1
-  accumulates each tile locally and emits its perimeter graph; the
-  driver solves that graph once (O(n_tiles * 4 * tile) rows); pass 2
-  adds the resolved inflows. FD8 and the fill/breach operators still
-  iterate an inter-tile fixpoint, one checkpointed round at a time.
+- **distributed path** (the 100 TB design): D8 accumulation and the
+  epsilon-0 fill surface run as two-pass perimeter-graph solves
+  (R. Barnes, Environ. Model. Softw. 2017 and Computers & Geosciences
+  2016) in a fixed number of Spark jobs, however many tile edges a flow
+  path crosses (`_perimeter_solve`). Pass 1 solves each tile locally
+  and emits its perimeter relation; the driver solves that small graph
+  once (O(n_tiles * 4 * tile) rows); pass 2 finishes each tile with the
+  solved inputs. D8 sums are integer-valued and the fill surface takes
+  input elevations, so both are bit-identical to their single-node
+  oracles. FD8 and breach phases B-D still iterate an inter-tile
+  fixpoint, one checkpointed round at a time.
 """
 
 from __future__ import annotations
 
+import heapq
 import math
 import sys
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from go_spatial_spark.grid import NODATA, RasterMeta, run_stencil
+from go_spatial_spark.checkpoint import CheckpointManager
+from go_spatial_spark.grid import NODATA, TILE_SCHEMA, RasterMeta, run_stencil
 
 DX = (1, 1, 1, 0, -1, -1, -1, 0)
 DY = (-1, 0, 1, 1, 1, 0, -1, -1)
@@ -153,8 +156,8 @@ def fill_depressions_np(dem: np.ndarray, fix_flats: bool = True,
 def fill_depressions(grid: DataFrame, meta: RasterMeta,
                      fix_flats: bool = True) -> DataFrame:
     """Exact single-partition path: the whole raster is one pandas
-    group (documented small-raster constraint; the tiled-fixpoint
-    variant is the scale path, see module docstring)."""
+    group (documented small-raster constraint; the epsilon-0
+    `fill_depressions_tiled` is the scale path, see module docstring)."""
     rows, cols, nodata = meta.rows, meta.cols, meta.nodata
 
     def solve(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -291,81 +294,114 @@ def _path_ends(nxt: np.ndarray) -> np.ndarray:
     return end
 
 
+def _perimeter_solve(tiles: DataFrame, boundary, rel_schema: str, solve,
+                     finish, out_schema: str, ckpt=None,
+                     stage: str | None = None) -> DataFrame:
+    """Two-pass perimeter-graph scaffold (R. Barnes, Environ. Model.
+    Softw. 2017; Computers & Geosciences 2016) in a fixed number of Spark
+    jobs, whatever the number of tiles a path crosses.
+
+    The tiles are materialised once by ``localCheckpoint``. Pass 1 maps
+    ``boundary(t)`` over every tile row ``t`` (a pandas frame of its
+    perimeter relation) and collects the relation to the driver.
+    ``solve(relation)`` returns the solved inputs of each tile keyed by
+    ``(ty, tx)``. Pass 2 maps ``finish(t, inputs)`` over the tiles, with
+    ``None`` for a tile the solve has nothing for. With ``ckpt`` (a
+    CheckpointManager) the pass-1 relation persists as stage ``stage``,
+    so a run killed later resumes from the completed pass.
+    """
+    tiles = tiles.localCheckpoint()
+
+    def each(fn):
+        def run(it):
+            for pdf in it:
+                for t in pdf.itertuples(index=False):
+                    yield fn(t)
+        return run
+
+    pass1 = tiles.mapInPandas(each(boundary), schema=rel_schema)
+    rel = pass1 if ckpt is None else ckpt.run_stage(
+        tiles.sparkSession, stage, lambda: pass1)
+    resolved = solve(rel.toPandas())
+    return tiles.mapInPandas(
+        each(lambda t: finish(t, resolved.get((int(t.ty), int(t.tx))))),
+        schema=out_schema)
+
+
 def d8_flow_accum(dem_tiles: DataFrame, meta: RasterMeta,
                   tile: int = 256) -> DataFrame:
     """Distributed D8 accumulation as a two-pass boundary-graph solve
-    (R. Barnes, Environ. Model. Softw. 2017), bit-identical to
-    `d8_accum_np` in a fixed number of Spark jobs.
+    (R. Barnes, Environ. Model. Softw. 2017) on `_perimeter_solve`,
+    bit-identical to `d8_accum_np` in a fixed number of Spark jobs.
 
-    Pointer tiles come from one halo-1 stencil, materialised once by
-    ``localCheckpoint``. Pass 1 accumulates each tile locally and emits,
-    for each exit cell, its local mass and the out-of-tile cell it lands
-    on (``src = -1``), and for each valid perimeter cell the landing
-    cell its in-tile path exits to. The driver collects these
-    O(n_tiles * 4 * tile) rows and solves the perimeter forest once:
+    Pointer tiles come from one halo-1 stencil. Pass 1 accumulates each
+    tile locally and emits, for each exit cell, its local mass and the
+    out-of-tile cell it lands on (``src = -1``), and for each valid
+    perimeter cell the landing cell its in-tile path exits to. The
+    driver solves the perimeter forest once:
     ``I(L) = base(L) + sum(I(p) for p with next(p) = L)``. Pass 2 re-runs
     each tile's sweep with the inflows ``I`` added at their cells.
     """
     cols, nodata = meta.cols, meta.nodata
     n_tx = math.ceil(cols / tile)
+
+    def graph(t):
+        dirs = np.frombuffer(t.data, dtype=np.float64).reshape(t.h, t.w)
+        return t.ty * tile, t.tx * tile, _tile_graph(dirs, nodata)
+
+    def boundary(t):
+        r0, c0, (valid, nxt, exits, tr, tc) = graph(t)
+        acc = _accumulate(nxt, valid.astype(np.float64))
+        land = (tr + r0) * cols + tc + c0
+        rr, cc = np.divmod(np.arange(nxt.size), t.w)
+        perim = np.flatnonzero(valid & ((rr == 0) | (rr == rr[-1])
+                                        | (cc == 0) | (cc == t.w - 1)))
+        end = _path_ends(nxt)[perim]
+        perim, end = perim[exits[end]], end[exits[end]]
+        ex = np.flatnonzero(exits)
+        return pd.DataFrame({
+            "src": np.r_[np.full(ex.size, -1), (rr + r0)[perim] * cols
+                         + (cc + c0)[perim]],
+            "dst": np.r_[land[ex], land[end]],
+            "mass": np.r_[acc[ex], np.zeros(perim.size)]})
+
+    def solve(edges):
+        src, dst = edges["src"].to_numpy(), edges["dst"].to_numpy()
+        lands = src < 0
+        nodes, inv = np.unique(dst[lands], return_inverse=True)
+        inflow = np.bincount(inv, weights=edges["mass"].to_numpy()[lands],
+                             minlength=nodes.size)
+        # every path row ends at an exit cell, so its dst is a node too
+        path = ~lands & np.isin(src, nodes)
+        nxt = np.full(nodes.size, -1)
+        nxt[np.searchsorted(nodes, src[path])] = np.searchsorted(
+            nodes, dst[path])
+        inflow = _accumulate(nxt, inflow)
+        nr, nc = np.divmod(nodes, cols)
+        key = nr // tile * n_tx + nc // tile
+        resolved = {}
+        for k in np.unique(key):
+            m = key == k
+            resolved[divmod(int(k), n_tx)] = (nr[m] % tile, nc[m] % tile,
+                                              inflow[m])
+        return resolved
+
+    def finish(t, inflow):
+        r0, c0, (valid, nxt, _, _, _) = graph(t)
+        acc = valid.astype(np.float64)
+        if inflow is not None:
+            lr, lc, v = inflow
+            acc[lr * t.w + lc] += v
+        idx = np.flatnonzero(valid)
+        return pd.DataFrame({"row": (idx // t.w + r0).astype(np.int32),
+                             "col": (idx % t.w + c0).astype(np.int32),
+                             "accum": _accumulate(nxt, acc)[idx]})
+
     ptr_tiles = run_stencil(dem_tiles, meta, d8_pointer_kernel,
-                            halo=1, tile=tile).localCheckpoint()
-
-    def tiles(it):
-        for pdf in it:
-            for t in pdf.itertuples(index=False):
-                dirs = np.frombuffer(t.data, dtype=np.float64)
-                yield t.ty * n_tx + t.tx, t.ty * tile, t.tx * tile, t.w, \
-                    _tile_graph(dirs.reshape(t.h, t.w), nodata)
-
-    def boundary(it):
-        for _, r0, c0, w, (valid, nxt, exits, tr, tc) in tiles(it):
-            acc = _accumulate(nxt, valid.astype(np.float64))
-            land = (tr + r0) * cols + tc + c0
-            rr, cc = np.divmod(np.arange(nxt.size), w)
-            perim = np.flatnonzero(valid & ((rr == 0) | (rr == rr[-1])
-                                            | (cc == 0) | (cc == w - 1)))
-            end = _path_ends(nxt)[perim]
-            perim, end = perim[exits[end]], end[exits[end]]
-            ex = np.flatnonzero(exits)
-            yield pd.DataFrame({
-                "src": np.r_[np.full(ex.size, -1), (rr + r0)[perim] * cols
-                             + (cc + c0)[perim]],
-                "dst": np.r_[land[ex], land[end]],
-                "mass": np.r_[acc[ex], np.zeros(perim.size)]})
-
-    edges = ptr_tiles.mapInPandas(
-        boundary, schema="src long, dst long, mass double").toPandas()
-    src, dst = edges["src"].to_numpy(), edges["dst"].to_numpy()
-    lands = src < 0
-    nodes, inv = np.unique(dst[lands], return_inverse=True)
-    inflow = np.bincount(inv, weights=edges["mass"].to_numpy()[lands],
-                         minlength=nodes.size)
-    # every path row ends at an exit cell, so its dst is a node too
-    path = ~lands & np.isin(src, nodes)
-    nxt = np.full(nodes.size, -1)
-    nxt[np.searchsorted(nodes, src[path])] = np.searchsorted(nodes, dst[path])
-    inflow = _accumulate(nxt, inflow)
-    nr, nc = np.divmod(nodes, cols)
-    key = nr // tile * n_tx + nc // tile
-    resolved = {}
-    for k in np.unique(key):
-        m = key == k
-        resolved[int(k)] = (nr[m] % tile, nc[m] % tile, inflow[m])
-
-    def finish(it):
-        for k, r0, c0, w, (valid, nxt, _, _, _) in tiles(it):
-            acc = valid.astype(np.float64)
-            if k in resolved:
-                lr, lc, v = resolved[k]
-                acc[lr * w + lc] += v
-            idx = np.flatnonzero(valid)
-            yield pd.DataFrame({"row": (idx // w + r0).astype(np.int32),
-                                "col": (idx % w + c0).astype(np.int32),
-                                "accum": _accumulate(nxt, acc)[idx]})
-
-    return ptr_tiles.mapInPandas(
-        finish, schema="row int, col int, accum double")
+                            halo=1, tile=tile)
+    return _perimeter_solve(ptr_tiles, boundary,
+                            "src long, dst long, mass double", solve,
+                            finish, "row int, col int, accum double")
 
 
 # ---------------------------------------------------------------------------
@@ -478,8 +514,8 @@ def fd8_flow_accum(dem_tiles: DataFrame, meta: RasterMeta, tile: int = 256,
     from go_spatial_spark.grid import padded_tiles
     spark = dem_tiles.sparkSession
     nodata = meta.nodata
-    ptiles = padded_tiles(dem_tiles, meta, halo=1, tile=tile).cache()
-    ptiles.count()
+    ptiles = padded_tiles(dem_tiles, meta, halo=1,
+                          tile=tile).localCheckpoint()
 
     def make_rounder(emit_acc: bool):
         def fn(key, tile_pdf, in_pdf):
@@ -1078,68 +1114,216 @@ def breach_streams(dem_grid: DataFrame, streams_grid: DataFrame,
 
 
 # ---------------------------------------------------------------------------
-# Distributed FillDepressions (tiled priority-flood fixpoint)
+# Distributed FillDepressions (parallel Priority-Flood on the label graph)
 # ---------------------------------------------------------------------------
 # The scale path for fillDepressions.go. Without the flat-fix epsilon
 # (SMALL_NUM=0, i.e. fixFlats=False) the filled surface has a clean
-# closed form: W(c) = max(z(c), min over paths c->edge of the max W
-# along the path) — the "spill elevation". That fixpoint decomposes
-# over tiles: seed each tile's flood from (a) its own edge cells
-# (z, where a NoData/out-of-grid neighbor exists) and (b) the current
-# W estimates of its halo ring; iterate until no W changes. W is
-# monotone non-increasing from +inf and takes values from the finite
-# set of input elevations -> finite, exact convergence. The epsilon
-# path (fixFlats=True) stays on the single-partition exact replay —
-# its increments depend on global heap visit order.
+# closed form: the spill elevation W(c) = minimax over paths from c to
+# an outlet (a valid cell with a NoData or off-grid 8-neighbor) of the
+# highest z on the path. R. Barnes' parallel Priority-Flood (Computers
+# & Geosciences 2016, Algorithms 2-3) computes it in two passes on
+# `_perimeter_solve`: each tile floods from its perimeter cells (each
+# its own label) and its outlets (the shared ocean label -1), giving a
+# local fill F and a label per cell; the driver floods the graph of
+# labels from the ocean, giving each label its spill level S; then
+# W = max(F, S[label]). Every value is an input elevation, so the
+# result is exact in any order. The epsilon path (fixFlats=True) stays
+# on the single-partition exact replay — its increments depend on
+# global heap visit order.
 
-import heapq
+_NEIGHBORS = tuple(zip(DY, DX))
 
 
-def _tile_flood(dem_t: np.ndarray, w_t: np.ndarray,
-                halo_pad: np.ndarray, nodata: float) -> np.ndarray:
-    """One tile priority-flood. halo_pad is the (h+2, w+2) ring of
-    current neighbor-W values (nodata where the neighbor cell is
-    NoData, off-grid, or in an absent all-NoData tile; +inf where not
-    yet reached). Edge seeds = valid cells with any NoData-ish
-    8-neighbor (fillDepressions.go:247-259 semantics, epsilon=0)."""
-    h, w = dem_t.shape
-    valid = dem_t != nodata
-    W = w_t.copy()
-    INF = np.float64(1e308)
-    pad_vals = halo_pad.copy()
-    pad_vals[1:-1, 1:-1] = np.where(valid, dem_t, nodata)
-    # edge seeds: any 8-neighbor NoData (internal, cross-tile,
-    # off-grid) — vectorized via the 8 shifted views of pad_vals
-    edge = np.zeros((h, w), dtype=bool)
-    for n in range(8):
-        edge |= pad_vals[1 + DY[n]:1 + DY[n] + h,
-                         1 + DX[n]:1 + DX[n] + w] == nodata
-    edge &= valid
-    lower = edge & (dem_t < W)
-    W[lower] = dem_t[lower]
+def _spill_np(dem: np.ndarray, nodata: float) -> np.ndarray:
+    """Single-node epsilon-0 spill surface W: a textbook Priority-Flood
+    from every valid cell with a NoData or off-grid 8-neighbor
+    (fillDepressions.go:247-259 seeds). The oracle of
+    `breach_minimax_np`, independent of the label-graph solve."""
+    h, w = dem.shape
+    valid = dem != nodata
+    vpad = np.zeros((h + 2, w + 2), dtype=bool)
+    vpad[1:-1, 1:-1] = valid
+    edge = valid & ~np.logical_and.reduce(
+        [vpad[1 + dy:1 + dy + h, 1 + dx:1 + dx + w] for dy, dx in _NEIGHBORS])
+    W = np.where(edge, dem, np.inf)
     er, ec = np.nonzero(edge)
-    heap = [(W[er[i], ec[i]], int(er[i]), int(ec[i]))
-            for i in range(len(er))]
-    # halo seeds: neighbor-tile W estimates already below +inf
-    hr, hc = np.nonzero((halo_pad != nodata) & (halo_pad < INF))
-    heap.extend((float(halo_pad[hr[i], hc[i]]),
-                 int(hr[i]) - 1, int(hc[i]) - 1)
-                for i in range(len(hr)))
+    heap = list(zip(dem[edge].tolist(), er.tolist(), ec.tolist()))
     heapq.heapify(heap)
     while heap:
         wv, r, c = heapq.heappop(heap)
-        for n in range(8):
-            rn, cn = r + DY[n], c + DX[n]
+        for dy, dx in _NEIGHBORS:
+            rn, cn = r + dy, c + dx
             if 0 <= rn < h and 0 <= cn < w and valid[rn, cn]:
-                cand = wv if wv > dem_t[rn, cn] else dem_t[rn, cn]
+                cand = wv if wv > dem[rn, cn] else dem[rn, cn]
                 if cand < W[rn, cn]:
                     W[rn, cn] = cand
                     heapq.heappush(heap, (cand, rn, cn))
-    return W
+    return np.where(valid, W, nodata)
+
+
+def _label_flood(z: np.ndarray, r0: int, c0: int, rows: int, cols: int,
+                 nodata: float):
+    """Local Priority-Flood of one DEM tile with top-left cell (r0, c0).
+
+    Seeds are the tile's valid perimeter cells, each labelled with its
+    global cell index, and its outlets, which share the ocean label -1;
+    a perimeter outlet keeps its own label. Neighbors in other tiles
+    count as valid here: the driver finds the outlets among them.
+    Returns flat arrays (fill, label, perimeter, outlet); NoData cells
+    keep their value and get label -3."""
+    h, w = z.shape
+    # valid-cell ring: off-grid is NoData, other tiles' cells count valid
+    vpad = np.ones((h + 2, w + 2), dtype=bool)
+    vpad[1:-1, 1:-1] = z != nodata
+    vpad[0] &= r0 > 0
+    vpad[-1] &= r0 + h < rows
+    vpad[:, 0] &= c0 > 0
+    vpad[:, -1] &= c0 + w < cols
+    valid = vpad[1:-1, 1:-1]
+    outlet = (valid & ~np.logical_and.reduce(
+        [vpad[1 + dy:1 + dy + h, 1 + dx:1 + dx + w]
+         for dy, dx in _NEIGHBORS])).ravel()
+    valid = valid.ravel()
+    rr, cc = np.divmod(np.arange(h * w), w)
+    perim = valid & ((rr == 0) | (rr == h - 1) | (cc == 0) | (cc == w - 1))
+    lab = np.where(valid, -2, -3)
+    lab[outlet] = -1
+    lab[perim] = ((rr + r0) * cols + cc + c0)[perim]
+    seeds = np.flatnonzero(lab >= -1)
+    zf = z.ravel()
+    heap = list(zip(zf[seeds].tolist(), seeds.tolist()))
+    heapq.heapify(heap)
+    fill, L = zf.tolist(), lab.tolist()
+    while heap:
+        f, i = heapq.heappop(heap)
+        r, c = divmod(i, w)
+        for dy, dx in _NEIGHBORS:
+            rn, cn = r + dy, c + dx
+            j = rn * w + cn
+            if 0 <= rn < h and 0 <= cn < w and L[j] == -2:
+                L[j] = L[i]
+                if f > fill[j]:
+                    fill[j] = f
+                heapq.heappush(heap, (fill[j], j))
+    return np.array(fill), np.array(L), perim, outlet
+
+
+def _spill_solve(rel: pd.DataFrame, meta: RasterMeta, tile: int) -> dict:
+    """Driver half of the spill surface (Barnes 2016, Algorithm 3).
+
+    ``rel`` holds (a, b, w) rows: a == b is a perimeter cell a with
+    elevation w; a != b is the lowest spill elevation w between labels
+    a and b inside one tile. Each perimeter cell is joined to its
+    8-neighbors in other tiles (edge weight max(z_a, z_b)); a NoData
+    or absent neighbor makes it an outlet. A Priority-Flood of the
+    label graph from the ocean gives each label its spill level S.
+    Returns {(ty, tx): (sorted labels of the tile, their S)}."""
+    rows, cols = meta.rows, meta.cols
+    a, b, w = (rel[k].to_numpy() for k in ("a", "b", "w"))
+    own = a == b
+    if not own.any():
+        return {}
+    order = np.argsort(a[own])
+    g, z = a[own][order], w[own][order]
+    ea, eb, ew = [a[~own]], [b[~own]], [w[~own]]
+    r, c = np.divmod(g, cols)
+    for dy, dx in _NEIGHBORS:
+        rn, cn = r + dy, c + dx
+        ng = rn * cols + cn
+        cross = ((rn >= 0) & (rn < rows) & (cn >= 0) & (cn < cols)
+                 & ((rn // tile != r // tile) | (cn // tile != c // tile)))
+        pos = np.minimum(np.searchsorted(g, ng), g.size - 1)
+        hit = cross & (g[pos] == ng)
+        out = cross & ~hit
+        ea += [g[hit], np.full(out.sum(), -1)]
+        eb += [ng[hit], g[out]]
+        ew += [np.maximum(z[hit], z[pos[hit]]), z[out]]
+    nodes = np.r_[-1, g]
+    adj = [[] for _ in range(nodes.size)]
+    for u, v, wt in zip(np.searchsorted(nodes, np.concatenate(ea)).tolist(),
+                        np.searchsorted(nodes, np.concatenate(eb)).tolist(),
+                        np.concatenate(ew).tolist()):
+        adj[u].append((v, wt))
+        adj[v].append((u, wt))
+    S = [math.inf] * nodes.size
+    S[0] = -math.inf
+    heap = [(-math.inf, 0)]
+    while heap:
+        s, u = heapq.heappop(heap)
+        if s > S[u]:
+            continue
+        for v, wt in adj[u]:
+            cand = s if s > wt else wt
+            if cand < S[v]:
+                S[v] = cand
+                heapq.heappush(heap, (cand, v))
+    S = np.array(S[1:])
+    n_tx = math.ceil(cols / tile)
+    key = r // tile * n_tx + c // tile
+    order = np.argsort(key, kind="stable")
+    keys, first = np.unique(key[order], return_index=True)
+    return {divmod(int(k), n_tx): (g[idx], S[idx])
+            for k, idx in zip(keys, np.split(order, first[1:]))}
+
+
+def _spill_surface(dem_tiles: DataFrame, meta: RasterMeta, tile: int,
+                   ckpt: CheckpointManager | None, stage: str,
+                   tile_form: bool = False) -> DataFrame:
+    """The epsilon-0 spill surface W on `_perimeter_solve`: long form
+    (row, col, filled), or TILE_SCHEMA tiles with ``tile_form``. With
+    ``ckpt`` the pass-1 relation persists as stage ``stage``."""
+    rows, cols, nodata = meta.rows, meta.cols, meta.nodata
+
+    def flood(t):
+        z = np.frombuffer(t.data, dtype=np.float64).reshape(t.h, t.w)
+        return _label_flood(z, t.ty * tile, t.tx * tile, rows, cols, nodata)
+
+    def boundary(t):
+        fill, lab, perim, outlet = flood(t)
+        F, L = fill.reshape(t.h, t.w), lab.reshape(t.h, t.w)
+        po = perim & outlet
+        a = [lab[perim], np.full(po.sum(), -1)]
+        b = [lab[perim], lab[po]]
+        w = [fill[perim], fill[po]]
+        # each 8-adjacent pair inside the tile once: E, SW, S, SE
+        for dy, dx in ((0, 1), (1, -1), (1, 0), (1, 1)):
+            cs = slice(max(0, -dx), t.w - max(0, dx))
+            cn = slice(max(0, dx), t.w - max(0, -dx))
+            la, lb = L[:t.h - dy, cs], L[dy:, cn]
+            m = (la >= -1) & (lb >= -1) & (la != lb)
+            a.append(np.minimum(la[m], lb[m]))
+            b.append(np.maximum(la[m], lb[m]))
+            w.append(np.maximum(F[:t.h - dy, cs][m], F[dy:, cn][m]))
+        return (pd.DataFrame({"a": np.concatenate(a),
+                              "b": np.concatenate(b),
+                              "w": np.concatenate(w)})
+                .groupby(["a", "b"], as_index=False)["w"].min())
+
+    def finish(t, spill):
+        fill, lab, _, _ = flood(t)
+        if spill is not None:
+            labels, S = spill
+            own = lab >= 0
+            fill[own] = np.maximum(
+                fill[own], S[np.searchsorted(labels, lab[own])])
+        if tile_form:
+            return pd.DataFrame({"ty": [t.ty], "tx": [t.tx], "h": [t.h],
+                                 "w": [t.w], "data": [fill.tobytes()]})
+        idx = np.flatnonzero(lab >= -1)
+        rr, cc = np.divmod(idx, t.w)
+        return pd.DataFrame({"row": (rr + t.ty * tile).astype(np.int32),
+                             "col": (cc + t.tx * tile).astype(np.int32),
+                             "filled": fill[idx]})
+
+    return _perimeter_solve(
+        dem_tiles, boundary, "a long, b long, w double",
+        lambda rel: _spill_solve(rel, meta, tile), finish,
+        TILE_SCHEMA if tile_form else "row int, col int, filled double",
+        ckpt, stage)
 
 
 def fill_depressions_tiled(dem_tiles: DataFrame, meta: RasterMeta,
-                           tile: int = 256, max_rounds: int = 64,
+                           tile: int = 256,
                            ckpt_dir: str | None = None) -> DataFrame:
     """Distributed FillDepressions: textbook Priority-Flood semantics
     (filled = max(z, minimax spill elevation over paths to an edge),
@@ -1154,215 +1338,12 @@ def fill_depressions_tiled(dem_tiles: DataFrame, meta: RasterMeta,
     semantics and is tested against an independent global minimax
     oracle (test_fill_depressions_tiled_exact).
 
-    Per round: W tiles ship halo strips to neighbors (perimeter-sized
-    shuffle), each tile refloods locally, a signature check stops at
-    the exact fixpoint (W is monotone non-increasing over a finite
-    value set)."""
-    dem_cached = dem_tiles.cache()
-    dem_cached.count()
-    ckpt = None
-    if ckpt_dir is not None:
-        from go_spatial_spark.checkpoint import CheckpointManager
-        ckpt = CheckpointManager(ckpt_dir)
-    w_tiles = _spill_w_tiles(dem_cached, meta, tile, max_rounds,
-                             ckpt=ckpt)
-    return _w_to_filled_long(dem_cached, w_tiles, meta, tile)
-
-
-def _spill_w_tiles(dem_cached: DataFrame, meta: RasterMeta,
-                   tile: int, max_rounds: int,
-                   ckpt=None, ckpt_prefix: str = "fill_w") -> DataFrame:
-    """Tile-form spill surface W (the epsilon=0 priority-flood
-    fixpoint); shared by fill_depressions_tiled and
-    breach_depressions_tiled. `dem_cached` must already be cached.
-
-    With `ckpt` (a CheckpointManager), every round persists to
-    `<prefix>/round=<k>` with per-partition row metrics, and a restart
-    resumes from the last completed round (north_rule: resumable at
-    tile granularity)."""
-    import math as _math
-    nodata = meta.nodata
-    rows, cols = meta.rows, meta.cols
-    n_ty = _math.ceil(rows / tile)
-    n_tx = _math.ceil(cols / tile)
-
-    # W state starts at +inf on valid cells (packed with the DEM plane
-    # so each round's cogroup only moves W strips + joins static tiles)
-    INF = np.float64(1e308)
-
-    def init_w(it):
-        for pdf in it:
-            for t in pdf.itertuples(index=False):
-                dem_t = np.frombuffer(t.data, dtype=np.float64).reshape(
-                    t.h, t.w)
-                wt = np.where(dem_t != nodata, INF, nodata)
-                yield pd.DataFrame({"ty": [t.ty], "tx": [t.tx],
-                                    "h": [t.h], "w": [t.w],
-                                    "data": [wt.tobytes()]})
-
-    from go_spatial_spark.grid import TILE_SCHEMA, _NEIGHBOR_OFFSETS
-    w_tiles = dem_cached.mapInPandas(init_w, schema=TILE_SCHEMA)
-
-    strip_schema = ("ty int, tx int, src_dty int, src_dtx int, "
-                    "h int, w int, data binary")
-
-    def emit_strips(it):
-        for pdf in it:
-            recs = []
-            for t in pdf.itertuples(index=False):
-                arr = np.frombuffer(t.data, dtype=np.float64).reshape(
-                    t.h, t.w)
-                for dty, dtx in _NEIGHBOR_OFFSETS:
-                    nty, ntx = t.ty + dty, t.tx + dtx
-                    if not (0 <= nty < n_ty and 0 <= ntx < n_tx):
-                        continue
-                    rs = slice(0, min(1, t.h)) if dty < 0 else (
-                        slice(max(0, t.h - 1), t.h) if dty > 0
-                        else slice(0, t.h))
-                    cs = slice(0, min(1, t.w)) if dtx < 0 else (
-                        slice(max(0, t.w - 1), t.w) if dtx > 0
-                        else slice(0, t.w))
-                    strip = np.ascontiguousarray(arr[rs, cs])
-                    recs.append((nty, ntx, -dty, -dtx, strip.shape[0],
-                                 strip.shape[1], strip.tobytes()))
-            if recs:
-                yield pd.DataFrame(recs, columns=[
-                    "ty", "tx", "src_dty", "src_dtx", "h", "w", "data"])
-
-    def make_flood(emit_long: bool):
-        def fn(key, dem_pdf, strips_pdf):
-            ty, tx = int(key[0]), int(key[1])
-            if dem_pdf.empty:
-                if emit_long:
-                    return pd.DataFrame({
-                        "row": pd.Series(dtype="int32"),
-                        "col": pd.Series(dtype="int32"),
-                        "filled": pd.Series(dtype="float64")})
-                return pd.DataFrame({
-                    "ty": pd.Series(dtype="int32"),
-                    "tx": pd.Series(dtype="int32"),
-                    "h": pd.Series(dtype="int32"),
-                    "w": pd.Series(dtype="int32"),
-                    "data": pd.Series(dtype=object)})
-            dt = dem_pdf.iloc[0]
-            h, w = int(dt.h), int(dt.w)
-            dem_t = np.frombuffer(dt.dem, dtype=np.float64).reshape(h, w)
-            w_t = np.frombuffer(dt.wdata, dtype=np.float64).reshape(h, w)
-            # halo ring of neighbor W values; nodata = NoData cell,
-            # off-grid, or absent (all-NoData) neighbor tile
-            halo_pad = np.full((h + 2, w + 2), nodata, dtype=np.float64)
-            for srow in strips_pdf.itertuples(index=False):
-                sa = np.frombuffer(srow.data, dtype=np.float64).reshape(
-                    srow.h, srow.w)
-                dty, dtx = int(srow.src_dty), int(srow.src_dtx)
-                rs = slice(0, 1) if dty < 0 else (
-                    slice(h + 1, h + 2) if dty > 0 else slice(1, 1 + sa.shape[0]))
-                cs = slice(0, 1) if dtx < 0 else (
-                    slice(w + 1, w + 2) if dtx > 0 else slice(1, 1 + sa.shape[1]))
-                halo_pad[rs, cs] = sa
-            W = _tile_flood(dem_t, w_t, halo_pad, nodata)
-            if emit_long:
-                rr, cc = np.nonzero(dem_t != nodata)
-                return pd.DataFrame({
-                    "row": (rr + ty * tile).astype(np.int32),
-                    "col": (cc + tx * tile).astype(np.int32),
-                    "filled": W[rr, cc]})
-            return pd.DataFrame({"ty": [ty], "tx": [tx], "h": [h],
-                                 "w": [w], "data": [W.tobytes()]})
-        return fn
-
-    # signature: exact sum of finite W values + count (monotone
-    # non-increasing, values from the finite elevation set)
-    def sig_fn(it):
-        tot = 0.0
-        cnt = 0
-        for pdf in it:
-            for t in pdf.itertuples(index=False):
-                a = np.frombuffer(t.data, dtype=np.float64)
-                m = (a != nodata) & (a < INF)
-                # exact: values are dyadic rationals (input z's)
-                tot += float(a[m].sum())
-                cnt += int(m.sum())
-        yield pd.DataFrame({"tot": [tot], "cnt": [cnt]})
-
-    def sig_of(df):
-        srow = (df.mapInPandas(sig_fn, schema="tot double, cnt long")
-                .groupBy().sum().first())
-        return (float(srow[0] or 0.0), int(srow[1] or 0))
-
-    spark = dem_cached.sparkSession
-    prev_sig = None
-    start_round = 0
-    if ckpt is not None:
-        done = ckpt.converged_round(ckpt_prefix)
-        if done is not None:
-            return ckpt.read_stage(
-                spark, f"{ckpt_prefix}/round={done}")
-        rounds = ckpt.completed_rounds(ckpt_prefix)
-        if rounds:
-            w_tiles = ckpt.read_stage(
-                spark, f"{ckpt_prefix}/round={rounds[-1]}")
-            prev_sig = sig_of(w_tiles)
-            start_round = rounds[-1] + 1
-
-    for rnd in range(start_round, max_rounds):
-        strips = w_tiles.mapInPandas(emit_strips, schema=strip_schema)
-        dem_w = (dem_cached.alias("d").join(
-            w_tiles.alias("x"), ["ty", "tx"])
-            .select("ty", "tx", F.col("d.h").alias("h"),
-                    F.col("d.w").alias("w"),
-                    F.col("d.data").alias("dem"),
-                    F.col("x.data").alias("wdata")))
-        built = (dem_w.groupBy("ty", "tx")
-                 .cogroup(strips.groupBy("ty", "tx"))
-                 .applyInPandas(make_flood(False), schema=TILE_SCHEMA))
-        # Both branches materialize + truncate the per-round lineage
-        # (the cached-only variant's logical plan grows ~3x per round
-        # and every downstream action re-analyzes the whole tree —
-        # measured minutes of pure planning at 8+ rounds). The ckpt
-        # branch additionally persists the round + partition metrics.
-        if ckpt is not None:
-            new_w = ckpt.run_stage(spark, f"{ckpt_prefix}/round={rnd}",
-                                   lambda: built)
-        else:
-            new_w = built.localCheckpoint()
-        sig = sig_of(new_w)
-        w_tiles = new_w
-        if sig == prev_sig:
-            if ckpt is not None:
-                ckpt.mark_converged(ckpt_prefix, rnd)
-            break
-        prev_sig = sig
-    return w_tiles
-
-
-def _w_to_filled_long(dem_cached: DataFrame, w_tiles: DataFrame,
-                      meta: RasterMeta, tile: int) -> DataFrame:
-    """Final fill pass: one more tile flood emitting long form."""
-    nodata = meta.nodata
-
-    def emit(it):
-        for pdf in it:
-            outs = []
-            for t in pdf.itertuples(index=False):
-                dem_t = np.frombuffer(t.dem, dtype=np.float64).reshape(
-                    t.h, t.w)
-                w_t = np.frombuffer(t.wdata, dtype=np.float64).reshape(
-                    t.h, t.w)
-                rr, cc = np.nonzero(dem_t != nodata)
-                outs.append(pd.DataFrame({
-                    "row": (rr + t.ty * tile).astype(np.int32),
-                    "col": (cc + t.tx * tile).astype(np.int32),
-                    "filled": w_t[rr, cc]}))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    dem_w = (dem_cached.alias("d").join(w_tiles.alias("x"), ["ty", "tx"])
-             .select("ty", "tx", F.col("d.h").alias("h"),
-                     F.col("d.w").alias("w"),
-                     F.col("d.data").alias("dem"),
-                     F.col("x.data").alias("wdata")))
-    return dem_w.mapInPandas(emit, schema="row int, col int, filled double")
+    Two passes over the tiles and one driver solve of the label graph
+    (see the section comment above), in a fixed number of Spark jobs.
+    With `ckpt_dir`, the pass-1 relation persists as stage ``fill_w``
+    with per-partition row metrics, and a rerun resumes from it."""
+    ckpt = CheckpointManager(ckpt_dir) if ckpt_dir is not None else None
+    return _spill_surface(dem_tiles, meta, tile, ckpt, "fill_w")
 
 
 # ---------------------------------------------------------------------------
@@ -1376,7 +1357,7 @@ def _w_to_filled_long(dem_cached: DataFrame, w_tiles: DataFrame,
 # single-partition `breach_depressions` replay keeps bit parity with
 # the Go fixture behavior:
 #
-#   W  = epsilon=0 spill surface (priority-flood fixpoint);
+#   W  = epsilon=0 spill surface (the fill's label-graph solve);
 #   D  = distance-to-drop inside each equal-W plateau (the classic
 #        flat-resolution distance);
 #   backlink(c) = the unique neighbor minimizing (W, D, z, flatindex)
@@ -1393,17 +1374,16 @@ def _w_to_filled_long(dem_cached: DataFrame, w_tiles: DataFrame,
 # (test_breach_tiled_* asserts this plus exact equality with the
 # single-node replay of the same semantics).
 #
-# Shuffle profile per round: O(perimeter) strips for the W and D
-# fixpoints; the walker loop moves only live walker rows (#pits at
-# most, shrinking as paths merge — per-cell min-v dominance drops
-# dominated walkers).
+# W takes a fixed number of jobs. Shuffle profile per round after it:
+# O(perimeter) strips for the D fixpoint; the walker loop moves only
+# live walker rows (#pits at most, shrinking as paths merge — per-cell
+# min-v dominance drops dominated walkers).
 
 
 def _plateau_distance_np(dem: np.ndarray, W: np.ndarray,
                          nodata: float) -> np.ndarray:
     """Single-node D: unit-distance to a W-drop (or outlet) within each
     equal-W plateau. INF never survives (every plateau has a drop)."""
-    import heapq as _hq
     rows, cols = dem.shape
     valid = dem != nodata
     D = np.full((rows, cols), np.iinfo(np.int64).max, dtype=np.int64)
@@ -1424,9 +1404,9 @@ def _plateau_distance_np(dem: np.ndarray, W: np.ndarray,
                     break
             if drop:
                 D[r, c] = 0
-                _hq.heappush(heap, (0, r, c))
+                heapq.heappush(heap, (0, r, c))
     while heap:
-        d, r, c = _hq.heappop(heap)
+        d, r, c = heapq.heappop(heap)
         if d > D[r, c]:
             continue
         for n in range(8):
@@ -1434,7 +1414,7 @@ def _plateau_distance_np(dem: np.ndarray, W: np.ndarray,
             if 0 <= rn < rows and 0 <= cn < cols and valid[rn, cn] \
                     and W[rn, cn] == W[r, c] and d + 1 < D[rn, cn]:
                 D[rn, cn] = d + 1
-                _hq.heappush(heap, (d + 1, rn, cn))
+                heapq.heappush(heap, (d + 1, rn, cn))
     return D
 
 
@@ -1476,9 +1456,7 @@ def breach_minimax_np(dem: np.ndarray, nodata: float = NODATA
     oracle for breach_depressions_tiled)."""
     rows, cols = dem.shape
     valid = dem != nodata
-    W0 = np.where(valid, np.float64(1e308), nodata)
-    halo_pad = np.full((rows + 2, cols + 2), nodata, dtype=np.float64)
-    W = _tile_flood(dem, W0, halo_pad, nodata)
+    W = _spill_np(dem, nodata)
     D = _plateau_distance_np(dem, W, nodata)
     bl = _backlinks_np(dem, W, D, cols, nodata)
     out = dem.copy()
@@ -1542,6 +1520,13 @@ _STRIPS_SCHEMA = ("ty int, tx int, src_dty int, src_dtx int, "
                   "h int, w int, data binary")
 
 
+def _no_tile() -> pd.DataFrame:
+    """Empty TILE_SCHEMA frame, for a cogroup key with no tile."""
+    return pd.DataFrame({k: pd.Series(dtype="int32")
+                         for k in ("ty", "tx", "h", "w")}
+                        | {"data": pd.Series(dtype=object)})
+
+
 def _paste_ring(pad: np.ndarray, h: int, w: int,
                 strips_pdf: pd.DataFrame) -> None:
     """Paste 1-wide neighbor strips into the ring of a (h+2, w+2) pad."""
@@ -1561,15 +1546,16 @@ def breach_depressions_tiled(dem_tiles: DataFrame, meta: RasterMeta,
                              ckpt_dir: str | None = None) -> DataFrame:
     """Distributed BreachDepressions (full-breach, minimax-path carve).
 
-    Semantics: see the section comment above — W spill fixpoint, D
+    Semantics: see the section comment above — W spill surface, D
     plateau-distance fixpoint, deterministic backlink forest, then
     walkers from every strict interior pit carve min(z, v) with
     v := min(v, z) along the chain to an outlet. Exactly equal to
     `breach_minimax_np` on the assembled grid.
 
-    With `ckpt_dir`, every fixpoint round (W, D, walk) persists with
-    per-partition row metrics and a restarted job resumes from the
-    last completed round (north_rule checkpoint/resume contract).
+    With `ckpt_dir`, W's pass-1 relation (stage ``w``) and every
+    fixpoint round (D, walk) persist with per-partition row metrics, and
+    a restarted job resumes from the last completed pass or round
+    (north_rule checkpoint/resume contract).
 
     Returns long form (row, col, value) of the carved DEM.
     """
@@ -1579,37 +1565,22 @@ def breach_depressions_tiled(dem_tiles: DataFrame, meta: RasterMeta,
     n_ty = math.ceil(rows / tile)
     n_tx = math.ceil(cols / tile)
     INF = np.float64(1e308)
-    from go_spatial_spark.grid import TILE_SCHEMA, tiles_to_long
+    from go_spatial_spark.grid import tiles_to_long
 
-    dem_cached = dem_tiles.cache()
-    dem_cached.count()
+    dem_cached = dem_tiles.localCheckpoint()
     emit_strips = _make_emit_strips(n_ty, n_tx)
-    import os as _os
-    import time as _time
-    _dbg = (print if _os.environ.get("GSS_DEBUG") else (lambda *a: None))
-    _t0 = _time.time()
+    ckpt = CheckpointManager(ckpt_dir) if ckpt_dir is not None else None
 
-    ckpt = None
-    if ckpt_dir is not None:
-        from go_spatial_spark.checkpoint import CheckpointManager
-        ckpt = CheckpointManager(ckpt_dir)
-
-    # ---- phase A: spill surface W (shared fixpoint) -------------------
-    w_tiles = _spill_w_tiles(dem_cached, meta, tile, max_rounds,
-                             ckpt=ckpt, ckpt_prefix="w") \
-        .localCheckpoint()
-    _dbg(f"[breach] W fixpoint {_time.time()-_t0:.1f}s"); _t0 = _time.time()
+    # ---- phase A: spill surface W (the fill's label-graph solve) ------
+    w_tiles = _spill_surface(dem_cached, meta, tile, ckpt, "w",
+                             tile_form=True).localCheckpoint()
 
     # ---- phase B: plateau distance D ---------------------------------
     # static per-tile padded W plane (W halo ring is needed every round
     # to know plateau adjacency across tile edges). One strip exchange.
     def make_wpad(key, w_pdf, strips_pdf):
         if w_pdf.empty:
-            return pd.DataFrame({"ty": pd.Series(dtype="int32"),
-                                 "tx": pd.Series(dtype="int32"),
-                                 "h": pd.Series(dtype="int32"),
-                                 "w": pd.Series(dtype="int32"),
-                                 "data": pd.Series(dtype=object)})
+            return _no_tile()
         t = w_pdf.iloc[0]
         h, w = int(t.h), int(t.w)
         pad = np.full((h + 2, w + 2), nodata, dtype=np.float64)
@@ -1649,60 +1620,45 @@ def breach_depressions_tiled(dem_tiles: DataFrame, meta: RasterMeta,
 
     d_tiles = wpad_tiles.mapInPandas(
         init_d, schema=TILE_SCHEMA).localCheckpoint()
-    _dbg(f"[breach] wpad+initD {_time.time()-_t0:.1f}s"); _t0 = _time.time()
 
-    def make_relax(fnodata):
-        def relax(key, static_pdf, strips_pdf):
-            # static: (wpad, current D); strips: neighbor D ring
-            if static_pdf.empty:
-                return pd.DataFrame({"ty": pd.Series(dtype="int32"),
-                                     "tx": pd.Series(dtype="int32"),
-                                     "h": pd.Series(dtype="int32"),
-                                     "w": pd.Series(dtype="int32"),
-                                     "data": pd.Series(dtype=object)})
-            t = static_pdf.iloc[0]
-            h, w = int(t.h), int(t.w)
-            wpad = np.frombuffer(t.wpad, dtype=np.float64).reshape(
-                h + 2, w + 2)
-            D = np.frombuffer(t.ddata, dtype=np.float64).reshape(
-                h, w).copy()
-            dpad = np.full((h + 2, w + 2), INF, dtype=np.float64)
-            _paste_ring(dpad, h, w, strips_pdf)
-            Wt = wpad[1:-1, 1:-1]
-            valid = Wt != nodata
-            heap = []
-            Wsh = shifts8(wpad)
-            # ring-only D shifts: interior of dpad is INF (only ring
-            # holds neighbor values), so relaxation from own interior
-            # uses D directly below
-            Dsh = shifts8(dpad)
-            cand = D.copy()
+    def relax(key, static_pdf, strips_pdf):
+        # static: (wpad, current D); strips: neighbor D ring
+        if static_pdf.empty:
+            return _no_tile()
+        t = static_pdf.iloc[0]
+        h, w = int(t.h), int(t.w)
+        wpad = np.frombuffer(t.wpad, dtype=np.float64).reshape(h + 2, w + 2)
+        dpad = np.full((h + 2, w + 2), INF, dtype=np.float64)
+        _paste_ring(dpad, h, w, strips_pdf)
+        Wt = wpad[1:-1, 1:-1]
+        valid = Wt != nodata
+        Wsh = shifts8(wpad)
+        # ring-only D shifts: interior of dpad is INF (only the ring holds
+        # neighbor values), so relaxation from own interior starts at D
+        Dsh = shifts8(dpad)
+        cand = np.frombuffer(t.ddata, dtype=np.float64).reshape(h, w).copy()
+        for n in range(8):
+            ok = valid & (Wsh[n] == Wt) & (Dsh[n] < INF) & \
+                (Dsh[n] != nodata)
+            np.minimum(cand, np.where(ok, Dsh[n] + 1.0, INF),
+                       out=cand, where=valid)
+        rr, cc = np.nonzero(valid & (cand < INF))
+        heap = list(zip(cand[rr, cc].tolist(), rr.tolist(), cc.tolist()))
+        heapq.heapify(heap)
+        Dn = np.where(valid, INF, nodata)
+        while heap:
+            dv, r, c = heapq.heappop(heap)
+            if dv >= Dn[r, c]:
+                continue
+            Dn[r, c] = dv
             for n in range(8):
-                ok = valid & (Wsh[n] == Wt) & (Dsh[n] < INF) & \
-                    (Dsh[n] != nodata)
-                np.minimum(cand, np.where(ok, Dsh[n] + 1.0, INF),
-                           out=cand, where=valid)
-            rr, cc = np.nonzero(valid & (cand < INF))
-            for i in range(len(rr)):
-                heapq.heappush(heap, (cand[rr[i], cc[i]],
-                                      int(rr[i]), int(cc[i])))
-            Dn = np.where(valid, INF, fnodata)
-            while heap:
-                dv, r, c = heapq.heappop(heap)
-                if dv >= Dn[r, c]:
-                    continue
-                Dn[r, c] = dv
-                for n in range(8):
-                    rn, cn = r + DY[n], c + DX[n]
-                    if 0 <= rn < h and 0 <= cn < w and valid[rn, cn] \
-                            and Wt[rn, cn] == Wt[r, c] \
-                            and dv + 1.0 < Dn[rn, cn]:
-                        heapq.heappush(heap, (dv + 1.0, rn, cn))
-            return pd.DataFrame({"ty": [int(key[0])],
-                                 "tx": [int(key[1])],
-                                 "h": [h], "w": [w],
-                                 "data": [Dn.tobytes()]})
-        return relax
+                rn, cn = r + DY[n], c + DX[n]
+                if 0 <= rn < h and 0 <= cn < w and valid[rn, cn] \
+                        and Wt[rn, cn] == Wt[r, c] \
+                        and dv + 1.0 < Dn[rn, cn]:
+                    heapq.heappush(heap, (dv + 1.0, rn, cn))
+        return pd.DataFrame({"ty": [int(key[0])], "tx": [int(key[1])],
+                             "h": [h], "w": [w], "data": [Dn.tobytes()]})
 
     def sig_fn(it):
         tot = 0.0
@@ -1744,7 +1700,7 @@ def breach_depressions_tiled(dem_tiles: DataFrame, meta: RasterMeta,
                     F.col("dd.data").alias("ddata")))
         built = (static_wd.groupBy("ty", "tx")
                  .cogroup(d_strips.groupBy("ty", "tx"))
-                 .applyInPandas(make_relax(nodata), schema=TILE_SCHEMA))
+                 .applyInPandas(relax, schema=TILE_SCHEMA))
         # materialize + truncate per-round lineage (measured: the
         # cached variant re-analyzed + partially recomputed the whole
         # chain, 13x slower per round and growing); with ckpt the round
@@ -1756,7 +1712,6 @@ def breach_depressions_tiled(dem_tiles: DataFrame, meta: RasterMeta,
             new_d = built.localCheckpoint()
         sig = sig_of(new_d)
         d_tiles = new_d
-        _dbg(f"[breach] D round sig={sig} {_time.time()-_t0:.1f}s")
         if sig == prev_sig:
             if ckpt is not None:
                 ckpt.mark_converged("d", _rnd_d)
@@ -1767,11 +1722,7 @@ def breach_depressions_tiled(dem_tiles: DataFrame, meta: RasterMeta,
     def make_backlinks(key, static_pdf, strips_pdf):
         # static: (wpad, zpad-interior dem, final D); strips: D ring
         if static_pdf.empty:
-            return pd.DataFrame({"ty": pd.Series(dtype="int32"),
-                                 "tx": pd.Series(dtype="int32"),
-                                 "h": pd.Series(dtype="int32"),
-                                 "w": pd.Series(dtype="int32"),
-                                 "data": pd.Series(dtype=object)})
+            return _no_tile()
         t = static_pdf.iloc[0]
         ty, tx = int(key[0]), int(key[1])
         h, w = int(t.h), int(t.w)
@@ -1787,12 +1738,9 @@ def breach_depressions_tiled(dem_tiles: DataFrame, meta: RasterMeta,
         valid = Wt != nodata
         r0, c0 = ty * tile, tx * tile
         # global flat index of each neighbor
-        gr = np.arange(r0, r0 + h, dtype=np.int64)[:, None] + \
-            np.zeros(w, dtype=np.int64)[None, :]
-        gc = np.zeros(h, dtype=np.int64)[:, None] + \
-            np.arange(c0, c0 + w, dtype=np.int64)[None, :]
+        gr, gc = np.indices((h, w), dtype=np.int64)
+        gr, gc = gr + r0, gc + c0
         Wsh, Dsh, Zsh = shifts8(wpad), shifts8(dpad), shifts8(zpad)
-        Dt = D
         outlet = np.zeros((h, w), dtype=bool)
         for n in range(8):
             outlet |= Wsh[n] == nodata
@@ -1805,7 +1753,7 @@ def breach_depressions_tiled(dem_tiles: DataFrame, meta: RasterMeta,
             Wn, Dn_, zn = Wsh[n], Dsh[n], Zsh[n]
             idxn = (gr + DY[n]) * np.int64(cols) + (gc + DX[n])
             mask = valid & ~outlet & (Wn != nodata) & (
-                (Wn < Wt) | ((Wn == Wt) & (Dn_ < Dt)))
+                (Wn < Wt) | ((Wn == Wt) & (Dn_ < D)))
             better = mask & (
                 (Wn < bW) | ((Wn == bW) & (
                     (Dn_ < bD) | ((Dn_ == bD) & (
@@ -1844,7 +1792,6 @@ def breach_depressions_tiled(dem_tiles: DataFrame, meta: RasterMeta,
         bl_tiles = ckpt.run_stage(spark, "backlinks", lambda: bl_built)
     else:
         bl_tiles = bl_built.localCheckpoint()
-    _dbg(f"[breach] backlinks {_time.time()-_t0:.1f}s"); _t0 = _time.time()
 
     # pit seeds: strict interior local minima (all 8 neighbors valid
     # and strictly higher) — vectorized over the padded DEM plane
@@ -1945,10 +1892,7 @@ def breach_depressions_tiled(dem_tiles: DataFrame, meta: RasterMeta,
         start_round = (max_rounds * max(n_ty, n_tx)) if done is not None \
             else (rounds[-1] + 1 if rounds else 0)
     for _rnd in range(start_round, max_rounds * max(n_ty, n_tx)):
-        n_live = worklist.count()
-        _dbg(f"[breach] walk round {_rnd} live={n_live} "
-             f"{_time.time()-_t0:.1f}s"); _t0 = _time.time()
-        if n_live == 0:
+        if worklist.count() == 0:
             if ckpt is not None:
                 ckpt.mark_converged("walk", _rnd - 1)
             break
@@ -2025,7 +1969,7 @@ def fill_invariants(dem: DataFrame, meta: RasterMeta,
 
     * n_cells — valid-cell count (oracle: genuine count);
     * n_depression_cells — cells strictly below the minimax spill W,
-      with W from the independent distributed fixpoint
+      with W from the independent distributed label-graph solve
       (fill_depressions_tiled); the oracle recomputes W via its own
       recursive CTE — a genuine cross-engine check;
     * n_lowered = 0 — an epsilon-fill never lowers a cell (out is

@@ -135,11 +135,21 @@ def test_d8_flow_accum_edge_shapes(spark, case):
     assert field.get(cm).size() <= cached
 
 
+def _cached_plans(spark):
+    """CacheManager entries; an operator call must not add any."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    return field.get(cm).size()
+
+
 def test_fd8_flow_accum_distributed(spark):
     dem_np = synthetic_dem_numpy(ROWS, COLS)
     want = H.fd8_accum_np(dem_np)
     tiles = long_to_tiles(synthetic_dem(spark, ROWS, COLS), META, tile=TILE)
+    cached = _cached_plans(spark)
     got = _collect(H.fd8_flow_accum(tiles, META, tile=TILE), "accum")
+    assert _cached_plans(spark) <= cached
     valid = dem_np != NODATA
     # FD8 float sums are order-dependent across the tile boundary —
     # compare with tight tolerance (module docstring)
@@ -216,12 +226,75 @@ def test_fill_depressions_tiled_exact(spark):
     dem_np = synthetic_dem_numpy(ROWS, COLS)
     want = golden_minimax_fill(dem_np)
     tiles = long_to_tiles(synthetic_dem(spark, ROWS, COLS), META, tile=TILE)
+    cached = _cached_plans(spark)
     got = _collect(H.fill_depressions_tiled(tiles, META, tile=TILE),
                    "filled")
     assert np.array_equal(got, want)
+    assert _cached_plans(spark) <= cached
     # filling is monotone and bounded by the global max
     valid = dem_np != NODATA
     assert np.all(got[valid] >= dem_np[valid])
+
+
+def _corner_basin(n=12, tile=6):
+    """A basin in the tile south-east of a four-tile corner whose only
+    spill is the diagonal step across that corner into a channel that
+    runs to the grid corner; everything else is a higher plateau."""
+    dem = np.full((n, n), 9.0)
+    dem[tile:tile + 3, tile:tile + 3] = 2.0
+    dem[tile, tile] = 1.0
+    dem[tile - 1, tile - 1] = 3.0  # the diagonal step
+    for i in range(tile - 1):
+        dem[i, i] = 1.5
+    return dem
+
+
+def _walled_plateau(rows=13, cols=17):
+    """A flat plateau crossing tile edges inside a wall, with pits, and
+    one gap in the wall as its only outlet below the wall height."""
+    dem = np.full((rows, cols), 5.0)
+    dem[[0, -1], :] = 9.0
+    dem[:, [0, -1]] = 9.0
+    dem[rows // 2, -1] = 6.0
+    dem[3, 3] = dem[rows - 4, cols - 5] = 4.0
+    return dem
+
+
+FILL_EDGE_CASES = {
+    **D8_EDGE_CASES,
+    "corner_basin_12_t6": (_corner_basin, 6, True),
+    "walled_plateau_13x17_t4": (_walled_plateau, 4, True),
+}
+
+
+@pytest.mark.parametrize("case", sorted(FILL_EDGE_CASES))
+def test_fill_tiled_edge_shapes(spark, case):
+    make, tile, keep_empty = FILL_EDGE_CASES[case]
+    dem = make()
+    rows, cols = dem.shape
+    meta = RasterMeta(rows=rows, cols=cols)
+    cached = _cached_plans(spark)
+    got = _collect(H.fill_depressions_tiled(
+        _np_tiles(spark, dem, tile, keep_empty), meta, tile=tile),
+        "filled", rows, cols)
+    assert np.array_equal(got, golden_minimax_fill(dem))
+    assert _cached_plans(spark) <= cached
+
+
+def test_fill_tiled_job_count(spark):
+    """The label-graph solve takes a fixed number of Spark jobs, final
+    collect included, however many tile edges a spill path crosses."""
+    sc = spark.sparkContext
+    tiles = long_to_tiles(synthetic_dem(spark, ROWS, COLS), META, tile=TILE)
+    sc.setJobGroup("fill_tiled_jobs", "fill_depressions_tiled")
+    try:
+        got = _collect(H.fill_depressions_tiled(tiles, META, tile=TILE),
+                       "filled")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert np.array_equal(
+        got, golden_minimax_fill(synthetic_dem_numpy(ROWS, COLS)))
+    assert len(sc.statusTracker().getJobIdsForGroup("fill_tiled_jobs")) <= 5
 
 
 def test_breach_selective_nonbinding_equals_full():
@@ -340,37 +413,59 @@ def test_breach_tiled_matches_replay(spark):
     want = H.breach_minimax_np(dem_np)
     tiles = long_to_tiles(synthetic_dem(spark, ROWS, COLS), META,
                           tile=TILE)
+    cached = _cached_plans(spark)
     got = _collect(H.breach_depressions_tiled(tiles, META, tile=TILE),
                    "value")
     assert np.array_equal(got, want)
+    assert _cached_plans(spark) <= cached
     assert _strict_pits(got) == 0
 
 
-def test_fill_tiled_checkpoint_resume(spark, tmp_path):
-    """Kill/resume contract: a run capped at 1 round leaves a round-0
-    checkpoint; the restarted run resumes from round 1 (round 0 is
-    never rebuilt) and converges to the exact no-checkpoint result."""
+@pytest.mark.parametrize("case", ["ragged_33x65_t16", "nodata_tile_absent",
+                                  "corner_basin_12_t6"])
+def test_breach_tiled_edge_shapes(spark, case):
+    make, tile, keep_empty = FILL_EDGE_CASES[case]
+    dem = make()
+    rows, cols = dem.shape
+    meta = RasterMeta(rows=rows, cols=cols)
+    cached = _cached_plans(spark)
+    got = _collect(H.breach_depressions_tiled(
+        _np_tiles(spark, dem, tile, keep_empty), meta, tile=tile),
+        "value", rows, cols)
+    assert np.array_equal(got, H.breach_minimax_np(dem))
+    assert _cached_plans(spark) <= cached
+
+
+def _kill_driver_solve(monkeypatch):
+    """Simulate a driver killed after pass 1 of the spill surface."""
+    def killed(*args):
+        raise RuntimeError("killed in the driver solve")
+    monkeypatch.setattr(H, "_spill_solve", killed)
+
+
+def test_fill_tiled_checkpoint_resume(spark, tmp_path, monkeypatch):
+    """Kill/resume contract: a run killed in the driver solve leaves its
+    persisted pass-1 relation; the restarted run resumes from it (pass 1
+    is never rebuilt) and equals the no-checkpoint result."""
     ck = str(tmp_path / "fill_ck")
     tiles = long_to_tiles(synthetic_dem(spark, ROWS, COLS), META,
                           tile=TILE)
     want = _collect(H.fill_depressions_tiled(tiles, META, tile=TILE),
                     "filled")
-    # simulated kill after one round
-    H.fill_depressions_tiled(tiles, META, tile=TILE, max_rounds=1,
-                             ckpt_dir=ck).count()
+    with monkeypatch.context() as m:
+        _kill_driver_solve(m)
+        with pytest.raises(RuntimeError, match="killed"):
+            H.fill_depressions_tiled(tiles, META, tile=TILE, ckpt_dir=ck)
     from go_spatial_spark.checkpoint import CheckpointManager
     cm = CheckpointManager(ck)
-    assert cm.completed_rounds("fill_w") == [0]
-    # resume to convergence
+    assert cm.has_stage("fill_w")
     got = _collect(H.fill_depressions_tiled(tiles, META, tile=TILE,
                                             ckpt_dir=ck), "filled")
     assert np.array_equal(got, want)
-    stages = [m["stage"] for m in cm.metrics()]
-    assert stages.count("fill_w/round=0") == 1  # round 0 not rebuilt
-    assert cm.converged_round("fill_w") is not None
-    # every persisted round carries per-partition lineage metrics
+    assert stages_count(cm, "fill_w") == 1  # pass 1 not rebuilt
+    # every persisted stage carries per-partition lineage metrics
     assert all("partition_rows" in m for m in cm.metrics())
-    # a third run short-circuits on the converged marker: no new stages
+    # a third run reads the completed pass: no new stages
     n_stages = len(cm.metrics())
     got2 = _collect(H.fill_depressions_tiled(tiles, META, tile=TILE,
                                              ckpt_dir=ck), "filled")
@@ -378,26 +473,26 @@ def test_fill_tiled_checkpoint_resume(spark, tmp_path):
     assert len(cm.metrics()) == n_stages
 
 
-def test_breach_tiled_checkpoint_resume(spark, tmp_path):
-    """Same contract for the breach pipeline: partial W checkpoint ->
-    full resumed run equals the no-checkpoint (and replay) output."""
+def test_breach_tiled_checkpoint_resume(spark, tmp_path, monkeypatch):
+    """Same contract for the breach pipeline: a run killed in W's driver
+    solve -> the resumed run equals the no-checkpoint (and replay)
+    output without rebuilding W's pass 1."""
     ck = str(tmp_path / "breach_ck")
     dem_np = synthetic_dem_numpy(ROWS, COLS)
     want = H.breach_minimax_np(dem_np)
     tiles = long_to_tiles(synthetic_dem(spark, ROWS, COLS), META,
                           tile=TILE)
-    # simulated kill inside the W fixpoint (only w/round=0 persisted)
+    with monkeypatch.context() as m:
+        _kill_driver_solve(m)
+        with pytest.raises(RuntimeError, match="killed"):
+            H.breach_depressions_tiled(tiles, META, tile=TILE, ckpt_dir=ck)
     from go_spatial_spark.checkpoint import CheckpointManager
-    dem_cached = tiles.cache()
-    dem_cached.count()
-    H._spill_w_tiles(dem_cached, META, TILE, max_rounds=1,
-                     ckpt=CheckpointManager(ck), ckpt_prefix="w").count()
     cm = CheckpointManager(ck)
-    assert cm.completed_rounds("w") == [0]
+    assert cm.has_stage("w")
     got = _collect(H.breach_depressions_tiled(tiles, META, tile=TILE,
                                               ckpt_dir=ck), "value")
     assert np.array_equal(got, want)
-    assert stages_count(cm, "w/round=0") == 1
+    assert stages_count(cm, "w") == 1
     assert cm.converged_round("walk") is not None
 
 
