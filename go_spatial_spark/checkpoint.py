@@ -9,12 +9,12 @@ each stage, a row goes to `<dir>/_metrics.jsonl` with row count,
 per-partition row counts (lineage at partition/tile granularity), and
 wall time.
 
-The tiled hydrology operators checkpoint with `ckpt_dir`: fill
-persists the pass-1 relation of its perimeter-graph solve as one stage,
-so a killed run resumes from that completed pass; breach does the same
-for its spill surface, then checkpoints its remaining fixpoints per
-*round* ("<name>/round=<k>"), resuming from the last completed round.
-Flow accumulation does not checkpoint.
+The tiled hydrology operators checkpoint with `ckpt_dir`: each of their
+perimeter-graph solves persists its pass-1 relation as one stage (fill:
+`fill_w`; breach: `w`, `d` and `walk`), so a killed run resumes from the
+completed passes and reruns only the driver solves and the passes after
+them. Nothing persists per round: flow accumulation, FD8's round
+fixpoint included, does not checkpoint.
 """
 
 from __future__ import annotations
@@ -69,34 +69,6 @@ class CheckpointManager:
         out = self.read_stage(spark, name)
         self._record(name, out, time.perf_counter() - t0)
         return out
-
-    # -- per-round helpers for the iterative fixpoint operators --------
-
-    def completed_rounds(self, prefix: str) -> list[int]:
-        """Round numbers with a completed `<prefix>/round=<k>` stage."""
-        d = self._path(prefix)
-        if not os.path.isdir(d):
-            return []
-        out = []
-        for name in os.listdir(d):
-            if name.startswith("round=") and self.has_stage(
-                    os.path.join(prefix, name)):
-                out.append(int(name.split("=", 1)[1]))
-        return sorted(out)
-
-    def converged_round(self, prefix: str) -> int | None:
-        """Final round number if the fixpoint already converged."""
-        p = os.path.join(self._path(prefix), "_converged")
-        if os.path.exists(p):
-            with open(p) as f:
-                return int(f.read().strip())
-        return None
-
-    def mark_converged(self, prefix: str, rnd: int) -> None:
-        os.makedirs(self._path(prefix), exist_ok=True)
-        with open(os.path.join(self._path(prefix), "_converged"),
-                  "w") as f:
-            f.write(str(rnd))
 
     def metrics(self) -> list[dict]:
         if not os.path.exists(self.metrics_path):

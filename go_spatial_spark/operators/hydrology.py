@@ -18,23 +18,25 @@ Two execution paths, per SURVEY.md §2.5 / §7:
     (first-max-wins over n=0..7, dist=[diag,cx,diag,cy,...]), FIFO
     topological sweep, init value 1.
 
-- **distributed path** (the 100 TB design): D8 accumulation and the
-  epsilon-0 fill surface run as two-pass perimeter-graph solves
-  (R. Barnes, Environ. Model. Softw. 2017 and Computers & Geosciences
-  2016) in a fixed number of Spark jobs, however many tile edges a flow
-  path crosses (`_perimeter_solve`). Pass 1 solves each tile locally
-  and emits its perimeter relation; the driver solves that small graph
-  once (O(n_tiles * 4 * tile) rows); pass 2 finishes each tile with the
-  solved inputs. D8 sums are integer-valued and the fill surface takes
-  input elevations, so both are bit-identical to their single-node
-  oracles. FD8 and breach phases B-D still iterate an inter-tile
-  fixpoint, one checkpointed round at a time.
+- **distributed path** (the 100 TB design): D8 accumulation, the
+  epsilon-0 fill surface and the minimax-path breach run as two-pass
+  perimeter-graph solves (R. Barnes, Environ. Model. Softw. 2017 and
+  Computers & Geosciences 2016) in a fixed number of Spark jobs, however
+  many tile edges a flow path crosses (`_perimeter_solve`). Pass 1
+  solves each tile locally and emits its perimeter relation; the driver
+  solves that small graph once (O(n_tiles * 4 * tile) rows, more on
+  flat plateaus for breach); pass 2 finishes each tile with the solved
+  inputs. D8 sums are integer-valued, and the fill and breach surfaces
+  take input elevations, so all are bit-identical to their single-node
+  oracles. FD8 still iterates an inter-tile fixpoint, one round at a
+  time.
 """
 
 from __future__ import annotations
 
 import heapq
 import math
+import operator
 import sys
 
 import numpy as np
@@ -271,27 +273,54 @@ def _tile_graph(dirs: np.ndarray, nodata: float):
     return valid, np.where(inside & (d > 0), tr * w + tc, -1), ~inside, tr, tc
 
 
-def _accumulate(nxt: np.ndarray, acc: np.ndarray) -> np.ndarray:
-    """Add every node's mass into everything downstream of it, over a
+def _passed(acc: np.ndarray, cap: np.ndarray | None, idx: np.ndarray
+            ) -> np.ndarray:
+    """What nodes ``idx`` pass downstream: all they hold (no ``cap``), or
+    min(acc, cap), nothing while they hold +inf (the breach carve)."""
+    if cap is None:
+        return acc[idx]
+    return np.where(acc[idx] < np.inf, np.minimum(acc[idx], cap[idx]),
+                    acc[idx])
+
+
+def _accumulate(nxt: np.ndarray, acc: np.ndarray,
+                cap: np.ndarray | None = None) -> np.ndarray:
+    """Push every node's value into everything downstream of it, over a
     forest of receiver indices (-1 = root), one frontier of ready nodes
-    per step (Kahn). Integer-valued float64 sums are exact in any order."""
+    per step (Kahn). Without ``cap`` receivers add (D8 mass;
+    integer-valued float64 sums are exact in any order); with it they
+    keep the minimum of what `_passed` hands them (the breach carve)."""
+    join = np.add if cap is None else np.minimum
     has = nxt >= 0
     indeg = np.bincount(nxt[has], minlength=nxt.size)
     front = np.flatnonzero(has & (indeg == 0))
     while front.size:
-        np.add.at(acc, nxt[front], acc[front])
+        join.at(acc, nxt[front], _passed(acc, cap, front))
         tgt, n = np.unique(nxt[front], return_counts=True)
         indeg[tgt] -= n
         front = tgt[has[tgt] & (indeg[tgt] == 0)]
     return acc
 
 
-def _path_ends(nxt: np.ndarray) -> np.ndarray:
-    """Root of every node's path (pointer doubling)."""
+def _path_ends(nxt: np.ndarray, cap: np.ndarray | None = None):
+    """Root of every node's path (pointer doubling) and, with ``cap``,
+    the lowest cap along it, both ends included (else None)."""
     end = np.where(nxt >= 0, nxt, np.arange(nxt.size))
+    low = None if cap is None else np.minimum(cap, cap[end])
     while not np.array_equal(end[end], end):
+        if low is not None:
+            low = np.minimum(low, low[end])
         end = end[end]
-    return end
+    return end, low
+
+
+def _by_tile(key: np.ndarray, n_tx: int, *arrays) -> dict:
+    """Split arrays by tile key ``ty * n_tx + tx``, keeping their order:
+    {(ty, tx): the arrays' entries of that tile}."""
+    order = np.argsort(key, kind="stable")
+    keys, first = np.unique(key[order], return_index=True)
+    return {divmod(int(k), n_tx): tuple(a[idx] for a in arrays)
+            for k, idx in zip(keys, np.split(order, first[1:]))}
 
 
 def _perimeter_solve(tiles: DataFrame, boundary, rel_schema: str, solve,
@@ -328,6 +357,74 @@ def _perimeter_solve(tiles: DataFrame, boundary, rel_schema: str, solve,
         schema=out_schema)
 
 
+# Pass 1 of a forest solve emits one row per exit cell (src = -1: the
+# value it passes on, landing on the out-of-tile cell dst) and one per
+# valid perimeter cell whose in-tile path leaves the tile (dst: where
+# the path lands; val: the lowest cap on the way, 0 without one).
+_FOREST_SCHEMA = "src long, dst long, val double"
+
+
+def _forest_boundary(t, tile: int, cols: int, graph, acc: np.ndarray,
+                     cap: np.ndarray | None = None) -> pd.DataFrame:
+    """Pass 1 of a forest solve over one tile's `_tile_graph`: its local
+    sweep of ``acc`` as `_FOREST_SCHEMA` rows."""
+    valid, nxt, exits, tr, tc = graph
+    r0, c0 = t.ty * tile, t.tx * tile
+    acc = _accumulate(nxt, acc, cap)
+    land = (tr + r0) * cols + tc + c0
+    rr, cc = np.divmod(np.arange(nxt.size), t.w)
+    perim = np.flatnonzero(valid & ((rr == 0) | (rr == t.h - 1)
+                                    | (cc == 0) | (cc == t.w - 1)))
+    end, low = _path_ends(nxt, cap)
+    perim = perim[exits[end[perim]]]
+    ex = np.flatnonzero(exits)
+    return pd.DataFrame({
+        "src": np.r_[np.full(ex.size, -1),
+                     (rr[perim] + r0) * cols + cc[perim] + c0],
+        "dst": np.r_[land[ex], land[end[perim]]],
+        "val": np.r_[_passed(acc, cap, ex),
+                     np.zeros(perim.size) if cap is None else low[perim]]})
+
+
+def _forest_solve(rel: pd.DataFrame, meta: RasterMeta, tile: int,
+                  carve: bool = False) -> dict:
+    """Driver half of a forest solve: the landing cells are the nodes,
+    each linked to where its in-tile path lands next. Their inflow
+    ``I(L) = base(L) + sum(I(p) for p with next(p) = L)`` (D8), or with
+    ``carve`` the minimum of base(L) and of what each such p passes on
+    past the lowest z of its path. Returns {(ty, tx): (cells, inflow)}."""
+    src, dst, val = (rel[k].to_numpy() for k in ("src", "dst", "val"))
+    lands = src < 0
+    nodes, inv = np.unique(dst[lands], return_inverse=True)
+    # every path row ends at an exit cell, so its dst is a node too
+    path = ~lands & np.isin(src, nodes)
+    at = np.searchsorted(nodes, src[path])
+    nxt = np.full(nodes.size, -1)
+    nxt[at] = np.searchsorted(nodes, dst[path])
+    if carve:
+        inflow, cap = np.full(nodes.size, np.inf), np.full(nodes.size, np.inf)
+        np.minimum.at(inflow, inv, val[lands])
+        cap[at] = val[path]
+    else:
+        inflow = np.bincount(inv, weights=val[lands], minlength=nodes.size)
+        cap = None
+    nr, nc = np.divmod(nodes, meta.cols)
+    n_tx = math.ceil(meta.cols / tile)
+    return _by_tile(nr // tile * n_tx + nc // tile, n_tx, nodes,
+                    _accumulate(nxt, inflow, cap))
+
+
+def _forest_finish(t, tile: int, cols: int, graph, acc: np.ndarray,
+                   inflow, cap: np.ndarray | None = None) -> np.ndarray:
+    """Pass 2 of a forest solve: the tile's sweep of ``acc`` again, with
+    the solved inflows joined in at their cells."""
+    if inflow is not None:
+        g, v = inflow
+        at = (g // cols - t.ty * tile) * t.w + g % cols - t.tx * tile
+        acc[at] = acc[at] + v if cap is None else np.minimum(acc[at], v)
+    return _accumulate(graph[1], acc, cap)
+
+
 def d8_flow_accum(dem_tiles: DataFrame, meta: RasterMeta,
                   tile: int = 256) -> DataFrame:
     """Distributed D8 accumulation as a two-pass boundary-graph solve
@@ -336,71 +433,35 @@ def d8_flow_accum(dem_tiles: DataFrame, meta: RasterMeta,
 
     Pointer tiles come from one halo-1 stencil. Pass 1 accumulates each
     tile locally and emits, for each exit cell, its local mass and the
-    out-of-tile cell it lands on (``src = -1``), and for each valid
-    perimeter cell the landing cell its in-tile path exits to. The
-    driver solves the perimeter forest once:
-    ``I(L) = base(L) + sum(I(p) for p with next(p) = L)``. Pass 2 re-runs
-    each tile's sweep with the inflows ``I`` added at their cells.
+    out-of-tile cell it lands on, and for each valid perimeter cell the
+    landing cell its in-tile path exits to (`_forest_boundary`). The
+    driver solves the perimeter forest once (`_forest_solve`). Pass 2
+    re-runs each tile's sweep with the inflows added at their cells.
     """
     cols, nodata = meta.cols, meta.nodata
-    n_tx = math.ceil(cols / tile)
 
     def graph(t):
         dirs = np.frombuffer(t.data, dtype=np.float64).reshape(t.h, t.w)
-        return t.ty * tile, t.tx * tile, _tile_graph(dirs, nodata)
+        return _tile_graph(dirs, nodata)
 
     def boundary(t):
-        r0, c0, (valid, nxt, exits, tr, tc) = graph(t)
-        acc = _accumulate(nxt, valid.astype(np.float64))
-        land = (tr + r0) * cols + tc + c0
-        rr, cc = np.divmod(np.arange(nxt.size), t.w)
-        perim = np.flatnonzero(valid & ((rr == 0) | (rr == rr[-1])
-                                        | (cc == 0) | (cc == t.w - 1)))
-        end = _path_ends(nxt)[perim]
-        perim, end = perim[exits[end]], end[exits[end]]
-        ex = np.flatnonzero(exits)
-        return pd.DataFrame({
-            "src": np.r_[np.full(ex.size, -1), (rr + r0)[perim] * cols
-                         + (cc + c0)[perim]],
-            "dst": np.r_[land[ex], land[end]],
-            "mass": np.r_[acc[ex], np.zeros(perim.size)]})
-
-    def solve(edges):
-        src, dst = edges["src"].to_numpy(), edges["dst"].to_numpy()
-        lands = src < 0
-        nodes, inv = np.unique(dst[lands], return_inverse=True)
-        inflow = np.bincount(inv, weights=edges["mass"].to_numpy()[lands],
-                             minlength=nodes.size)
-        # every path row ends at an exit cell, so its dst is a node too
-        path = ~lands & np.isin(src, nodes)
-        nxt = np.full(nodes.size, -1)
-        nxt[np.searchsorted(nodes, src[path])] = np.searchsorted(
-            nodes, dst[path])
-        inflow = _accumulate(nxt, inflow)
-        nr, nc = np.divmod(nodes, cols)
-        key = nr // tile * n_tx + nc // tile
-        resolved = {}
-        for k in np.unique(key):
-            m = key == k
-            resolved[divmod(int(k), n_tx)] = (nr[m] % tile, nc[m] % tile,
-                                              inflow[m])
-        return resolved
+        g = graph(t)
+        return _forest_boundary(t, tile, cols, g, g[0].astype(np.float64))
 
     def finish(t, inflow):
-        r0, c0, (valid, nxt, _, _, _) = graph(t)
-        acc = valid.astype(np.float64)
-        if inflow is not None:
-            lr, lc, v = inflow
-            acc[lr * t.w + lc] += v
-        idx = np.flatnonzero(valid)
-        return pd.DataFrame({"row": (idx // t.w + r0).astype(np.int32),
-                             "col": (idx % t.w + c0).astype(np.int32),
-                             "accum": _accumulate(nxt, acc)[idx]})
+        g = graph(t)
+        acc = _forest_finish(t, tile, cols, g, g[0].astype(np.float64),
+                             inflow)
+        idx = np.flatnonzero(g[0])
+        return pd.DataFrame({
+            "row": (idx // t.w + t.ty * tile).astype(np.int32),
+            "col": (idx % t.w + t.tx * tile).astype(np.int32),
+            "accum": acc[idx]})
 
     ptr_tiles = run_stencil(dem_tiles, meta, d8_pointer_kernel,
                             halo=1, tile=tile)
-    return _perimeter_solve(ptr_tiles, boundary,
-                            "src long, dst long, mass double", solve,
+    return _perimeter_solve(ptr_tiles, boundary, _FOREST_SCHEMA,
+                            lambda rel: _forest_solve(rel, meta, tile),
                             finish, "row int, col int, accum double")
 
 
@@ -1208,6 +1269,29 @@ def _label_flood(z: np.ndarray, r0: int, c0: int, rows: int, cols: int,
     return np.array(fill), np.array(L), perim, outlet
 
 
+def _dijkstra(dist: list, src: np.ndarray, dst: np.ndarray, wt: np.ndarray,
+              join) -> np.ndarray:
+    """Label-setting search over the directed edges src -> dst from every
+    finite entry of ``dist``: dist[v] = min(dist[v], join(dist[u], wt))
+    by increasing dist[u], with join add (shortest paths) or max
+    (Priority-Flood spill levels)."""
+    adj = [[] for _ in dist]
+    for u, v, w in zip(src.tolist(), dst.tolist(), wt.tolist()):
+        adj[u].append((v, w))
+    heap = [(s, u) for u, s in enumerate(dist) if s < math.inf]
+    heapq.heapify(heap)
+    while heap:
+        s, u = heapq.heappop(heap)
+        if s > dist[u]:
+            continue
+        for v, w in adj[u]:
+            cand = join(s, w)
+            if cand < dist[v]:
+                dist[v] = cand
+                heapq.heappush(heap, (cand, v))
+    return np.array(dist)
+
+
 def _spill_solve(rel: pd.DataFrame, meta: RasterMeta, tile: int) -> dict:
     """Driver half of the spill surface (Barnes 2016, Algorithm 3).
 
@@ -1239,39 +1323,22 @@ def _spill_solve(rel: pd.DataFrame, meta: RasterMeta, tile: int) -> dict:
         eb += [ng[hit], g[out]]
         ew += [np.maximum(z[hit], z[pos[hit]]), z[out]]
     nodes = np.r_[-1, g]
-    adj = [[] for _ in range(nodes.size)]
-    for u, v, wt in zip(np.searchsorted(nodes, np.concatenate(ea)).tolist(),
-                        np.searchsorted(nodes, np.concatenate(eb)).tolist(),
-                        np.concatenate(ew).tolist()):
-        adj[u].append((v, wt))
-        adj[v].append((u, wt))
-    S = [math.inf] * nodes.size
-    S[0] = -math.inf
-    heap = [(-math.inf, 0)]
-    while heap:
-        s, u = heapq.heappop(heap)
-        if s > S[u]:
-            continue
-        for v, wt in adj[u]:
-            cand = s if s > wt else wt
-            if cand < S[v]:
-                S[v] = cand
-                heapq.heappush(heap, (cand, v))
-    S = np.array(S[1:])
+    u = np.searchsorted(nodes, np.concatenate(ea))
+    v = np.searchsorted(nodes, np.concatenate(eb))
+    ew = np.concatenate(ew)
+    S = _dijkstra([-math.inf] + [math.inf] * g.size, np.r_[u, v],
+                  np.r_[v, u], np.r_[ew, ew], max)[1:]
     n_tx = math.ceil(cols / tile)
-    key = r // tile * n_tx + c // tile
-    order = np.argsort(key, kind="stable")
-    keys, first = np.unique(key[order], return_index=True)
-    return {divmod(int(k), n_tx): (g[idx], S[idx])
-            for k, idx in zip(keys, np.split(order, first[1:]))}
+    return _by_tile(r // tile * n_tx + c // tile, n_tx, g, S)
 
 
 def _spill_surface(dem_tiles: DataFrame, meta: RasterMeta, tile: int,
                    ckpt: CheckpointManager | None, stage: str,
                    tile_form: bool = False) -> DataFrame:
     """The epsilon-0 spill surface W on `_perimeter_solve`: long form
-    (row, col, filled), or TILE_SCHEMA tiles with ``tile_form``. With
-    ``ckpt`` the pass-1 relation persists as stage ``stage``."""
+    (row, col, filled), or with ``tile_form`` the DEM tiles with W as an
+    extra plane ``wsurf``. With ``ckpt`` the pass-1 relation persists as
+    stage ``stage``."""
     rows, cols, nodata = meta.rows, meta.cols, meta.nodata
 
     def flood(t):
@@ -1308,7 +1375,8 @@ def _spill_surface(dem_tiles: DataFrame, meta: RasterMeta, tile: int,
                 fill[own], S[np.searchsorted(labels, lab[own])])
         if tile_form:
             return pd.DataFrame({"ty": [t.ty], "tx": [t.tx], "h": [t.h],
-                                 "w": [t.w], "data": [fill.tobytes()]})
+                                 "w": [t.w], "data": [t.data],
+                                 "wsurf": [fill.tobytes()]})
         idx = np.flatnonzero(lab >= -1)
         rr, cc = np.divmod(idx, t.w)
         return pd.DataFrame({"row": (rr + t.ty * tile).astype(np.int32),
@@ -1318,7 +1386,8 @@ def _spill_surface(dem_tiles: DataFrame, meta: RasterMeta, tile: int,
     return _perimeter_solve(
         dem_tiles, boundary, "a long, b long, w double",
         lambda rel: _spill_solve(rel, meta, tile), finish,
-        TILE_SCHEMA if tile_form else "row int, col int, filled double",
+        f"{TILE_SCHEMA}, wsurf binary" if tile_form
+        else "row int, col int, filled double",
         ckpt, stage)
 
 
@@ -1374,10 +1443,9 @@ def fill_depressions_tiled(dem_tiles: DataFrame, meta: RasterMeta,
 # (test_breach_tiled_* asserts this plus exact equality with the
 # single-node replay of the same semantics).
 #
-# W takes a fixed number of jobs. Shuffle profile per round after it:
-# O(perimeter) strips for the D fixpoint; the walker loop moves only
-# live walker rows (#pits at most, shrinking as paths merge — per-cell
-# min-v dominance drops dominated walkers).
+# All three phases run on `_perimeter_solve` (see
+# `breach_depressions_tiled`), so a call takes a fixed number of Spark
+# jobs however far a plateau or a carve path reaches across tiles.
 
 
 def _plateau_distance_np(dem: np.ndarray, W: np.ndarray,
@@ -1486,444 +1554,245 @@ def breach_minimax_np(dem: np.ndarray, nodata: float = NODATA
     return out
 
 
-def _make_emit_strips(n_ty: int, n_tx: int):
-    """1-wide halo strip emitter over TILE_SCHEMA planes (shared by the
-    distributed fixpoints; shuffle volume O(perimeter) per tile)."""
-    from go_spatial_spark.grid import _NEIGHBOR_OFFSETS
-
-    def emit_strips(it):
-        for pdf in it:
-            recs = []
-            for t in pdf.itertuples(index=False):
-                arr = np.frombuffer(t.data, dtype=np.float64).reshape(
-                    t.h, t.w)
-                for dty, dtx in _NEIGHBOR_OFFSETS:
-                    nty, ntx = t.ty + dty, t.tx + dtx
-                    if not (0 <= nty < n_ty and 0 <= ntx < n_tx):
-                        continue
-                    rs = slice(0, min(1, t.h)) if dty < 0 else (
-                        slice(max(0, t.h - 1), t.h) if dty > 0
-                        else slice(0, t.h))
-                    cs = slice(0, min(1, t.w)) if dtx < 0 else (
-                        slice(max(0, t.w - 1), t.w) if dtx > 0
-                        else slice(0, t.w))
-                    strip = np.ascontiguousarray(arr[rs, cs])
-                    recs.append((nty, ntx, -dty, -dtx, strip.shape[0],
-                                 strip.shape[1], strip.tobytes()))
-            if recs:
-                yield pd.DataFrame(recs, columns=[
-                    "ty", "tx", "src_dty", "src_dtx", "h", "w", "data"])
-    return emit_strips
+def _breach_pad(t, tile: int, meta: RasterMeta, ring):
+    """Flat (h+2) x (w+2) planes W, z, D and global cell index of one
+    (z, W) tile and its one-cell ring. The D solve's (g, W, z, D) rows
+    in ``ring`` fill the ring (cells it lacks are NoData) and seed D;
+    with ``ring=None`` (pass 1) the ring cells in the grid read W = +inf,
+    valid but neither lower than nor level with any tile cell."""
+    rows, cols, nodata = meta.rows, meta.cols, meta.nodata
+    r0, c0 = t.ty * tile, t.tx * tile
+    pr = np.arange(r0 - 1, r0 + t.h + 1)[:, None]
+    pc = np.arange(c0 - 1, c0 + t.w + 1)[None, :]
+    ingrid = (pr >= 0) & (pr < rows) & (pc >= 0) & (pc < cols)
+    W = np.where(ingrid & (ring is None), np.inf, nodata)
+    z = np.full(W.shape, nodata)
+    D = np.full(W.shape, np.inf)
+    W[1:-1, 1:-1] = np.frombuffer(t.wsurf, dtype=np.float64).reshape(t.h, t.w)
+    z[1:-1, 1:-1] = np.frombuffer(t.data, dtype=np.float64).reshape(t.h, t.w)
+    if ring is not None:
+        g, rW, rz, rD = ring
+        lr, lc = g // cols - r0 + 1, g % cols - c0 + 1
+        W[lr, lc], z[lr, lc], D[lr, lc] = rW, rz, rD
+    return W.ravel(), z.ravel(), D.ravel(), (pr * cols + pc).ravel()
 
 
-_STRIPS_SCHEMA = ("ty int, tx int, src_dty int, src_dtx int, "
-                  "h int, w int, data binary")
+def _plateau_graph(W: np.ndarray, h: int, w: int, nodata: float):
+    """Plateau structure of a tile from its flat (h+2) x (w+2) W plane
+    with a one-cell ring: the 8 x n flat neighbour indices, the equal-W
+    edges between valid tile cells, and the masks of the valid tile
+    cells, of its drops (an outlet or a lower-W neighbour: D = 0) and of
+    its valid perimeter cells."""
+    inner = np.zeros((h + 2, w + 2), dtype=bool)
+    inner[1:-1, 1:-1] = True
+    inner = inner.ravel()
+    step = np.array(DY) * (w + 2) + np.array(DX)
+    nbr = np.clip(np.arange(W.size) + step[:, None], 0, W.size - 1)
+    Wn = W[nbr]
+    valid = inner & (W != nodata)
+    same = valid & inner[nbr] & (Wn == W)
+    drop = valid & ((Wn == nodata) | (Wn < W)).any(axis=0)
+    perim = valid & ~inner[nbr].all(axis=0)
+    return nbr, same, valid, drop, perim
 
 
-def _no_tile() -> pd.DataFrame:
-    """Empty TILE_SCHEMA frame, for a cogroup key with no tile."""
-    return pd.DataFrame({k: pd.Series(dtype="int32")
-                         for k in ("ty", "tx", "h", "w")}
-                        | {"data": pd.Series(dtype=object)})
+def _plateau_bfs(nbr: np.ndarray, same: np.ndarray, d: np.ndarray
+                 ) -> np.ndarray:
+    """Unit-step distances along the ``same`` edges (8 x n, to ``nbr``)
+    from every finite entry of ``d``, each seed starting at its own
+    value, in increasing distance order; updates ``d`` in place."""
+    k = d.min(initial=np.inf)
+    while k < np.inf:
+        front = np.flatnonzero(d == k)
+        nb = nbr[:, front][same[:, front]]
+        d[nb[d[nb] > k + 1]] = k + 1
+        k = d[d > k].min(initial=np.inf)
+    return d
 
 
-def _paste_ring(pad: np.ndarray, h: int, w: int,
-                strips_pdf: pd.DataFrame) -> None:
-    """Paste 1-wide neighbor strips into the ring of a (h+2, w+2) pad."""
-    for srow in strips_pdf.itertuples(index=False):
-        sa = np.frombuffer(srow.data, dtype=np.float64).reshape(
-            srow.h, srow.w)
-        dty, dtx = int(srow.src_dty), int(srow.src_dtx)
-        rs = slice(0, 1) if dty < 0 else (
-            slice(h + 1, h + 2) if dty > 0 else slice(1, 1 + sa.shape[0]))
-        cs = slice(0, 1) if dtx < 0 else (
-            slice(w + 1, w + 2) if dtx > 0 else slice(1, 1 + sa.shape[1]))
-        pad[rs, cs] = sa
+def _perimeter_distances(nbr: np.ndarray, same: np.ndarray, ld: np.ndarray,
+                         perim: np.ndarray):
+    """In-tile plateau distances d(p, q) between perimeter cells where
+    they beat p's own distance ``ld`` to a drop, the only ones Dijkstra
+    over the perimeter can use. One BFS carries a bit per source q (a
+    perimeter cell with ld > 0); a cell passes a wave on only while its
+    level is below its own ld. That loses no kept pair: the cell i steps
+    from q on a shortest path to p has ld > i, since d(q, p) < ld[p] <=
+    its ld + d(q, p) - i. Returns flat index arrays (p, q) and their
+    distances d."""
+    src = np.flatnonzero(perim & (ld > 0))
+    j = np.arange(src.size)
+    reach = np.zeros((ld.size, -(-src.size // 64)), dtype=np.uint64)
+    reach[src, j // 64] = np.left_shift(np.uint64(1),
+                                        (j % 64).astype(np.uint64))
+    new, hit = np.zeros_like(reach), np.zeros(ld.size, dtype=bool)
+    front, bits, k = src, reach[src], 0
+    out = [np.empty((3, 0), dtype=np.int64)]
+    while front.size:
+        for n in range(8):
+            m = same[n, front]
+            tgt = nbr[n, front[m]]  # distinct per direction
+            new[tgt] |= bits[m]
+            hit[tgt] = True
+        tgt = np.flatnonzero(hit)
+        hit[tgt] = False
+        bits = new[tgt] & ~reach[tgt]
+        new[tgt] = 0
+        k += 1
+        keep = (ld[tgt] > k) & bits.any(axis=1)
+        front, bits = tgt[keep], bits[keep]
+        reach[front] |= bits
+        at = perim[front]
+        pi, qj = np.nonzero(np.unpackbits(bits[at].view(np.uint8), axis=1,
+                                          bitorder="little"))
+        out.append(np.stack([front[at][pi], src[qj], np.full(pi.size, k)]))
+    return np.concatenate(out, axis=1)
+
+
+def _plateau_solve(rel: pd.DataFrame, meta: RasterMeta, tile: int) -> dict:
+    """Driver half of the plateau distance D.
+
+    ``rel`` holds a == b rows (perimeter cell a: its distance d to a
+    drop inside its tile, W and z) and a != b rows (a reaches perimeter
+    cell b of its tile in d steps on its plateau). A perimeter cell is
+    also a drop when an 8-neighbour in another tile is lower in W or
+    missing from the relation (NoData or an absent tile); level
+    neighbours in other tiles are one step apart. Dijkstra gives every
+    perimeter cell its D. Returns, per tile, the (g, W, z, D) rows of
+    the perimeter cells in it and in its one-cell ring."""
+    rows, cols = meta.rows, meta.cols
+    a, b, d, wv, zv = (rel[k].to_numpy() for k in ("a", "b", "d", "w", "z"))
+    own = a == b
+    order = np.argsort(a[own])
+    g, D, W, z = (x[own][order] for x in (a, d, wv, zv))
+    if not g.size:
+        return {}
+    r, c = np.divmod(g, cols)
+    src, dst = [np.searchsorted(g, b[~own])], [np.searchsorted(g, a[~own])]
+    wt = [d[~own]]
+    for dy, dx in _NEIGHBORS:
+        rn, cn = r + dy, c + dx
+        ng = rn * cols + cn
+        cross = ((rn >= 0) & (rn < rows) & (cn >= 0) & (cn < cols)
+                 & ((rn // tile != r // tile) | (cn // tile != c // tile)))
+        pos = np.minimum(np.searchsorted(g, ng), g.size - 1)
+        hit = cross & (g[pos] == ng)
+        D[cross & (~hit | (W[pos] < W))] = 0
+        level = hit & (W[pos] == W)
+        src.append(pos[level])
+        dst.append(np.flatnonzero(level))
+        wt.append(np.ones(level.sum()))
+    D = _dijkstra(D.tolist(), np.concatenate(src), np.concatenate(dst),
+                  np.concatenate(wt), operator.add)
+    # a cell is in the ring of (or in) the tile of each cell around it
+    n_tx = math.ceil(cols / tile)
+    key = []
+    for dy, dx in ((0, 0), *_NEIGHBORS):
+        rn, cn = r + dy, c + dx
+        ok = (rn >= 0) & (rn < rows) & (cn >= 0) & (cn < cols)
+        key.append(np.where(ok, rn // tile * n_tx + cn // tile, -1))
+    key, i = np.divmod(np.unique(np.concatenate(key) * g.size
+                                 + np.tile(np.arange(g.size), 9)), g.size)
+    i = i[key >= 0]
+    return _by_tile(key[key >= 0], n_tx, g[i], W[i], z[i], D[i])
 
 
 def breach_depressions_tiled(dem_tiles: DataFrame, meta: RasterMeta,
-                             tile: int = 256, max_rounds: int = 64,
+                             tile: int = 256,
                              ckpt_dir: str | None = None) -> DataFrame:
     """Distributed BreachDepressions (full-breach, minimax-path carve).
 
     Semantics: see the section comment above — W spill surface, D
-    plateau-distance fixpoint, deterministic backlink forest, then
-    walkers from every strict interior pit carve min(z, v) with
-    v := min(v, z) along the chain to an outlet. Exactly equal to
-    `breach_minimax_np` on the assembled grid.
+    plateau distance, deterministic backlink forest, then every strict
+    interior pit carves min(z, v) with v := min(v, z) along its chain to
+    an outlet. Exactly equal to `breach_minimax_np` on the assembled
+    grid.
 
-    With `ckpt_dir`, W's pass-1 relation (stage ``w``) and every
-    fixpoint round (D, walk) persist with per-partition row metrics, and
-    a restarted job resumes from the last completed pass or round
-    (north_rule checkpoint/resume contract).
+    Three chained `_perimeter_solve` calls in a fixed number of Spark
+    jobs. W is the fill's label-graph solve. For D, pass 1 runs a BFS
+    per tile from its local drops (distance ld) and from each perimeter
+    cell (`_perimeter_distances`); the driver adds the cross-tile drops
+    and steps and runs Dijkstra over the perimeter (`_plateau_solve`);
+    pass 2 finishes D from the solved perimeter and, with the ring of
+    neighbouring (W, D, z) it was handed, the backlinks and pits. The
+    carve is D8's forest solve with min for + (`_forest_solve`).
+
+    With `ckpt_dir`, the pass-1 relation of each solve persists (stages
+    ``w``, ``d`` and ``walk``) with per-partition row metrics, and a
+    rerun resumes from the completed passes.
 
     Returns long form (row, col, value) of the carved DEM.
     """
-    spark = dem_tiles.sparkSession
-    nodata = meta.nodata
-    rows, cols = meta.rows, meta.cols
-    n_ty = math.ceil(rows / tile)
-    n_tx = math.ceil(cols / tile)
-    INF = np.float64(1e308)
-    from go_spatial_spark.grid import tiles_to_long
-
-    dem_cached = dem_tiles.localCheckpoint()
-    emit_strips = _make_emit_strips(n_ty, n_tx)
+    cols, nodata = meta.cols, meta.nodata
     ckpt = CheckpointManager(ckpt_dir) if ckpt_dir is not None else None
+    zw_tiles = _spill_surface(dem_tiles, meta, tile, ckpt, "w",
+                              tile_form=True)
 
-    # ---- phase A: spill surface W (the fill's label-graph solve) ------
-    w_tiles = _spill_surface(dem_cached, meta, tile, ckpt, "w",
-                             tile_form=True).localCheckpoint()
+    def d_boundary(t):
+        W, z, ld, g = _breach_pad(t, tile, meta, None)
+        nbr, same, _, drop, perim = _plateau_graph(W, t.h, t.w, nodata)
+        ld[drop] = 0
+        _plateau_bfs(nbr, same, ld)
+        p, q, d = _perimeter_distances(nbr, same, ld, perim)
+        perim = np.flatnonzero(perim)
+        return pd.DataFrame({"a": np.r_[g[perim], g[p]],
+                             "b": np.r_[g[perim], g[q]],
+                             "d": np.r_[ld[perim], d],
+                             "w": np.r_[W[perim], np.zeros(p.size)],
+                             "z": np.r_[z[perim], np.zeros(p.size)]})
 
-    # ---- phase B: plateau distance D ---------------------------------
-    # static per-tile padded W plane (W halo ring is needed every round
-    # to know plateau adjacency across tile edges). One strip exchange.
-    def make_wpad(key, w_pdf, strips_pdf):
-        if w_pdf.empty:
-            return _no_tile()
-        t = w_pdf.iloc[0]
-        h, w = int(t.h), int(t.w)
-        pad = np.full((h + 2, w + 2), nodata, dtype=np.float64)
-        pad[1:-1, 1:-1] = np.frombuffer(
-            t.data, dtype=np.float64).reshape(h, w)
-        _paste_ring(pad, h, w, strips_pdf)
-        return pd.DataFrame({"ty": [int(key[0])], "tx": [int(key[1])],
-                             "h": [h], "w": [w], "data": [pad.tobytes()]})
+    def d_finish(t, ring):
+        if ring is None:
+            ring = (np.empty(0, dtype=np.int64),) + (np.empty(0),) * 3
+        W, z, D, g = _breach_pad(t, tile, meta, ring)
+        nbr, same, valid, drop, _ = _plateau_graph(W, t.h, t.w, nodata)
+        D[drop] = 0
+        _plateau_bfs(nbr, same, D)
+        Wn, Dn, zn = W[nbr], D[nbr], z[nbr]
+        # backlink: the argmin of (W, D, z, index) among the neighbours
+        # below in (W, D), stored as a D8 pointer (direction + 1, outlets
+        # 0) so that the carve is D8's forest solve
+        lower = (Wn != nodata) & ((Wn < W) | ((Wn == W) & (Dn < D)))
+        link = np.lexsort((g[nbr], zn, Dn, np.where(lower, Wn, np.inf)),
+                          axis=0)[0] + 1.0
+        link[(Wn == nodata).any(axis=0)] = 0.0
+        pit = valid & ((zn != nodata) & (zn > z)).all(axis=0)
 
-    w_strips = w_tiles.mapInPandas(emit_strips, schema=_STRIPS_SCHEMA)
-    wpad_tiles = (w_tiles.groupBy("ty", "tx")
-                  .cogroup(w_strips.groupBy("ty", "tx"))
-                  .applyInPandas(make_wpad, schema=TILE_SCHEMA)
-                  ).localCheckpoint()
+        def plane(a):
+            return a.reshape(t.h + 2, t.w + 2)[1:-1, 1:-1].tobytes()
+        return pd.DataFrame({"ty": [t.ty], "tx": [t.tx], "h": [t.h],
+                             "w": [t.w], "data": [t.data],
+                             "link": [plane(np.where(valid, link, nodata))],
+                             "seed": [plane(np.where(pit, z, np.inf))]})
 
-    def shifts8(pad):
-        h, w = pad.shape[0] - 2, pad.shape[1] - 2
-        return [pad[1 + DY[n]:1 + DY[n] + h, 1 + DX[n]:1 + DX[n] + w]
-                for n in range(8)]
+    link_tiles = _perimeter_solve(
+        zw_tiles, d_boundary, "a long, b long, d double, w double, z double",
+        lambda rel: _plateau_solve(rel, meta, tile), d_finish,
+        f"{TILE_SCHEMA}, link binary, seed binary", ckpt, "d")
 
-    # D0: 0 at outlets / W-drops, INF elsewhere on valid cells
-    def init_d(it):
-        for pdf in it:
-            for t in pdf.itertuples(index=False):
-                h, w = int(t.h), int(t.w)
-                pad = np.frombuffer(t.data, dtype=np.float64).reshape(
-                    h + 2, w + 2)
-                Wt = pad[1:-1, 1:-1]
-                valid = Wt != nodata
-                drop = np.zeros((h, w), dtype=bool)
-                for s in shifts8(pad):
-                    drop |= (s == nodata) | (s < Wt)
-                d0 = np.where(valid, np.where(drop, 0.0, INF), nodata)
-                yield pd.DataFrame({"ty": [t.ty], "tx": [t.tx],
-                                    "h": [h], "w": [w],
-                                    "data": [d0.tobytes()]})
+    def carve(t):
+        def plane(b):
+            return np.frombuffer(b, dtype=np.float64).reshape(t.h, t.w)
+        return (_tile_graph(plane(t.link), nodata), plane(t.data).ravel(),
+                plane(t.seed).ravel().copy())
 
-    d_tiles = wpad_tiles.mapInPandas(
-        init_d, schema=TILE_SCHEMA).localCheckpoint()
+    def walk_finish(t, inflow):
+        graph, z, seed = carve(t)
+        acc = _forest_finish(t, tile, cols, graph, seed, inflow, z)
+        idx = np.flatnonzero(graph[0])
+        return pd.DataFrame({
+            "row": (idx // t.w + t.ty * tile).astype(np.int32),
+            "col": (idx % t.w + t.tx * tile).astype(np.int32),
+            "value": np.minimum(z, acc)[idx]})
 
-    def relax(key, static_pdf, strips_pdf):
-        # static: (wpad, current D); strips: neighbor D ring
-        if static_pdf.empty:
-            return _no_tile()
-        t = static_pdf.iloc[0]
-        h, w = int(t.h), int(t.w)
-        wpad = np.frombuffer(t.wpad, dtype=np.float64).reshape(h + 2, w + 2)
-        dpad = np.full((h + 2, w + 2), INF, dtype=np.float64)
-        _paste_ring(dpad, h, w, strips_pdf)
-        Wt = wpad[1:-1, 1:-1]
-        valid = Wt != nodata
-        Wsh = shifts8(wpad)
-        # ring-only D shifts: interior of dpad is INF (only the ring holds
-        # neighbor values), so relaxation from own interior starts at D
-        Dsh = shifts8(dpad)
-        cand = np.frombuffer(t.ddata, dtype=np.float64).reshape(h, w).copy()
-        for n in range(8):
-            ok = valid & (Wsh[n] == Wt) & (Dsh[n] < INF) & \
-                (Dsh[n] != nodata)
-            np.minimum(cand, np.where(ok, Dsh[n] + 1.0, INF),
-                       out=cand, where=valid)
-        rr, cc = np.nonzero(valid & (cand < INF))
-        heap = list(zip(cand[rr, cc].tolist(), rr.tolist(), cc.tolist()))
-        heapq.heapify(heap)
-        Dn = np.where(valid, INF, nodata)
-        while heap:
-            dv, r, c = heapq.heappop(heap)
-            if dv >= Dn[r, c]:
-                continue
-            Dn[r, c] = dv
-            for n in range(8):
-                rn, cn = r + DY[n], c + DX[n]
-                if 0 <= rn < h and 0 <= cn < w and valid[rn, cn] \
-                        and Wt[rn, cn] == Wt[r, c] \
-                        and dv + 1.0 < Dn[rn, cn]:
-                    heapq.heappush(heap, (dv + 1.0, rn, cn))
-        return pd.DataFrame({"ty": [int(key[0])], "tx": [int(key[1])],
-                             "h": [h], "w": [w], "data": [Dn.tobytes()]})
+    def walk_boundary(t):
+        graph, z, seed = carve(t)
+        return _forest_boundary(t, tile, cols, graph, seed, z)
 
-    def sig_fn(it):
-        tot = 0.0
-        cnt = 0
-        for pdf in it:
-            for t in pdf.itertuples(index=False):
-                a = np.frombuffer(t.data, dtype=np.float64)
-                m = (a != nodata) & (a < INF)
-                tot += float(a[m].sum())
-                cnt += int(m.sum())
-        yield pd.DataFrame({"tot": [tot], "cnt": [cnt]})
-
-    def sig_of(df):
-        srow = (df.mapInPandas(sig_fn, schema="tot double, cnt long")
-                .groupBy().sum().first())
-        return (float(srow[0] or 0.0), int(srow[1] or 0))
-
-    prev_sig = None
-    start_round = 0
-    if ckpt is not None:
-        done = ckpt.converged_round("d")
-        if done is not None:
-            d_tiles = ckpt.read_stage(spark, f"d/round={done}")
-            start_round = max_rounds  # skip the loop entirely
-        else:
-            rounds = ckpt.completed_rounds("d")
-            if rounds:
-                d_tiles = ckpt.read_stage(spark, f"d/round={rounds[-1]}")
-                prev_sig = sig_of(d_tiles)
-                start_round = rounds[-1] + 1
-
-    for _rnd_d in range(start_round, max_rounds):
-        d_strips = d_tiles.mapInPandas(emit_strips, schema=_STRIPS_SCHEMA)
-        static_wd = (wpad_tiles.alias("wp").join(
-            d_tiles.alias("dd"), ["ty", "tx"])
-            .select("ty", "tx", F.col("wp.h").alias("h"),
-                    F.col("wp.w").alias("w"),
-                    F.col("wp.data").alias("wpad"),
-                    F.col("dd.data").alias("ddata")))
-        built = (static_wd.groupBy("ty", "tx")
-                 .cogroup(d_strips.groupBy("ty", "tx"))
-                 .applyInPandas(relax, schema=TILE_SCHEMA))
-        # materialize + truncate per-round lineage (measured: the
-        # cached variant re-analyzed + partially recomputed the whole
-        # chain, 13x slower per round and growing); with ckpt the round
-        # also persists for resume
-        if ckpt is not None:
-            new_d = ckpt.run_stage(spark, f"d/round={_rnd_d}",
-                                   lambda: built)
-        else:
-            new_d = built.localCheckpoint()
-        sig = sig_of(new_d)
-        d_tiles = new_d
-        if sig == prev_sig:
-            if ckpt is not None:
-                ckpt.mark_converged("d", _rnd_d)
-            break
-        prev_sig = sig
-
-    # ---- phase C: backlink forest + pit seeds ------------------------
-    def make_backlinks(key, static_pdf, strips_pdf):
-        # static: (wpad, zpad-interior dem, final D); strips: D ring
-        if static_pdf.empty:
-            return _no_tile()
-        t = static_pdf.iloc[0]
-        ty, tx = int(key[0]), int(key[1])
-        h, w = int(t.h), int(t.w)
-        wpad = np.frombuffer(t.wpad, dtype=np.float64).reshape(
-            h + 2, w + 2)
-        zpad = np.frombuffer(t.zpad, dtype=np.float64).reshape(
-            h + 2, w + 2)
-        D = np.frombuffer(t.ddata, dtype=np.float64).reshape(h, w)
-        dpad = np.full((h + 2, w + 2), INF, dtype=np.float64)
-        dpad[1:-1, 1:-1] = D
-        _paste_ring(dpad, h, w, strips_pdf)
-        Wt = wpad[1:-1, 1:-1]
-        valid = Wt != nodata
-        r0, c0 = ty * tile, tx * tile
-        # global flat index of each neighbor
-        gr, gc = np.indices((h, w), dtype=np.int64)
-        gr, gc = gr + r0, gc + c0
-        Wsh, Dsh, Zsh = shifts8(wpad), shifts8(dpad), shifts8(zpad)
-        outlet = np.zeros((h, w), dtype=bool)
-        for n in range(8):
-            outlet |= Wsh[n] == nodata
-        bW = np.full((h, w), np.inf)
-        bD = np.full((h, w), np.inf)
-        bz = np.full((h, w), np.inf)
-        bidx = np.full((h, w), np.iinfo(np.int64).max, dtype=np.int64)
-        bdir = np.full((h, w), -2, dtype=np.int8)
-        for n in range(8):
-            Wn, Dn_, zn = Wsh[n], Dsh[n], Zsh[n]
-            idxn = (gr + DY[n]) * np.int64(cols) + (gc + DX[n])
-            mask = valid & ~outlet & (Wn != nodata) & (
-                (Wn < Wt) | ((Wn == Wt) & (Dn_ < D)))
-            better = mask & (
-                (Wn < bW) | ((Wn == bW) & (
-                    (Dn_ < bD) | ((Dn_ == bD) & (
-                        (zn < bz) | ((zn == bz) & (idxn < bidx)))))))
-            bW = np.where(better, Wn, bW)
-            bD = np.where(better, Dn_, bD)
-            bz = np.where(better, zn, bz)
-            bidx = np.where(better, idxn, bidx)
-            bdir = np.where(better, np.int8(n), bdir)
-        bl = np.where(valid, np.where(outlet, np.int8(-1), bdir),
-                      np.int8(-2)).astype(np.int8)
-        return pd.DataFrame({"ty": [ty], "tx": [tx], "h": [h], "w": [w],
-                             "data": [bl.tobytes()]})
-
-    # zpad: padded DEM plane (same one-strip-exchange construction)
-    z_strips = dem_cached.mapInPandas(emit_strips, schema=_STRIPS_SCHEMA)
-    zpad_tiles = (dem_cached.groupBy("ty", "tx")
-                  .cogroup(z_strips.groupBy("ty", "tx"))
-                  .applyInPandas(make_wpad, schema=TILE_SCHEMA)
-                  ).localCheckpoint()
-
-    d_final_strips = d_tiles.mapInPandas(emit_strips,
-                                         schema=_STRIPS_SCHEMA)
-    static_wzd = (wpad_tiles.alias("wp")
-                  .join(zpad_tiles.alias("zp"), ["ty", "tx"])
-                  .join(d_tiles.alias("dd"), ["ty", "tx"])
-                  .select("ty", "tx", F.col("wp.h").alias("h"),
-                          F.col("wp.w").alias("w"),
-                          F.col("wp.data").alias("wpad"),
-                          F.col("zp.data").alias("zpad"),
-                          F.col("dd.data").alias("ddata")))
-    bl_built = (static_wzd.groupBy("ty", "tx")
-                .cogroup(d_final_strips.groupBy("ty", "tx"))
-                .applyInPandas(make_backlinks, schema=TILE_SCHEMA))
-    if ckpt is not None:
-        bl_tiles = ckpt.run_stage(spark, "backlinks", lambda: bl_built)
-    else:
-        bl_tiles = bl_built.localCheckpoint()
-
-    # pit seeds: strict interior local minima (all 8 neighbors valid
-    # and strictly higher) — vectorized over the padded DEM plane
-    def find_pits(it):
-        for pdf in it:
-            outs = []
-            for t in pdf.itertuples(index=False):
-                h, w = int(t.h), int(t.w)
-                zpad = np.frombuffer(t.data, dtype=np.float64).reshape(
-                    h + 2, w + 2)
-                zt = zpad[1:-1, 1:-1]
-                valid = zt != nodata
-                pit = valid.copy()
-                for s in shifts8(zpad):
-                    pit &= (s != nodata) & (s > zt)
-                rr, cc = np.nonzero(pit)
-                if len(rr):
-                    outs.append(pd.DataFrame({
-                        "row": (rr + t.ty * tile).astype(np.int32),
-                        "col": (cc + t.tx * tile).astype(np.int32),
-                        "v": zt[pit]}))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    worklist = zpad_tiles.mapInPandas(
-        find_pits, schema="row int, col int, v double").localCheckpoint()
-
-    # ---- phase D: walker loop ----------------------------------------
-    walk_static = (dem_cached.alias("d").join(
-        bl_tiles.alias("b"), ["ty", "tx"])
-        .select("ty", "tx", F.col("d.h").alias("h"),
-                F.col("d.w").alias("w"),
-                F.col("d.data").alias("dem"),
-                F.col("b.data").alias("bl"))).localCheckpoint()
-
-    def walk_fn(key, static_pdf, walkers_pdf):
-        empty = pd.DataFrame({"row": pd.Series(dtype="int32"),
-                              "col": pd.Series(dtype="int32"),
-                              "v": pd.Series(dtype="float64"),
-                              "cont": pd.Series(dtype="bool")})
-        if static_pdf.empty or walkers_pdf.empty:
-            return empty
-        t = static_pdf.iloc[0]
-        h, w = int(t.h), int(t.w)
-        dem_t = np.frombuffer(t.dem, dtype=np.float64).reshape(h, w)
-        bl_t = np.frombuffer(t.bl, dtype=np.int8).reshape(h, w)
-        ty, tx = int(key[0]), int(key[1])
-        r0, c0 = ty * tile, tx * tile
-        best: dict = {}
-        rows_out = []
-        order = walkers_pdf.sort_values("v")
-        for rg, cg, v in zip(order["row"].to_numpy(),
-                             order["col"].to_numpy(),
-                             order["v"].to_numpy()):
-            r, c = int(rg) - r0, int(cg) - c0
-            v = float(v)
-            while True:
-                z = dem_t[r, c]
-                if z < v:
-                    v = z
-                b = best.get((r, c))
-                if b is not None and b <= v:
-                    break          # dominated by an earlier walker
-                best[(r, c)] = v
-                if v < z:
-                    rows_out.append((r0 + r, c0 + c, v, False))
-                d = int(bl_t[r, c])
-                if d < 0:
-                    break          # outlet (or invalid; cannot happen)
-                rn, cn = r + DY[d], c + DX[d]
-                if 0 <= rn < h and 0 <= cn < w:
-                    r, c = rn, cn
-                else:
-                    rows_out.append((r0 + rn, c0 + cn, v, True))
-                    break
-        if not rows_out:
-            return empty
-        return pd.DataFrame(rows_out,
-                            columns=["row", "col", "v", "cont"])
-
-    walk_schema = "row int, col int, v double, cont boolean"
-    carve_parts = []
-    start_round = 0
-    if ckpt is not None:
-        # resume: each completed walk round persisted its full output
-        # (carves + continuations); reload carves, rebuild the live
-        # worklist from the last round's continuations
-        done = ckpt.converged_round("walk")
-        rounds = ckpt.completed_rounds("walk")
-        for k in rounds:
-            prev = ckpt.read_stage(spark, f"walk/round={k}")
-            carve_parts.append(prev.where(~F.col("cont"))
-                               .select("row", "col", "v"))
-            if k == rounds[-1] and done is None:
-                worklist = (prev.where(F.col("cont"))
-                            .groupBy("row", "col")
-                            .agg(F.min("v").alias("v")))
-        start_round = (max_rounds * max(n_ty, n_tx)) if done is not None \
-            else (rounds[-1] + 1 if rounds else 0)
-    for _rnd in range(start_round, max_rounds * max(n_ty, n_tx)):
-        if worklist.count() == 0:
-            if ckpt is not None:
-                ckpt.mark_converged("walk", _rnd - 1)
-            break
-        keyed = worklist.withColumn(
-            "ty", (F.col("row") / tile).cast("int")).withColumn(
-            "tx", (F.col("col") / tile).cast("int"))
-        built = (walk_static.groupBy("ty", "tx")
-                 .cogroup(keyed.groupBy("ty", "tx"))
-                 .applyInPandas(walk_fn, schema=walk_schema))
-        if ckpt is not None:
-            out = ckpt.run_stage(spark, f"walk/round={_rnd}",
-                                 lambda: built)
-        else:
-            out = built.localCheckpoint()
-        carve_parts.append(out.where(~F.col("cont"))
-                           .select("row", "col", "v"))
-        worklist = (out.where(F.col("cont"))
-                    .groupBy("row", "col").agg(F.min("v").alias("v"))
-                    ).localCheckpoint()
-
-    dem_long = tiles_to_long(dem_cached, meta, tile)
-    if not carve_parts:
-        return dem_long
-    carves = carve_parts[0]
-    for p in carve_parts[1:]:
-        carves = carves.unionByName(p)
-    carve_min = carves.groupBy("row", "col").agg(F.min("v").alias("v"))
-    return (dem_long.join(carve_min, ["row", "col"], "left")
-            .select("row", "col",
-                    F.least(F.col("value"), F.coalesce(
-                        F.col("v"), F.col("value"))).alias("value")))
+    return _perimeter_solve(
+        link_tiles, walk_boundary, _FOREST_SCHEMA,
+        lambda rel: _forest_solve(rel, meta, tile, carve=True),
+        walk_finish, "row int, col int, value double", ckpt, "walk")
 
 
 # ---------------------------------------------------------------------------

@@ -421,10 +421,41 @@ def test_breach_tiled_matches_replay(spark):
     assert _strict_pits(got) == 0
 
 
-@pytest.mark.parametrize("case", ["ragged_33x65_t16", "nodata_tile_absent",
-                                  "corner_basin_12_t6"])
+def _u_plateau():
+    """A U-shaped plateau (z 5) whose arms meet only in the tile below
+    theirs (tile 4): a pit tops one arm, and the other arm drops into a
+    channel to the grid edge, so D's shortest path and the carve leave
+    the arms' tile and come back."""
+    dem = np.full((8, 8), 9.0)
+    dem[1:6, 1] = dem[1:6, 3] = dem[5, 1:4] = 5.0
+    dem[0, 1] = 4.0  # the channel
+    dem[1, 3] = 3.0  # the pit
+    return dem
+
+
+def _flat_lake(n=14):
+    """A flat lake (z 5) over 4 x 4 tiles of 4, walled in and drained by
+    the grid corner diagonal to its far corner, with two pits. The
+    carve from the pit at (2, 2) crosses a low pair of cells (not pits)
+    in a middle tile, which lowers what it carries on."""
+    dem = np.full((n, n), 9.0)
+    dem[1:-1, 1:-1] = 5.0
+    dem[-1, -1] = 4.0
+    dem[2, 2], dem[6, 9] = 3.0, 2.0
+    dem[6, 6:8] = 1.0
+    return dem
+
+
+BREACH_EDGE_CASES = {
+    **FILL_EDGE_CASES,
+    "u_plateau_8_t4": (_u_plateau, 4, True),
+    "flat_lake_14_t4": (_flat_lake, 4, True),
+}
+
+
+@pytest.mark.parametrize("case", sorted(BREACH_EDGE_CASES))
 def test_breach_tiled_edge_shapes(spark, case):
-    make, tile, keep_empty = FILL_EDGE_CASES[case]
+    make, tile, keep_empty = BREACH_EDGE_CASES[case]
     dem = make()
     rows, cols = dem.shape
     meta = RasterMeta(rows=rows, cols=cols)
@@ -436,11 +467,104 @@ def test_breach_tiled_edge_shapes(spark, case):
     assert _cached_plans(spark) <= cached
 
 
-def _kill_driver_solve(monkeypatch):
-    """Simulate a driver killed after pass 1 of the spill surface."""
-    def killed(*args):
+def test_breach_tiled_job_count(spark):
+    """The three chained perimeter solves take a fixed number of Spark
+    jobs, final collect included, however far plateaus and carve paths
+    reach across tiles."""
+    sc = spark.sparkContext
+    tiles = long_to_tiles(synthetic_dem(spark, ROWS, COLS), META, tile=TILE)
+    sc.setJobGroup("breach_tiled_jobs", "breach_depressions_tiled")
+    try:
+        got = _collect(H.breach_depressions_tiled(tiles, META, tile=TILE),
+                       "value")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert np.array_equal(
+        got, H.breach_minimax_np(synthetic_dem_numpy(ROWS, COLS)))
+    assert len(sc.statusTracker().getJobIdsForGroup("breach_tiled_jobs")) <= 12
+
+
+def _plain_bfs(level, src):
+    """Unit-step distances from cell ``src`` over 8-adjacent valid cells
+    of the same level."""
+    from collections import deque
+    h, w = level.shape
+    dist = np.full((h, w), np.inf)
+    dist[src] = 0
+    todo = deque([src])
+    while todo:
+        r, c = todo.popleft()
+        for dy, dx in zip(H.DY, H.DX):
+            rn, cn = r + dy, c + dx
+            if 0 <= rn < h and 0 <= cn < w and level[rn, cn] != NODATA \
+                    and level[rn, cn] == level[r, c] \
+                    and dist[rn, cn] == np.inf:
+                dist[rn, cn] = dist[r, c] + 1
+                todo.append((rn, cn))
+    return dist
+
+
+@pytest.mark.parametrize("shape", [(1, 1), (2, 2), (7, 9), (12, 5),
+                                   (16, 16)], ids="{0[0]}x{0[1]}".format)
+def test_perimeter_distances_match_plain_bfs(shape):
+    """Breach's in-tile plateau BFS (`_plateau_bfs`) and its pruned
+    perimeter-to-perimeter distances (`_perimeter_distances`) against a
+    plain BFS per source, on random W tiles with several levels and
+    NoData obstacles. The ring is pass 1's: cells of other tiles, never
+    lower or level."""
+    h, w = shape
+    for seed in range(4):
+        rng = np.random.default_rng(seed)
+        W = rng.choice([1.0, 2.0, 3.0], size=shape, p=[0.04, 0.8, 0.16])
+        W[rng.random(shape) < 0.12] = NODATA
+        if h * w <= 4:
+            W[:] = 2.0  # one plateau with no drop: every pair is kept
+        pad = np.full((h + 2, w + 2), np.inf)
+        pad[1:-1, 1:-1] = W
+        nbr, same, _, drop, perim = H._plateau_graph(
+            pad.ravel(), h, w, NODATA)
+        cells = [(r, c) for r in range(h) for c in range(w)
+                 if W[r, c] != NODATA]
+        want_drop = {(r, c) for r, c in cells if any(
+            0 <= r + dy < h and 0 <= c + dx < w
+            and (W[r + dy, c + dx] == NODATA or W[r + dy, c + dx] < W[r, c])
+            for dy, dx in zip(H.DY, H.DX))}
+        want_perim = {(r, c) for r, c in cells
+                      if r in (0, h - 1) or c in (0, w - 1)}
+        ld = np.full(shape, np.inf)
+        for src in want_drop:
+            ld = np.minimum(ld, _plain_bfs(W, src))
+
+        def at(mask):
+            return {divmod(int(i), w + 2) for i in np.flatnonzero(mask)}
+        assert at(drop) == {(r + 1, c + 1) for r, c in want_drop}
+        assert at(perim) == {(r + 1, c + 1) for r, c in want_perim}
+        got_ld = H._plateau_bfs(nbr, same, np.where(drop, 0.0, np.inf))
+        assert np.array_equal(
+            got_ld.reshape(h + 2, w + 2)[1:-1, 1:-1][W != NODATA],
+            ld[W != NODATA])
+        want = set()
+        for q in want_perim:
+            if ld[q] > 0:
+                dq = _plain_bfs(W, q)
+                want |= {(p, q, dq[p]) for p in want_perim
+                         if p != q and dq[p] < ld[p]}
+        p, q, d = H._perimeter_distances(nbr, same, got_ld, perim)
+        got = {(divmod(int(a), w + 2), divmod(int(b), w + 2), float(k))
+               for a, b, k in zip(p, q, d)}
+        assert got == {((a + 1, b + 1), (c + 1, e + 1), k)
+                       for (a, b), (c, e), k in want}
+        assert len(got) == p.size  # each pair once
+        if h * w == 4:
+            assert len(got) == 12
+
+
+def _kill_driver_solve(monkeypatch, solve="_spill_solve"):
+    """Simulate a driver killed in ``solve``, after the pass 1 that
+    feeds it persisted."""
+    def killed(*args, **kwargs):
         raise RuntimeError("killed in the driver solve")
-    monkeypatch.setattr(H, "_spill_solve", killed)
+    monkeypatch.setattr(H, solve, killed)
 
 
 def test_fill_tiled_checkpoint_resume(spark, tmp_path, monkeypatch):
@@ -473,27 +597,35 @@ def test_fill_tiled_checkpoint_resume(spark, tmp_path, monkeypatch):
     assert len(cm.metrics()) == n_stages
 
 
-def test_breach_tiled_checkpoint_resume(spark, tmp_path, monkeypatch):
-    """Same contract for the breach pipeline: a run killed in W's driver
-    solve -> the resumed run equals the no-checkpoint (and replay)
-    output without rebuilding W's pass 1."""
+@pytest.mark.parametrize("solve, done", [
+    ("_spill_solve", ["w"]),
+    ("_plateau_solve", ["w", "d"]),
+    ("_forest_solve", ["w", "d", "walk"]),
+], ids=["w", "d", "walk"])
+def test_breach_tiled_checkpoint_resume(spark, tmp_path, monkeypatch, solve,
+                                        done):
+    """Same contract for the breach pipeline's three solves (W, D and
+    the carve walk): a run killed in one of their driver solves -> the
+    resumed run equals the replay output, and reads each completed
+    pass 1 rather than rebuilding it."""
     ck = str(tmp_path / "breach_ck")
     dem_np = synthetic_dem_numpy(ROWS, COLS)
     want = H.breach_minimax_np(dem_np)
     tiles = long_to_tiles(synthetic_dem(spark, ROWS, COLS), META,
                           tile=TILE)
     with monkeypatch.context() as m:
-        _kill_driver_solve(m)
+        _kill_driver_solve(m, solve)
         with pytest.raises(RuntimeError, match="killed"):
             H.breach_depressions_tiled(tiles, META, tile=TILE, ckpt_dir=ck)
     from go_spatial_spark.checkpoint import CheckpointManager
     cm = CheckpointManager(ck)
-    assert cm.has_stage("w")
+    assert [s for s in ("w", "d", "walk") if cm.has_stage(s)] == done
     got = _collect(H.breach_depressions_tiled(tiles, META, tile=TILE,
                                               ckpt_dir=ck), "value")
     assert np.array_equal(got, want)
-    assert stages_count(cm, "w") == 1
-    assert cm.converged_round("walk") is not None
+    for stage in ("w", "d", "walk"):
+        assert stages_count(cm, stage) == 1
+    assert cm.has_stage("walk")
 
 
 def stages_count(cm, name):
