@@ -4,8 +4,8 @@ A from-scratch, Spark-first re-expression of the query/data-processing
 capabilities of the GoSpatial reference (jblindsay/go-spatial): a dense
 raster grid model re-cast as tile-partitioned DataFrames, focal/window
 operators as halo-exchange `mapInPandas` kernels, hydrology as tiled
-drivers (D8 accumulation as a boundary-graph solve; FD8, fill and breach
-as inter-tile fixpoints), raster/LiDAR readers and writers, plus the
+drivers (D8 and FD8 accumulation, fill and breach as two-pass
+perimeter-graph solves), raster/LiDAR readers and writers, plus the
 point-in-polygon and kNN spatial joins behind the geocoded-pages
 pipeline (H3-style cell indexing).
 

@@ -13,8 +13,7 @@ The tiled hydrology operators checkpoint with `ckpt_dir`: each of their
 perimeter-graph solves persists its pass-1 relation as one stage (fill:
 `fill_w`; breach: `w`, `d` and `walk`), so a killed run resumes from the
 completed passes and reruns only the driver solves and the passes after
-them. Nothing persists per round: flow accumulation, FD8's round
-fixpoint included, does not checkpoint.
+them. D8 and FD8 flow accumulation do not checkpoint.
 """
 
 from __future__ import annotations

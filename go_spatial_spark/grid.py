@@ -439,7 +439,9 @@ def run_stencil(
     ``kernel(padded, halo, ctx) -> out`` receives a float64 array of
     shape (h+2*halo, w+2*halo) where out-of-tile cells are filled from
     neighbor strips (or NoData at grid edges / missing tiles), and must
-    return the (h, w) output block. ``ctx`` carries meta + the tile's
+    return the (h, w) output block, or the padded block itself (FD8 reads
+    each tile's neighbourhood; ``h`` and ``w`` still describe the tile
+    interior). ``ctx`` carries meta + the tile's
     global origin so kernels can reason about absolute coordinates.
 
     Implementation: each tile emits its center plus up to 8 cropped edge
@@ -704,22 +706,3 @@ class StencilCtx:
     row0: int  # global row of padded[halo, halo]
     col0: int
     extra: dict
-
-
-def padded_tiles(tiles: DataFrame, meta: RasterMeta, halo: int,
-                 tile: int = 256) -> DataFrame:
-    """Materialize halo-padded tiles as a DataFrame
-    (ty, tx, h, w, data = (h+2*halo)x(w+2*halo) float64 buffer).
-
-    Same strip-exchange shuffle as run_stencil, but returns the padded
-    block itself — for iterative operators (FD8, breach) that re-read
-    neighborhoods every round without re-shuffling strips."""
-    def identity(padded: np.ndarray, h: int, ctx) -> np.ndarray:
-        return padded
-
-    out = run_stencil(tiles, meta, identity, halo=halo, tile=tile)
-    # run_stencil packs kernel output of shape (h, w); identity returns
-    # the padded block, so h/w columns still describe the interior.
-    return out
-
-

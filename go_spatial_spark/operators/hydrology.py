@@ -18,18 +18,18 @@ Two execution paths, per SURVEY.md §2.5 / §7:
     (first-max-wins over n=0..7, dist=[diag,cx,diag,cy,...]), FIFO
     topological sweep, init value 1.
 
-- **distributed path** (the 100 TB design): D8 accumulation, the
-  epsilon-0 fill surface and the minimax-path breach run as two-pass
+- **distributed path** (the 100 TB design): D8 and FD8 accumulation,
+  the epsilon-0 fill surface and the minimax-path breach run as two-pass
   perimeter-graph solves (R. Barnes, Environ. Model. Softw. 2017 and
   Computers & Geosciences 2016) in a fixed number of Spark jobs, however
   many tile edges a flow path crosses (`_perimeter_solve`). Pass 1
   solves each tile locally and emits its perimeter relation; the driver
   solves that small graph once (O(n_tiles * 4 * tile) rows, more on
-  flat plateaus for breach); pass 2 finishes each tile with the solved
-  inputs. D8 sums are integer-valued, and the fill and breach surfaces
-  take input elevations, so all are bit-identical to their single-node
-  oracles. FD8 still iterates an inter-tile fixpoint, one round at a
-  time.
+  flat plateaus for breach and on smooth slopes for FD8); pass 2
+  finishes each tile with the solved inputs. D8 sums are
+  integer-valued, and the fill and breach surfaces take input
+  elevations, so all three are bit-identical to their single-node
+  oracles; FD8's float sums match its replay within rtol 1e-12.
 """
 
 from __future__ import annotations
@@ -283,23 +283,41 @@ def _passed(acc: np.ndarray, cap: np.ndarray | None, idx: np.ndarray
                     acc[idx])
 
 
-def _accumulate(nxt: np.ndarray, acc: np.ndarray,
-                cap: np.ndarray | None = None) -> np.ndarray:
-    """Push every node's value into everything downstream of it, over a
-    forest of receiver indices (-1 = root), one frontier of ready nodes
-    per step (Kahn). Without ``cap`` receivers add (D8 mass;
-    integer-valued float64 sums are exact in any order); with it they
-    keep the minimum of what `_passed` hands them (the breach carve)."""
+def _sweep(src: np.ndarray, dst: np.ndarray, acc: np.ndarray,
+           share: np.ndarray | None = None,
+           cap: np.ndarray | None = None) -> np.ndarray:
+    """Push every node's value into everything downstream of it along the
+    edges src -> dst of a DAG, one frontier of ready nodes per step
+    (Kahn), in place. Without ``cap`` receivers add what a node holds,
+    times the edge's ``share`` if given (FD8; ``acc`` may then hold one
+    column per unit source); D8's integer-valued float64 sums are exact
+    in any order. With ``cap`` they keep the minimum of what `_passed`
+    hands them (the breach carve)."""
     join = np.add if cap is None else np.minimum
-    has = nxt >= 0
-    indeg = np.bincount(nxt[has], minlength=nxt.size)
+    order = np.argsort(src, kind="stable")
+    src, dst = src[order], dst[order]
+    if share is not None:
+        share = share[order].reshape((-1,) + (1,) * (acc.ndim - 1))
+    first = np.searchsorted(src, np.arange(acc.shape[0] + 1))
+    has = first[1:] > first[:-1]
+    indeg = np.bincount(dst, minlength=acc.shape[0])
     front = np.flatnonzero(has & (indeg == 0))
     while front.size:
-        join.at(acc, nxt[front], _passed(acc, cap, front))
-        tgt, n = np.unique(nxt[front], return_counts=True)
+        k = first[front + 1] - first[front]
+        e = np.arange(k.sum()) + np.repeat(first[front] - np.cumsum(k) + k, k)
+        val = _passed(acc, cap, src[e])
+        join.at(acc, dst[e], val if share is None else val * share[e])
+        tgt, n = np.unique(dst[e], return_counts=True)
         indeg[tgt] -= n
         front = tgt[has[tgt] & (indeg[tgt] == 0)]
     return acc
+
+
+def _accumulate(nxt: np.ndarray, acc: np.ndarray,
+                cap: np.ndarray | None = None) -> np.ndarray:
+    """`_sweep` over a forest of receiver indices (-1 = root)."""
+    src = np.flatnonzero(nxt >= 0)
+    return _sweep(src, nxt[src], acc, cap=cap)
 
 
 def _path_ends(nxt: np.ndarray, cap: np.ndarray | None = None):
@@ -360,7 +378,9 @@ def _perimeter_solve(tiles: DataFrame, boundary, rel_schema: str, solve,
 # Pass 1 of a forest solve emits one row per exit cell (src = -1: the
 # value it passes on, landing on the out-of-tile cell dst) and one per
 # valid perimeter cell whose in-tile path leaves the tile (dst: where
-# the path lands; val: the lowest cap on the way, 0 without one).
+# the path lands; val: the share of its inflow that lands there, 1 on a
+# D8 path, or the lowest cap on the way). FD8's pass 1 emits the same
+# rows, one per ring cell an inflow cell's flow reaches (`_fd8_boundary`).
 _FOREST_SCHEMA = "src long, dst long, val double"
 
 
@@ -383,35 +403,36 @@ def _forest_boundary(t, tile: int, cols: int, graph, acc: np.ndarray,
                      (rr[perim] + r0) * cols + cc[perim] + c0],
         "dst": np.r_[land[ex], land[end[perim]]],
         "val": np.r_[_passed(acc, cap, ex),
-                     np.zeros(perim.size) if cap is None else low[perim]]})
+                     np.ones(perim.size) if cap is None else low[perim]]})
 
 
 def _forest_solve(rel: pd.DataFrame, meta: RasterMeta, tile: int,
                   carve: bool = False) -> dict:
     """Driver half of a forest solve: the landing cells are the nodes,
-    each linked to where its in-tile path lands next. Their inflow
-    ``I(L) = base(L) + sum(I(p) for p with next(p) = L)`` (D8), or with
-    ``carve`` the minimum of base(L) and of what each such p passes on
-    past the lowest z of its path. Returns {(ty, tx): (cells, inflow)}."""
+    each path row an edge from p to a cell it lands on next. Their inflow
+    ``I(L) = base(L) + sum(val * I(p) for edges p -> L)`` (a forest for
+    D8, FD8's weighted DAG), or with ``carve`` the minimum of base(L) and
+    of what each such p passes on past the lowest z of its path. Returns
+    {(ty, tx): (cells, inflow)}."""
     src, dst, val = (rel[k].to_numpy() for k in ("src", "dst", "val"))
     lands = src < 0
     nodes, inv = np.unique(dst[lands], return_inverse=True)
-    # every path row ends at an exit cell, so its dst is a node too
+    # every path row ends at a landing cell, so its dst is a node too
     path = ~lands & np.isin(src, nodes)
     at = np.searchsorted(nodes, src[path])
-    nxt = np.full(nodes.size, -1)
-    nxt[at] = np.searchsorted(nodes, dst[path])
+    to = np.searchsorted(nodes, dst[path])
     if carve:
         inflow, cap = np.full(nodes.size, np.inf), np.full(nodes.size, np.inf)
         np.minimum.at(inflow, inv, val[lands])
         cap[at] = val[path]
+        share = None
     else:
         inflow = np.bincount(inv, weights=val[lands], minlength=nodes.size)
-        cap = None
+        cap, share = None, val[path]
     nr, nc = np.divmod(nodes, meta.cols)
     n_tx = math.ceil(meta.cols / tile)
     return _by_tile(nr // tile * n_tx + nc // tile, n_tx, nodes,
-                    _accumulate(nxt, inflow, cap))
+                    _sweep(at, to, inflow, share, cap))
 
 
 def _forest_finish(t, tile: int, cols: int, graph, acc: np.ndarray,
@@ -472,7 +493,7 @@ def d8_flow_accum(dem_tiles: DataFrame, meta: RasterMeta,
 # faValue * (z-zN)^2 / sum_of_weights (fd8FlowAccum.go:356-383); inflow
 # count = number of strictly-higher valid neighbors (:476-495).
 # Unlike D8, the float result depends on the order contributions are
-# added, so the distributed tile-fixpoint result can differ from the
+# added, so the distributed perimeter solve can differ from the
 # sequential replay in the last ulps — goldens compare with rtol=1e-12.
 
 def fd8_accum_np(dem: np.ndarray, nodata: float = NODATA) -> np.ndarray:
@@ -522,127 +543,94 @@ def fd8_accum_np(dem: np.ndarray, nodata: float = NODATA) -> np.ndarray:
     return np.where(valid, out, nodata)
 
 
-def _fd8_tile_solve(zpad: np.ndarray, ext_in: np.ndarray, nodata: float):
-    """FD8 accumulation inside one tile (halo-1 padded DEM) given
-    external inflows; returns (acc, outflow records in local coords)."""
-    H, W = zpad.shape
-    h, w = H - 2, W - 2
-    z = zpad[1:-1, 1:-1]
-    valid = z != nodata
-    # inflow degree counted against *internal* higher neighbors only:
-    # cross-tile contributions arrive via ext_in before the sweep.
-    indeg = np.zeros((h, w), dtype=np.int32)
-    for n in range(8):
-        zn = zpad[1 + DY[n]:1 + DY[n] + h, 1 + DX[n]:1 + DX[n] + w]
-        rr, cc = np.nonzero(valid & (zn > z) & (zn != nodata))
-        # neighbor is the SOURCE; count only if the source is inside
-        sr, sc = rr + DY[n], cc + DX[n]
-        inside = (sr >= 0) & (sr < h) & (sc >= 0) & (sc < w)
-        np.add.at(indeg, (rr[inside], cc[inside]), 1)
-    acc = np.where(valid, 1.0 + ext_in, 0.0)
-    stack = list(zip(*np.nonzero(valid & (indeg == 0))))
-    outflows = []
-    while stack:
-        r, c = stack.pop()
-        zc = z[r, c]
-        fa = acc[r, c]
-        weights = np.zeros(8)
-        total = 0.0
-        for n in range(8):
-            zn = zpad[1 + r + DY[n], 1 + c + DX[n]]
-            if zn < zc and zn != nodata:
-                weights[n] = (zc - zn) ** 2
-                total += weights[n]
-        for n in range(8):
-            if weights[n] > 0:
-                contrib = fa * (weights[n] / total)
-                rn, cn = r + DY[n], c + DX[n]
-                if 0 <= rn < h and 0 <= cn < w:
-                    acc[rn, cn] += contrib
-                    indeg[rn, cn] -= 1
-                    if indeg[rn, cn] == 0:
-                        stack.append((rn, cn))
-                else:
-                    outflows.append((rn, cn, contrib))
-    return acc, outflows
+# Inflow cells whose unit columns one transfer sweep carries, so that a
+# tile's working set stays at _FD8_BLOCK doubles per cell.
+_FD8_BLOCK = 64
 
 
-def fd8_flow_accum(dem_tiles: DataFrame, meta: RasterMeta, tile: int = 256,
-                   max_rounds: int = 64) -> DataFrame:
-    """Distributed FD8: halo-1 padded DEM tiles + inter-tile inflow
-    fixpoint, one cogrouped applyInPandas and one localCheckpoint per
-    round (contributions are additive)."""
-    from go_spatial_spark.grid import padded_tiles
-    spark = dem_tiles.sparkSession
-    nodata = meta.nodata
-    ptiles = padded_tiles(dem_tiles, meta, halo=1,
-                          tile=tile).localCheckpoint()
+def _fd8_sweep(t, tile: int, cols: int, nodata: float, inflow=None):
+    """FD8 inside one halo-1 padded tile ``t``, over its flat
+    (h + 2) x (w + 2) cells: every valid tile cell starts at 1, plus the
+    solved ``inflow`` (global cells, values), and passes its share
+    (z - zn)^2 / sum (fd8FlowAccum.go:356-383) to each strictly lower
+    valid neighbour; ring cells only receive. Returns the tile's graph
+    (src, dst, share, its valid cells, its inflow cells: those with a
+    strictly higher valid ring neighbour, the ring cells flow lands on,
+    the global index of every cell) and the swept values."""
+    z = np.frombuffer(t.data, dtype=np.float64)
+    w = t.w + 2
+    inner = np.zeros((t.h + 2, w), dtype=bool)
+    inner[1:-1, 1:-1] = True
+    inner = inner.ravel()
+    cells = np.flatnonzero(inner & (z != nodata))
+    nbr = cells + (np.array(DY) * w + np.array(DX))[:, None]
+    zc, zn = z[cells], z[nbr]
+    down = (zn != nodata) & (zn < zc)
+    drop = np.where(down, (zc - zn) ** 2, 0.0)
+    with np.errstate(invalid="ignore"):
+        share = drop / drop.sum(axis=0)
+    up = (zn != nodata) & (zn > zc) & ~inner[nbr]
+    r0, c0 = t.ty * tile - 1, t.tx * tile - 1  # the padded block's corner
+    rr, cc = np.divmod(np.arange(z.size), w)
+    g = (rr + r0) * cols + cc + c0
+    graph = (np.broadcast_to(cells, nbr.shape)[down], nbr[down], share[down],
+             cells, cells[up.any(axis=0)], np.unique(nbr[down & ~inner[nbr]]),
+             g)
+    acc = np.zeros(z.size)
+    acc[cells] = 1.0
+    if inflow is not None:
+        gi, v = inflow
+        acc[(gi // cols - r0) * w + gi % cols - c0] += v
+    return graph, _sweep(graph[0], graph[1], acc, graph[2])
 
-    def make_rounder(emit_acc: bool):
-        def fn(key, tile_pdf, in_pdf):
-            ty, tx = int(key[0]), int(key[1])
-            empty = pd.DataFrame(
-                {"row": pd.Series(dtype="int32"),
-                 "col": pd.Series(dtype="int32"),
-                 "v": pd.Series(dtype="float64")})
-            if tile_pdf.empty:
-                return empty
-            t = tile_pdf.iloc[0]
-            h, w = int(t.h), int(t.w)
-            zpad = np.frombuffer(t.data, dtype=np.float64).reshape(h + 2, w + 2)
-            ext = np.zeros((h, w))
-            if not in_pdf.empty:
-                lr = in_pdf["row"].to_numpy() - ty * tile
-                lc = in_pdf["col"].to_numpy() - tx * tile
-                ext[lr, lc] = in_pdf["inflow"].to_numpy()
-            acc, outs = _fd8_tile_solve(zpad, ext, nodata)
-            if emit_acc:
-                rr, cc = np.nonzero(zpad[1:-1, 1:-1] != nodata)
-                return pd.DataFrame({
-                    "row": (rr + ty * tile).astype(np.int32),
-                    "col": (cc + tx * tile).astype(np.int32),
-                    "v": acc[rr, cc]})
-            if not outs:
-                return empty
-            o = np.array(outs)
-            return pd.DataFrame({
-                "row": (o[:, 0] + ty * tile).astype(np.int32),
-                "col": (o[:, 1] + tx * tile).astype(np.int32),
-                "v": o[:, 2]})
-        return fn
 
-    out_schema = "row int, col int, v double"
-    inflows = spark.createDataFrame([], "row int, col int, inflow double")
-    prev_sig = (-1, -1.0)
-    for _ in range(max_rounds):
-        keyed = inflows.withColumn(
-            "ty", (F.col("row") / tile).cast("int")).withColumn(
-            "tx", (F.col("col") / tile).cast("int"))
-        outflow = (ptiles.groupBy("ty", "tx")
-                   .cogroup(keyed.groupBy("ty", "tx"))
-                   .applyInPandas(make_rounder(False), schema=out_schema))
-        new_inflows = (outflow.groupBy("row", "col")
-                       .agg(F.sum("v").alias("inflow"))).localCheckpoint()
-        srow = new_inflows.agg(
-            F.count("*"), F.coalesce(F.sum("inflow"), F.lit(0.0))).first()
-        sig = (srow[0], float(srow[1]))
-        # FD8 mass converges geometrically with the number of cross-tile
-        # hops (flow paths can zig-zag between tiles); stop at float64
-        # saturation — within the documented rtol of the sequential replay
-        if sig[0] == prev_sig[0] and (
-                sig[1] == prev_sig[1]
-                or abs(sig[1] - prev_sig[1]) <= 1e-13 * max(abs(sig[1]), 1.0)):
-            break
-        prev_sig = sig
-        inflows = new_inflows
+def _fd8_boundary(t, tile: int, cols: int, nodata: float) -> pd.DataFrame:
+    """Pass 1 of FD8 over one tile, as `_FOREST_SCHEMA` rows. Flow is
+    linear in its inputs, so the tile hands the driver a transfer map:
+    (-1, L, base) for the local mass landing on ring cell L, and (p, L, M)
+    for the share M of a unit entering at inflow cell p that lands on L,
+    swept for _FD8_BLOCK inflow cells at a time."""
+    (src, dst, share, _, inflow, land, g), acc = _fd8_sweep(t, tile, cols,
+                                                            nodata)
+    rows = [(np.full(land.size, -1), g[land], acc[land])]
+    for b in range(0, inflow.size, _FD8_BLOCK):
+        p = inflow[b:b + _FD8_BLOCK]
+        unit = np.zeros((g.size, p.size))
+        unit[p, np.arange(p.size)] = 1.0
+        M = _sweep(src, dst, unit, share)[land]
+        li, pj = np.nonzero(M)
+        rows.append((g[p[pj]], g[land[li]], M[li, pj]))
+    src, dst, val = (np.concatenate(c) for c in zip(*rows))
+    return pd.DataFrame({"src": src, "dst": dst, "val": val})
 
-    keyed = inflows.withColumn(
-        "ty", (F.col("row") / tile).cast("int")).withColumn(
-        "tx", (F.col("col") / tile).cast("int"))
-    acc = (ptiles.groupBy("ty", "tx")
-           .cogroup(keyed.groupBy("ty", "tx"))
-           .applyInPandas(make_rounder(True), schema=out_schema))
-    return acc.select("row", "col", F.col("v").alias("accum"))
+
+def fd8_flow_accum(dem_tiles: DataFrame, meta: RasterMeta,
+                   tile: int = 256) -> DataFrame:
+    """Distributed FD8 accumulation as a two-pass perimeter-graph solve
+    (R. Barnes, Environ. Model. Softw. 2017) on `_perimeter_solve`, within
+    rtol 1e-12 of `fd8_accum_np` in a fixed number of Spark jobs.
+
+    One halo-1 stencil hands each tile its padded DEM block. Pass 1 emits
+    each tile's transfer map (`_fd8_boundary`); the driver solves the
+    weighted DAG of landing cells once (`_forest_solve`; acyclic, as flow
+    only falls); pass 2 re-sweeps each tile with the solved inflows added
+    at their cells (`_fd8_sweep`).
+    """
+    cols, nodata = meta.cols, meta.nodata
+
+    def finish(t, inflow):
+        (_, _, _, cells, _, _, g), acc = _fd8_sweep(t, tile, cols, nodata,
+                                                    inflow)
+        return pd.DataFrame({"row": (g[cells] // cols).astype(np.int32),
+                             "col": (g[cells] % cols).astype(np.int32),
+                             "accum": acc[cells]})
+
+    padded = run_stencil(dem_tiles, meta, lambda z, halo, ctx: z, halo=1,
+                         tile=tile)
+    return _perimeter_solve(
+        padded, lambda t: _fd8_boundary(t, tile, cols, nodata),
+        _FOREST_SCHEMA, lambda rel: _forest_solve(rel, meta, tile), finish,
+        "row int, col int, accum double")
 
 
 # ---------------------------------------------------------------------------

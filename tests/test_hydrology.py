@@ -157,6 +157,110 @@ def test_fd8_flow_accum_distributed(spark):
     assert np.array_equal(got[~valid], want[~valid])
 
 
+FD8_EDGE_CASES = {
+    **D8_EDGE_CASES,
+    # flow crosses 74 tile edges on its way down the strip
+    "tilted_strip_3x150_t2": (lambda: _tilted(3, 150), 2, True),
+}
+
+
+@pytest.mark.parametrize("case", sorted(FD8_EDGE_CASES))
+def test_fd8_flow_accum_edge_shapes(spark, case):
+    make, tile, keep_empty = FD8_EDGE_CASES[case]
+    dem = make()
+    rows, cols = dem.shape
+    meta = RasterMeta(rows=rows, cols=cols)
+    want = H.fd8_accum_np(dem)
+    cached = _cached_plans(spark)
+    got = _collect(H.fd8_flow_accum(_np_tiles(spark, dem, tile, keep_empty),
+                                    meta, tile=tile), "accum", rows, cols)
+    assert _cached_plans(spark) <= cached
+    valid = dem != NODATA
+    assert np.allclose(got[valid], want[valid], rtol=1e-12, atol=1e-9)
+    assert np.array_equal(got[~valid], want[~valid])
+
+
+def test_fd8_job_count(spark):
+    """FD8's perimeter solve takes a fixed number of Spark jobs, final
+    collect included, however many tile edges its flow crosses."""
+    sc = spark.sparkContext
+    tiles = long_to_tiles(synthetic_dem(spark, ROWS, COLS), META, tile=TILE)
+    sc.setJobGroup("fd8_jobs", "fd8_flow_accum")
+    try:
+        got = _collect(H.fd8_flow_accum(tiles, META, tile=TILE), "accum")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    dem_np = synthetic_dem_numpy(ROWS, COLS)
+    valid = dem_np != NODATA
+    assert np.allclose(got[valid], H.fd8_accum_np(dem_np)[valid],
+                       rtol=1e-12, atol=1e-9)
+    assert len(sc.statusTracker().getJobIdsForGroup("fd8_jobs")) <= 6
+
+
+def _plain_fd8_landing(zpad, mass):
+    """Where the flow of ``mass`` (tile cell -> amount) in a halo-1 padded
+    block lands on its ring: each valid tile cell, taken by descending
+    z, passes what it holds to its strictly lower valid neighbours in
+    proportion to (z - zn)^2."""
+    h, w = zpad.shape[0] - 2, zpad.shape[1] - 2
+    held = dict(mass)
+    cells = sorted(((r, c) for r in range(1, h + 1) for c in range(1, w + 1)
+                    if zpad[r, c] != NODATA), key=lambda rc: -zpad[rc])
+    landed = {}
+    for r, c in cells:
+        if (r, c) not in held:
+            continue
+        lower = [(r + dy, c + dx) for dy, dx in zip(H.DY, H.DX)
+                 if NODATA != zpad[r + dy, c + dx] < zpad[r, c]]
+        drops = [(zpad[r, c] - zpad[n]) ** 2 for n in lower]
+        for n, d in zip(lower, drops):
+            ring = not (1 <= n[0] <= h and 1 <= n[1] <= w)
+            to = landed if ring else held
+            to[n] = to.get(n, 0.0) + held[r, c] * d / sum(drops)
+    return landed
+
+
+@pytest.mark.parametrize("shape", [(1, 1), (2, 2), (29, 37)],
+                         ids="{0[0]}x{0[1]}".format)
+def test_fd8_transfer_rows_match_plain_sweep(shape):
+    """FD8's pass-1 transfer map (`_fd8_boundary`) against a plain sweep
+    per unit source: a unit fed at each inflow cell, one at a time, lands
+    on the ring as the (p, L, M) rows say, and a unit at every valid cell
+    as the (-1, L, base) rows say. Random tilted DEMs with NoData and many
+    equal-height neighbours; at 29 x 37 the inflow cells that reach the
+    ring fill more than one block of transfer columns."""
+    from types import SimpleNamespace
+    h, w = shape
+    tile, cols = 32, 96
+    for seed in range(6):
+        rng = np.random.default_rng(seed)
+        # a tilt to the east, so flow crosses the tile
+        zpad = rng.integers(0, 4, (h + 2, w + 2)) - 3.0 * np.arange(w + 2)
+        zpad[rng.random(zpad.shape) < 0.15] = NODATA
+        t = SimpleNamespace(ty=1, tx=1, h=h, w=w, data=zpad.tobytes())
+
+        def g(r, c):
+            return (tile - 1 + r) * cols + tile - 1 + c
+        valid = [(r, c) for r in range(1, h + 1) for c in range(1, w + 1)
+                 if zpad[r, c] != NODATA]
+        want = {(-1, g(*L)): m for L, m in
+                _plain_fd8_landing(zpad, dict.fromkeys(valid, 1.0)).items()}
+        for p in valid:
+            if any(not (1 <= p[0] + dy <= h and 1 <= p[1] + dx <= w)
+                   and zpad[p[0] + dy, p[1] + dx] > zpad[p]
+                   for dy, dx in zip(H.DY, H.DX)):
+                want.update({(g(*p), g(*L)): m for L, m in
+                             _plain_fd8_landing(zpad, {p: 1.0}).items()})
+        rel = H._fd8_boundary(t, tile, cols, NODATA)
+        if h > 2:
+            assert len({p for p, _ in want if p >= 0}) > H._FD8_BLOCK
+        got = {(a, b): v for a, b, v in rel.itertuples(index=False)}
+        assert len(got) == len(rel)  # each row once
+        assert got.keys() == want.keys()
+        assert np.allclose([got[k] for k in want], list(want.values()),
+                           rtol=1e-12, atol=0)
+
+
 def test_breach_depressions_removes_pits(spark):
     dem_np = synthetic_dem_numpy(ROWS, COLS)
     assert H.count_interior_pits(dem_np) > 0

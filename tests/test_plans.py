@@ -58,8 +58,8 @@ def test_no_row_python_udfs_and_no_unbounded_single_partition(spark, sf01):
     for name, fn in E.queries().items():
         if name in ("fill_depressions_tiled", "d8_flow_accum",
                     "breach_tiled", "hydro_invariants"):
-            # perimeter-graph solves (and FD8's rounds) run Spark jobs
-            # while the query is built; test_oracle_parity checks them
+            # perimeter-graph solves run Spark jobs while the query is
+            # built; test_oracle_parity checks them
             continue
         df = fn(spark, sf01)
         plan = _plan(df)
