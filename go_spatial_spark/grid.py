@@ -218,14 +218,13 @@ def synthetic_dem_numpy(rows: int, cols: int, nodata: float = NODATA) -> np.ndar
 TILE_SCHEMA = "ty int, tx int, h int, w int, data binary"
 
 
-def long_to_tiles(df: DataFrame, meta: RasterMeta, tile: int = 256,
-                  with_edges: int | None = None) -> DataFrame:
+def long_to_tiles(df: DataFrame, meta: RasterMeta,
+                  tile: int = 256) -> DataFrame:
     """Pack long-form cells into fixed-size tiles (one Arrow batch each).
 
     Partitioning: hash on (ty, tx) — tiles are the unit of parallelism,
     analogous to the reference's row blocks (hillshade.go:184-205) but
-    shuffle-addressable. ``with_edges=h`` also emits the edge-strip
-    sidecar in the same pack pass (see `edge_sidecar_bytes`).
+    shuffle-addressable.
     """
     rows, cols, nodata = meta.rows, meta.cols, meta.nodata
 
@@ -237,24 +236,15 @@ def long_to_tiles(df: DataFrame, meta: RasterMeta, tile: int = 256,
         rr = pdf["row"].to_numpy() - ty * tile
         cc = pdf["col"].to_numpy() - tx * tile
         arr[rr, cc] = pdf["value"].to_numpy(dtype=np.float64)
-        rec = {"ty": [ty], "tx": [tx], "h": [h], "w": [w],
-               "data": [arr.tobytes()]}
-        if with_edges is not None:
-            rec["edges"] = [edge_sidecar_bytes(arr, with_edges)]
-        return pd.DataFrame(rec)
+        return pd.DataFrame({"ty": [ty], "tx": [tx], "h": [h], "w": [w],
+                             "data": [arr.tobytes()]})
 
     keyed = df.withColumn("ty", (F.col("row") / tile).cast("int")).withColumn(
         "tx", (F.col("col") / tile).cast("int")
     )
-    schema = TILE_SCHEMA
-    if with_edges is not None:
-        schema += ", edges binary"
-    out = keyed.groupBy("ty", "tx").applyInPandas(pack, schema=schema)
-    if with_edges is not None:
-        out = out.withMetadata("edges", {"halo_max": int(with_edges)})
     # NoData-only tiles produce no long rows → absent tiles are fine:
     # downstream treats absent neighbors as all-NoData.
-    return out
+    return keyed.groupBy("ty", "tx").applyInPandas(pack, schema=TILE_SCHEMA)
 
 
 def tiles_to_long(tiles: DataFrame, meta: RasterMeta, tile: int = 256,

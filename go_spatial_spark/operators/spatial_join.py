@@ -166,10 +166,15 @@ def release_knn_caches() -> None:
             pass
 
 
-def knn_self(points: DataFrame, k: int = 5, cell_size: float = 11.25,
-             id_col: str = "doc_id",
-             radii: tuple[int, ...] = (1,),
-             fine_fractions: tuple[float, ...] = (360.0,)) -> DataFrame:
+# kNN stage ladder: base cell size in degrees, the base-size ring
+# radii, and the fine pre-stages as fractions of the base cell
+KNN_CELL_SIZE = 11.25
+KNN_RADII = (1,)
+KNN_FINE_FRACTIONS = (360.0,)
+
+
+def knn_self(points: DataFrame, k: int = 5,
+             id_col: str = "doc_id") -> DataFrame:
     """Exact self-kNN (id, neighbor_id, rank), rank 1..k by (dist2, id).
 
     Escalating cell-ring equi-joins — NEVER a nested loop against the
@@ -178,8 +183,8 @@ def knn_self(points: DataFrame, k: int = 5, cell_size: float = 11.25,
     was the whole query set):
 
     * MULTI-RESOLUTION pre-stages (round-6, guide §2.5 skew): one
-      3x3-ring pass per ``cell_size / f`` for each f in
-      ``fine_fractions``, finest first. The per-stage guarantee test
+      3x3-ring pass per ``KNN_CELL_SIZE / f`` for each f in
+      ``KNN_FINE_FRACTIONS``, finest first. The per-stage guarantee test
       (k candidates and kth distance < 1*cs_stage — any point outside
       a stage's ring is >= radius*cs_stage away, whatever cs_stage
       is) keeps every stage exact, so fine stages resolve DENSE
@@ -190,10 +195,10 @@ def knn_self(points: DataFrame, k: int = 5, cell_size: float = 11.25,
       of all points, and its single-resolution 3x3 ring emitted
       ~1.3e8 candidate pairs at sf1.0 (~10^4 candidates per hot
       query for k=5).
-    * per radius r in ``radii`` (default just the 3x3 ring): (2r+1)^2
+    * per radius r in ``KNN_RADII`` (just the 3x3 ring): (2r+1)^2
       ring join at the base cell size over the still-unresolved
       queries.
-    * final stage: ring of radius ceil(extent/cell_size)+1 — computed
+    * final stage: ring of radius ceil(extent/KNN_CELL_SIZE)+1 — computed
       from the data's own bounding box (one 1-row agg job), so the
       ring provably covers every point and the guarantee is
       unconditional. Still the same exploded-cell HASH join:
@@ -223,12 +228,12 @@ def knn_self(points: DataFrame, k: int = 5, cell_size: float = 11.25,
     ext = points.agg(
         (F.max("lon") - F.min("lon")).alias("dx"),
         (F.max("lat") - F.min("lat")).alias("dy"),
-        F.min(F.floor(F.col("lon") / cell_size)).alias("gxlo"),
-        F.max(F.floor(F.col("lon") / cell_size)).alias("gxhi"),
-        F.min(F.floor(F.col("lat") / cell_size)).alias("gylo"),
-        F.max(F.floor(F.col("lat") / cell_size)).alias("gyhi")).first()
+        F.min(F.floor(F.col("lon") / KNN_CELL_SIZE)).alias("gxlo"),
+        F.max(F.floor(F.col("lon") / KNN_CELL_SIZE)).alias("gxhi"),
+        F.min(F.floor(F.col("lat") / KNN_CELL_SIZE)).alias("gylo"),
+        F.max(F.floor(F.col("lat") / KNN_CELL_SIZE)).alias("gyhi")).first()
     span = max(float(ext.dx or 0.0), float(ext.dy or 0.0))
-    r_max = int(math.ceil(span / cell_size)) + 1
+    r_max = int(math.ceil(span / KNN_CELL_SIZE)) + 1
     bbox = (int(ext.gxlo or 0), int(ext.gxhi or 0),
             int(ext.gylo or 0), int(ext.gyhi or 0))
 
@@ -237,8 +242,8 @@ def knn_self(points: DataFrame, k: int = 5, cell_size: float = 11.25,
     # bounded by data density, not ring width — safe to broadcast
     # (base cell size only — used by the exhaustive stage's semi-join)
     occupied = p_base.select(
-        F.floor(F.col("nx") / cell_size).alias("gx"),
-        F.floor(F.col("ny") / cell_size).alias("gy")).distinct()
+        F.floor(F.col("nx") / KNN_CELL_SIZE).alias("gx"),
+        F.floor(F.col("ny") / KNN_CELL_SIZE).alias("gy")).distinct()
 
     w = Window.partitionBy("qid").orderBy(F.col("dist2"), F.col("nid"))
     w2 = Window.partitionBy("qid")
@@ -325,9 +330,9 @@ def knn_self(points: DataFrame, k: int = 5, cell_size: float = 11.25,
     # then the base-size radii ladder, then the extent-covering
     # exhaustive ring; each stage sees only the queries every finer
     # stage failed to resolve
-    stages = [(cell_size / f, 1) for f in fine_fractions if f > 1] \
-        + [(cell_size, r) for r in radii if r < r_max] \
-        + [(cell_size, r_max)]
+    stages = [(KNN_CELL_SIZE / f, 1) for f in KNN_FINE_FRACTIONS if f > 1] \
+        + [(KNN_CELL_SIZE, r) for r in KNN_RADII if r < r_max] \
+        + [(KNN_CELL_SIZE, r_max)]
     for i, (cs, radius) in enumerate(stages):
         last = i == len(stages) - 1
         stage = ring_topk(remaining, cs, radius, exhaustive=last)

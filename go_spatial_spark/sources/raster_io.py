@@ -14,12 +14,15 @@ Format support mirrors the reference's registry
 - LAS LiDAR     (.las v1.x point records)                R
 
 Strategy per SURVEY.md: headers parse driver-side; payloads decode in
-executors (`binaryFile` source -> NumPy `frombuffer` inside
-mapInPandas), one file per task — files are the parallel unit; at
-production scale the data lives in Parquet/Iceberg and these shims are
-the ingest edge. All cell values land as float64 long form
-(row, col, value), NoData -> absent rows (raster.go:23-53 semantics:
-everything is float64 in memory).
+executors. The binary formats (Whitebox, ArcGIS binary, Idrisi,
+GeoTIFF) share one block-range reader, `_read_blocks`: the driver
+builds a block index from the header alone (raw row strips, or TIFF
+strips/tiles), groups consecutive blocks into tasks with the split
+rule of Spark's own file scan, and each task seek-reads and decodes
+only its own blocks. At production scale the data lives in
+Parquet/Iceberg and these shims are the ingest edge. All cell values
+land as float64 long form (row, col, value), NoData -> absent rows
+(raster.go:23-53 semantics: everything is float64 in memory).
 """
 
 from __future__ import annotations
@@ -34,6 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from go_spatial_spark.grid import NODATA, RasterMeta
+from go_spatial_spark.session import _parse_bytes
 
 
 # ---------------------------------------------------------------------------
@@ -42,10 +46,9 @@ from go_spatial_spark.grid import NODATA, RasterMeta
 
 def _long_form(spark: SparkSession, arr: np.ndarray,
                nodata: float) -> DataFrame:
-    """Distribute a decoded array as long form. The decode itself runs
-    where the bytes are; this helper is used by driver-side decoders
-    (small fixture files). Large rasters go through
-    _read_binary_distributed."""
+    """Distribute a driver-decoded array as long form. Only the two
+    ASCII formats use it: their text has no seekable blocks. Binary
+    formats go through _read_blocks."""
     rows, cols = arr.shape
     mask = arr != nodata
     rr, cc = np.nonzero(mask)
@@ -81,31 +84,82 @@ def _assemble_driver(df: DataFrame, meta: RasterMeta,
     return arr
 
 
-def _read_binary_distributed(spark: SparkSession, path: str, decode_fn,
-                             nodata: float) -> DataFrame:
-    """binaryFile scan -> decode in an executor -> long form."""
-    bf = spark.read.format("binaryFile").load(path).select("path", "content")
+def _read_blocks(spark: SparkSession, path: str, blocks: list, decode_block,
+                 nodata: float, height: int, width: int) -> DataFrame:
+    """Block-range scan -> long form. ``blocks`` is the index the
+    driver built from the header, [(y0, x0, hh, ww, offset, count)];
+    ``decode_block(raw, hh, ww)`` turns one block's bytes into an
+    (hh, ww) array, clipped here to the grid (ragged edge tiles).
+    Consecutive blocks group into tasks by the split rule of Spark's
+    file scan (FilePartition.maxSplitBytes), so a small raster reads
+    in one task and a large one spreads over the cores. Each task
+    seek-reads only its own byte spans: the path must be readable with
+    open() on the driver and every executor (local or shared posix
+    storage)."""
+    size = os.path.getsize(path)
+    for y0, x0, _, _, o, c in blocks:
+        if o + c > size:
+            raise ValueError(
+                f"{path}: truncated; the block at row {y0}, col {x0} "
+                f"ends at byte {o + c} of {size}")
+    total = sum(b[5] for b in blocks)
+    split = min(
+        _parse_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes")),
+        max(_parse_bytes(spark.conf.get("spark.sql.files.openCostInBytes")),
+            total // spark.sparkContext.defaultParallelism))
+    groups, cur, cur_bytes = [], [], 0
+    for b in blocks:
+        if cur and cur_bytes + b[5] > split:
+            groups.append(cur)
+            cur, cur_bytes = [], 0
+        cur.append(b)
+        cur_bytes += b[5]
+    groups.append(cur)
 
     def run(it):
         for pdf in it:
-            for t in pdf.itertuples(index=False):
-                arr = decode_fn(bytes(t.content))
-                mask = arr != nodata
-                rr, cc = np.nonzero(mask)
-                yield pd.DataFrame({
-                    "row": rr.astype(np.int32),
-                    "col": cc.astype(np.int32),
-                    "value": arr[mask].astype(np.float64)})
+            for gid in pdf["id"].to_numpy():
+                rows, cols, vals = [], [], []
+                with open(path, "rb") as f:
+                    for y0, x0, hh, ww, o, c in groups[int(gid)]:
+                        f.seek(o)
+                        data = np.asarray(decode_block(f.read(c), hh, ww),
+                                          dtype=np.float64)
+                        data = data[:height - y0, :width - x0]
+                        rr, cc = np.nonzero(data != nodata)
+                        rows.append(rr + y0)
+                        cols.append(cc + x0)
+                        vals.append(data[rr, cc])
+                if rows:
+                    yield pd.DataFrame({
+                        "row": np.concatenate(rows).astype(np.int32),
+                        "col": np.concatenate(cols).astype(np.int32),
+                        "value": np.concatenate(vals)})
 
-    return bf.mapInPandas(run, schema="row int, col int, value double")
+    return spark.range(len(groups), numPartitions=len(groups)) \
+        .mapInPandas(run, schema="row int, col int, value double")
+
+
+def _read_raw(spark: SparkSession, path: str, meta: RasterMeta,
+              dtype: str) -> DataFrame:
+    """Headerless row-major payload (.tas/.flt/.rst): one row-strip
+    block per grid row, at offset y * cols * itemsize."""
+    step = meta.cols * np.dtype(dtype).itemsize
+    blocks = [(y, 0, 1, meta.cols, y * step, step) for y in range(meta.rows)]
+
+    def decode(raw: bytes, hh: int, ww: int) -> np.ndarray:
+        return np.frombuffer(raw, dtype=dtype).reshape(hh, ww)
+
+    return _read_blocks(spark, path, blocks, decode, meta.nodata,
+                        meta.rows, meta.cols)
 
 
 # ---------------------------------------------------------------------------
 # Whitebox GAT — whiteboxRaster.go:349-505
 # ---------------------------------------------------------------------------
 
-_WB_DTYPES = {"FLOAT": ("<f4", 4), "DOUBLE": ("<f8", 8),
-              "INTEGER": ("<i2", 2), "BYTE": ("<i1", 1)}
+_WB_DTYPES = {"FLOAT": "<f4", "DOUBLE": "<f8", "INTEGER": "<i2",
+              "BYTE": "<i1"}
 
 
 def parse_whitebox_header(text: str) -> dict:
@@ -123,7 +177,7 @@ def read_whitebox(spark: SparkSession, dep_path: str):
         hdr = parse_whitebox_header(f.read())
     rows, cols = int(hdr["rows"]), int(hdr["cols"])
     nodata = float(hdr.get("nodata", NODATA))
-    dtype, _ = _WB_DTYPES[hdr.get("data type", "FLOAT").upper()]
+    dtype = _WB_DTYPES[hdr.get("data type", "FLOAT").upper()]
     if hdr.get("byte order", "LITTLE_ENDIAN").upper().startswith("BIG"):
         dtype = ">" + dtype[1:]
     meta = RasterMeta(rows=rows, cols=cols,
@@ -131,12 +185,7 @@ def read_whitebox(spark: SparkSession, dep_path: str):
                       east=float(hdr["east"]), west=float(hdr["west"]),
                       nodata=nodata)
     tas = os.path.splitext(dep_path)[0] + ".tas"
-
-    def decode(content: bytes) -> np.ndarray:
-        a = np.frombuffer(content, dtype=dtype, count=rows * cols)
-        return a.astype(np.float64).reshape(rows, cols)
-
-    return meta, _read_binary_distributed(spark, tas, decode, nodata)
+    return meta, _read_raw(spark, tas, meta, dtype)
 
 
 def write_whitebox(df: DataFrame, meta: RasterMeta, dep_path: str,
@@ -148,7 +197,6 @@ def write_whitebox(df: DataFrame, meta: RasterMeta, dep_path: str,
     valid = arr != meta.nodata
     mn = float(arr[valid].min()) if valid.any() else 0.0
     mx = float(arr[valid].max()) if valid.any() else 0.0
-    dtype, _ = _WB_DTYPES[data_type]
     with open(dep_path, "w") as f:
         f.write(f"Min:\t{mn}\nMax:\t{mx}\n"
                 f"North:\t{meta.north}\nSouth:\t{meta.south}\n"
@@ -160,7 +208,8 @@ def write_whitebox(df: DataFrame, meta: RasterMeta, dep_path: str,
                 f"Display Min:\t{mn}\nDisplay Max:\t{mx}\n"
                 f"Preferred Palette:\tspectrum.pal\n"
                 f"NoData:\t{meta.nodata}\nByte Order:\tLITTLE_ENDIAN\n")
-    arr.astype(dtype).tofile(os.path.splitext(dep_path)[0] + ".tas")
+    arr.astype(_WB_DTYPES[data_type]).tofile(
+        os.path.splitext(dep_path)[0] + ".tas")
 
 
 # ---------------------------------------------------------------------------
@@ -259,13 +308,7 @@ def read_arcgis_binary(spark: SparkSession, hdr_path: str):
                       south=south, east=west + cols * cell, west=west,
                       nodata=nodata)
     flt = os.path.splitext(hdr_path)[0] + ".flt"
-
-    def decode(content: bytes) -> np.ndarray:
-        return np.frombuffer(content, dtype=order + "f4",
-                             count=rows * cols).astype(np.float64).reshape(
-                                 rows, cols)
-
-    return meta, _read_binary_distributed(spark, flt, decode, nodata)
+    return meta, _read_raw(spark, flt, meta, order + "f4")
 
 
 def write_arcgis_binary(df: DataFrame, meta: RasterMeta,
@@ -302,13 +345,7 @@ def read_idrisi(spark: SparkSession, rdc_path: str):
                       east=float(hdr["max. x"]), west=float(hdr["min. x"]),
                       nodata=nodata)
     rst = os.path.splitext(rdc_path)[0] + ".rst"
-
-    def decode(content: bytes) -> np.ndarray:
-        return np.frombuffer(content, dtype=dtype,
-                             count=rows * cols).astype(np.float64).reshape(
-                                 rows, cols)
-
-    return meta, _read_binary_distributed(spark, rst, decode, nodata)
+    return meta, _read_raw(spark, rst, meta, dtype)
 
 
 def write_idrisi(df: DataFrame, meta: RasterMeta, rdc_path: str,
@@ -553,68 +590,15 @@ def read_geotiff(spark: SparkSession, path: str):
     none(1)/LZW(5)/deflate(8/32946), horizontal predictor,
     GDAL_NODATA, ModelTiepoint + ModelPixelScale georeferencing.
 
-    Whole-file driver decode (fixture path); the production scan is
-    read_geotiff_distributed (block-parallel)."""
+    The driver parses only the IFD (range reads); the strips/tiles
+    decode in `_read_blocks` tasks. Strips with predictor are
+    row-independent and tiles are self-contained, so every block
+    decodes without its neighbours."""
     bo, tags = _parse_tiff_ifd_seek(path)
-    width, height = tags[256][0], tags[257][0]
     decode_block, nodata = _tiff_decoder(bo, tags)
-    arr = np.zeros((height, width), dtype=np.float64)
-    with open(path, "rb") as f:
-        for y0, x0, hh, ww, o, c in _tiff_blocks(tags):
-            f.seek(o)
-            data = decode_block(f.read(c), hh, ww)
-            h2 = min(hh, height - y0)
-            w2 = min(ww, width - x0)
-            arr[y0:y0 + h2, x0:x0 + w2] = data[:h2, :w2]
-    return _tiff_meta(tags, nodata), _long_form(spark, arr, nodata)
-
-
-def read_geotiff_distributed(spark: SparkSession, path: str,
-                             blocks_per_task: int | None = None):
-    """Block-parallel GeoTIFF scan: the driver does an O(header) IFD
-    parse (range reads only), fans the strip/tile index out as one row
-    per block group, and each task range-reads + decodes its own
-    byte spans — a single large GeoTIFF no longer decodes on one core
-    (SURVEY §2.1's tile-per-task production read). Strips with
-    predictor are row-independent, tiles are self-contained, so blocks
-    decode without neighbors. Requires the path to be visible from
-    executors (shared/posix storage — true in local mode and on any
-    cluster filesystem)."""
-    bo, tags = _parse_tiff_ifd_seek(path)
-    width, height = tags[256][0], tags[257][0]
-    decode_block, nodata = _tiff_decoder(bo, tags)
-    blocks = _tiff_blocks(tags)
-    if blocks_per_task is None:
-        target = 4 * spark.sparkContext.defaultParallelism
-        blocks_per_task = max(1, len(blocks) // max(target, 1))
-    groups = [blocks[i:i + blocks_per_task]
-              for i in range(0, len(blocks), blocks_per_task)]
-    gdf = spark.createDataFrame(
-        [(i,) for i in range(len(groups))], "gid int") \
-        .repartition(len(groups), "gid")
-    bgroups = spark.sparkContext.broadcast(groups)
-
-    def run(it):
-        for pdf in it:
-            for gid in pdf["gid"].to_numpy():
-                outs = []
-                with open(path, "rb") as f:
-                    for y0, x0, hh, ww, o, c in bgroups.value[int(gid)]:
-                        f.seek(o)
-                        data = decode_block(f.read(c), hh, ww)
-                        h2 = min(hh, height - y0)
-                        w2 = min(ww, width - x0)
-                        data = data[:h2, :w2]
-                        rr, cc = np.nonzero(data != nodata)
-                        outs.append(pd.DataFrame({
-                            "row": (rr + y0).astype(np.int32),
-                            "col": (cc + x0).astype(np.int32),
-                            "value": data[rr, cc]}))
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
-
-    df = gdf.mapInPandas(run, schema="row int, col int, value double")
-    return _tiff_meta(tags, nodata), df
+    meta = _tiff_meta(tags, nodata)
+    return meta, _read_blocks(spark, path, _tiff_blocks(tags), decode_block,
+                              nodata, meta.rows, meta.cols)
 
 
 # ---------------------------------------------------------------------------

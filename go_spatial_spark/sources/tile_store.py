@@ -50,16 +50,14 @@ def write_tiles_bucketed(tiles: DataFrame, meta: RasterMeta, name: str,
     if path is not None:
         writer = writer.option("path", path)
     writer.saveAsTable(name)
-    props = ", ".join(
-        f"'gss.{k}'='{getattr(meta, k)!r}'" for k in _META_KEYS)
-    spark.sql(f"ALTER TABLE {name} SET TBLPROPERTIES ({props})")
+    props = [f"'gss.{k}'='{getattr(meta, k)!r}'" for k in _META_KEYS]
     from go_spatial_spark.grid import edges_halo_max
     hm = edges_halo_max(tiles)
     if hm:
         # persist the sidecar's halo_max so a later scan re-attaches
         # the column metadata run_stencil keys the JVM-strip path on
-        spark.sql(f"ALTER TABLE {name} SET TBLPROPERTIES "
-                  f"('gss.edges_halo_max'='{hm}')")
+        props.append(f"'gss.edges_halo_max'='{hm}'")
+    spark.sql(f"ALTER TABLE {name} SET TBLPROPERTIES ({', '.join(props)})")
 
 
 def read_tiles_bucketed(spark: SparkSession, name: str

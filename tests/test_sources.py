@@ -395,3 +395,27 @@ def test_malformed_header_raises_value_error(spark, tmp_path, reader):
     p.write_bytes(bytes(range(7, 256)) * 2)
     with pytest.raises(ValueError):
         getattr(io, reader)(spark, str(p))
+
+
+@pytest.mark.parametrize("fmt", ["tas", "tif"])
+def test_truncated_payload_raises_value_error(spark, tmp_path, fmt):
+    """A payload shorter than its header promises is rejected on the
+    driver, before any task starts."""
+    rows, cols = 6, 5
+    arr = np.arange(rows * cols, dtype="<f8").reshape(rows, cols)
+    if fmt == "tas":
+        p = tmp_path / "t.dep"
+        p.write_text(f"Rows:\t{rows}\nCols:\t{cols}\nNorth:\t{rows}\n"
+                     f"South:\t0\nEast:\t{cols}\nWest:\t0\n"
+                     f"Data Type:\tDOUBLE\nNoData:\t-32768\n")
+        (tmp_path / "t.tas").write_bytes(arr.tobytes()[:-8])
+    else:
+        entries = [(256, 4, [cols]), (257, 4, [rows]), (258, 3, [64]),
+                   (259, 3, [1]), (262, 3, [1]), (277, 3, [1]),
+                   (278, 4, [rows]), (279, 4, [arr.nbytes]), (339, 3, [3])]
+        head = len(_mk_tiff(entries + [(273, 4, [0])], b""))
+        p = tmp_path / "t.tif"
+        p.write_bytes(_mk_tiff(entries + [(273, 4, [head])],
+                               arr.tobytes())[:-8])
+    with pytest.raises(ValueError, match="truncated"):
+        io.read_raster(spark, str(p))

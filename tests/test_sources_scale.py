@@ -1,5 +1,5 @@
-"""Scale paths of the file sources/sinks: block-parallel GeoTIFF scan
-(>1 task per file) and the guarded / distributed writers."""
+"""Scale paths of the file sources/sinks: the block-range GeoTIFF scan
+and the guarded / distributed writers."""
 
 import numpy as np
 import pytest
@@ -13,82 +13,88 @@ GOLDEN = 429.42730712890625  # rasterFormat_test.go:30
 
 
 def test_geotiff_distributed_matches_driver_read(spark):
-    meta, df = io.read_geotiff_distributed(spark, f"{FIX}/DEM.tif",
-                                           blocks_per_task=16)
+    meta, df = io.read_geotiff(spark, f"{FIX}/DEM.tif")
     assert (meta.rows, meta.cols) == (188, 237)
     got = df.where("row = 100 AND col = 100").collect()
     assert len(got) == 1 and got[0]["value"] == GOLDEN
-    # multi-task: 188 one-row strips / 16 per task -> 12 block groups
+    # the block index: 188 one-row strips
     _, tags = io._parse_tiff_ifd_seek(f"{FIX}/DEM.tif")
     blocks = io._tiff_blocks(tags)
     assert len(blocks) == 188
-    # full equality with the driver-side decode
-    _, ref = io.read_geotiff(spark, f"{FIX}/DEM.tif")
-    sym = df.exceptAll(ref).unionAll(ref.exceptAll(df))
-    assert sym.count() == 0
 
 
-def _write_deflate_tiff(path, arr, rows_per_strip=4):
-    """Minimal multi-strip deflate-compressed float64 TIFF builder."""
+def _write_tiff(path, arr, rows_per_strip=None, tile=None, deflate=False,
+                predictor=False, nodata=None):
+    """Minimal little-endian classic TIFF of the one band ``arr`` (its
+    dtype sets BitsPerSample and SampleFormat): strips of
+    ``rows_per_strip`` rows, or ``tile`` x ``tile`` tiles zero-padded at
+    the ragged edges; optionally deflate with horizontal differencing
+    (predictor 2, integer dtypes) and a GDAL_NODATA tag."""
     import struct
     import zlib
-    h, w = arr.shape
-    strips = []
-    for y in range(0, h, rows_per_strip):
-        strips.append(zlib.compress(
-            arr[y:y + rows_per_strip].astype("<f8").tobytes()))
-    n_tags = 10
-    data_off = 8 + 2 + n_tags * 12 + 4
-    overflow = bytearray()
+    a = arr.astype(arr.dtype.newbyteorder("<"))
+    h, w = a.shape
+    if tile:
+        pad = np.zeros((-(-h // tile) * tile, -(-w // tile) * tile), a.dtype)
+        pad[:h, :w] = a
+        blocks = [pad[y:y + tile, x:x + tile]
+                  for y in range(0, pad.shape[0], tile)
+                  for x in range(0, pad.shape[1], tile)]
+    else:
+        blocks = [a[y:y + rows_per_strip] for y in range(0, h, rows_per_strip)]
+    payloads = []
+    for b in blocks:
+        if predictor:  # integer differences wrap, as the cumsum decode
+            b = np.concatenate([b[:, :1], np.diff(b, axis=1)], axis=1)
+        raw = np.ascontiguousarray(b).tobytes()
+        payloads.append(zlib.compress(raw) if deflate else raw)
+    tags = {256: (4, [w]), 257: (4, [h]), 258: (3, [8 * a.itemsize]),
+            259: (3, [8 if deflate else 1]), 262: (3, [1]), 277: (3, [1]),
+            339: (3, [{"u": 1, "i": 2, "f": 3}[a.dtype.kind]])}
+    if predictor:
+        tags[317] = (3, [2])
+    if nodata is not None:
+        tags[42113] = (2, f"{nodata}\x00".encode())
+    if tile:
+        tags[322] = tags[323] = (3, [tile])
+        off_tag, cnt_tag = 324, 325
+    else:
+        tags[278] = (4, [rows_per_strip])
+        off_tag, cnt_tag = 273, 279
+    tags[cnt_tag] = (4, [len(p) for p in payloads])
+    tags[off_tag] = (4, [0] * len(payloads))
+    size = {2: 1, 3: 2, 4: 4}
 
-    def alloc(b):
-        off = data_off + len(overflow)
-        overflow.extend(b)
-        return off
+    def raw(typ, v):
+        return v if typ == 2 else struct.pack(
+            "<" + {3: "H", 4: "I"}[typ] * len(v), *v)
 
-    n_strips = len(strips)
-    cnts = [len(s) for s in strips]
-    cnts_off = alloc(struct.pack("<" + "I" * n_strips, *cnts))
-    offs_pos = alloc(b"\x00" * 4 * n_strips)
-    offs = []
-    for s in strips:
-        offs.append(alloc(s))
-    overflow[offs_pos - data_off:offs_pos - data_off + 4 * n_strips] = \
-        struct.pack("<" + "I" * n_strips, *offs)
-
-    def short(v):
-        return struct.pack("<HH", v, 0)
-
-    def long_(v):
-        return struct.pack("<I", v)
-
-    entries = [
-        (256, 3, 1, short(w)), (257, 3, 1, short(h)),
-        (258, 3, 1, short(64)), (259, 3, 1, short(8)),
-        (262, 3, 1, short(1)),
-        (273, 4, n_strips, long_(offs[0]) if n_strips == 1
-         else long_(offs_pos)),
-        (277, 3, 1, short(1)), (278, 3, 1, short(rows_per_strip)),
-        (279, 4, n_strips, long_(cnts[0]) if n_strips == 1
-         else long_(cnts_off)),
-        (339, 3, 1, short(3)),
-    ]
+    data_off = 8 + 2 + 12 * len(tags) + 4
+    start = data_off + sum(len(raw(*t)) for t in tags.values()
+                           if len(raw(*t)) > 4)
+    ends = np.cumsum([start] + [len(p) for p in payloads])
+    tags[off_tag] = (4, [int(o) for o in ends[:-1]])
+    ifd, extra = b"", b""
+    for tag in sorted(tags):
+        typ, v = tags[tag]
+        r = raw(typ, v)
+        ifd += struct.pack("<HHI", tag, typ, len(r) // size[typ])
+        if len(r) <= 4:
+            ifd += r.ljust(4, b"\x00")
+        else:
+            ifd += struct.pack("<I", data_off + len(extra))
+            extra += r
     with open(path, "wb") as f:
-        f.write(b"II" + struct.pack("<HI", 42, 8))
-        f.write(struct.pack("<H", n_tags))
-        for tag, typ, cnt, val in entries:
-            f.write(struct.pack("<HHI", tag, typ, cnt)
-                    + val.ljust(4, b"\x00")[:4])
-        f.write(struct.pack("<I", 0))
-        f.write(bytes(overflow))
+        f.write(b"II" + struct.pack("<HIH", 42, 8, len(tags)) + ifd
+                + struct.pack("<I", 0) + extra + b"".join(payloads))
 
 
 def test_geotiff_distributed_compressed(spark, tmp_path):
-    """Compressed (deflate) blocks decode per task too."""
+    """Deflate-compressed strips decode in the block reader."""
     rng = np.arange(22 * 13, dtype=np.float64).reshape(22, 13) / 8.0
     p = str(tmp_path / "z.tif")
-    _write_deflate_tiff(p, rng, rows_per_strip=4)
-    meta, df = io.read_geotiff_distributed(spark, p, blocks_per_task=2)
+    _write_tiff(p, rng, rows_per_strip=4, deflate=True)
+    meta, df = io.read_geotiff(spark, p)
     pdf = df.toPandas()
     got = np.full((22, 13), np.nan)
     got[pdf["row"], pdf["col"]] = pdf["value"]
@@ -115,8 +121,8 @@ def test_distributed_geotiff_writer_byte_identical(spark, tmp_path):
     io.write_geotiff_distributed(dem, meta, p2)
     with open(p1, "rb") as f1, open(p2, "rb") as f2:
         assert f1.read() == f2.read()
-    # and it round-trips through the distributed reader
-    meta2, back = io.read_geotiff_distributed(spark, p2, blocks_per_task=7)
+    # and it round-trips through the block reader
+    meta2, back = io.read_geotiff(spark, p2)
     assert back.count() == dem.count()
     sym = back.exceptAll(dem).unionAll(dem.exceptAll(back))
     assert sym.count() == 0
@@ -144,3 +150,82 @@ def test_distributed_writer_rows_spanning_batches(spark, tmp_path):
             assert f1.read() == f2.read()
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+
+ND = -32768.0
+_RAW_HEADERS = {
+    ".dep": "Rows:\t{r}\nCols:\t{c}\nNorth:\t{r}\nSouth:\t0\nEast:\t{c}\n"
+            "West:\t0\nData Type:\t{t}\nNoData:\t-32768\n"
+            "Byte Order:\t{bo}\n",
+    ".hdr": "NCOLS {c}\nNROWS {r}\nXLLCORNER 0\nYLLCORNER 0\nCELLSIZE 1\n"
+            "NODATA_VALUE -32768\nBYTEORDER LSBFIRST\n",
+    ".rdc": "data type   : real\ncolumns     : {c}\nrows        : {r}\n"
+            "min. X      : 0\nmax. X      : {c}\nmin. Y      : 0\n"
+            "max. Y      : {r}\nflag value  : -32768\n",
+}
+_PAYLOAD = {".dep": ".tas", ".hdr": ".flt", ".rdc": ".rst"}
+
+
+def _write_case(tmp_path, case, rows, cols):
+    """Write one binary-format raster for ``case``; returns (path, the
+    array that wrote it as float64). About a tenth of the cells hold
+    the NoData value -32768."""
+    rng = np.random.default_rng(rows * 1000 + cols)
+    vals = rng.normal(0.0, 1e3, (rows, cols))
+    dtype = {"tif_tiled_ragged": "<f4", "tif_deflate_pred2": "<i2",
+             "tas_float_be": ">f4", "flt": "<f4", "rst": "<f4"}.get(case, "<f8")
+    if dtype == "<i2":
+        vals = rng.integers(-32768, 32768, (rows, cols))
+    arr = vals.astype(dtype)
+    arr[rng.random((rows, cols)) < 0.1] = ND
+    if case.startswith("tif"):
+        p = str(tmp_path / "r.tif")
+        _write_tiff(p, arr, nodata=ND, tile=16 if "tiled" in case else None,
+                    rows_per_strip=None if "tiled" in case else 3,
+                    deflate="deflate" in case, predictor="pred2" in case)
+    else:
+        ext = {"tas_double": ".dep", "tas_float_be": ".dep", "flt": ".hdr",
+               "rst": ".rdc"}[case]
+        p = str(tmp_path / ("r" + ext))
+        with open(p, "w") as f:
+            f.write(_RAW_HEADERS[ext].format(
+                r=rows, c=cols, t="DOUBLE" if case == "tas_double"
+                else "FLOAT", bo="BIG_ENDIAN" if dtype[0] == ">"
+                else "LITTLE_ENDIAN"))
+        arr.tofile(str(tmp_path / ("r" + _PAYLOAD[ext])))
+    return p, arr.astype(np.float64)
+
+
+@pytest.mark.parametrize("case", [
+    "tif_strip", "tif_tiled_ragged", "tif_deflate_pred2", "tas_double",
+    "tas_float_be", "flt", "rst", "tif_strip_256_default_conf"])
+def test_read_blocks_bit_exact(spark, tmp_path, case):
+    """Every binary format reads bit-exact against the array that
+    wrote it: across several tasks when the file-scan split settings
+    are small, and in one task for a 256^2 raster at the default
+    settings."""
+    keys = ("spark.sql.files.maxPartitionBytes",
+            "spark.sql.files.openCostInBytes")
+    old = [spark.conf.get(k) for k in keys]
+    default_conf = case.endswith("_default_conf")
+    if not default_conf:
+        spark.conf.set(keys[0], "1k")
+        spark.conf.set(keys[1], "0")
+    try:
+        shape = (256, 256) if default_conf else (37, 45)
+        p, want = _write_case(tmp_path, case.replace("_256_default_conf", ""),
+                              *shape)
+        meta, df = io.read_raster(spark, p)
+        assert (meta.rows, meta.cols) == shape
+        if default_conf:
+            assert df.rdd.getNumPartitions() == 1
+        else:
+            assert df.rdd.getNumPartitions() > 1
+        pdf = df.toPandas()
+    finally:
+        for k, v in zip(keys, old):
+            spark.conf.set(k, v)
+    assert len(pdf) == int((want != ND).sum())
+    got = np.full(shape, ND)
+    got[pdf["row"], pdf["col"]] = pdf["value"]
+    assert np.array_equal(got, want)
