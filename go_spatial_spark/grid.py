@@ -224,7 +224,11 @@ def long_to_tiles(df: DataFrame, meta: RasterMeta,
 
     Partitioning: hash on (ty, tx) — tiles are the unit of parallelism,
     analogous to the reference's row blocks (hillshade.go:184-205) but
-    shuffle-addressable.
+    shuffle-addressable. A raster of more than one tile is hash-
+    partitioned explicitly: a one-task input (a small file's block
+    scan) satisfies the grouping as it stands, so Spark would plan no
+    exchange and run every tile, and every stencil after it, on one
+    core. A one-tile raster keeps that exchange-free plan.
     """
     rows, cols, nodata = meta.rows, meta.cols, meta.nodata
 
@@ -242,6 +246,8 @@ def long_to_tiles(df: DataFrame, meta: RasterMeta,
     keyed = df.withColumn("ty", (F.col("row") / tile).cast("int")).withColumn(
         "tx", (F.col("col") / tile).cast("int")
     )
+    if rows > tile or cols > tile:
+        keyed = keyed.repartition("ty", "tx")
     # NoData-only tiles produce no long rows → absent tiles are fine:
     # downstream treats absent neighbors as all-NoData.
     return keyed.groupBy("ty", "tx").applyInPandas(pack, schema=TILE_SCHEMA)

@@ -837,9 +837,13 @@ def write_geotiff_distributed(df: DataFrame, meta: RasterMeta,
     shared file (strip-per-row layout makes row ranges disjoint, so
     concurrent pwrite-style seek+write needs no coordination).
     Produces a file byte-identical to write_geotiff. Requires the
-    path on storage visible to executors (local mode / cluster FS)."""
+    path on storage visible to executors (local mode / cluster FS).
+    The tasks write a sibling ``.part`` file that replaces ``path``
+    only once every strip is in: the input may be a lazy scan of
+    ``path`` itself (a CLI run that rewrites its input)."""
     head, strips_start = _geotiff_header(meta)
-    with open(path, "wb") as f:
+    part = path + ".part"
+    with open(part, "wb") as f:
         f.write(head)
     cols, nodata = meta.cols, meta.nodata
     strip_bytes = cols * 8
@@ -862,7 +866,7 @@ def write_geotiff_distributed(df: DataFrame, meta: RasterMeta,
 
     def write_rows(it):
         cur = {"id": None, "buf": None}
-        with open(path, "r+b") as f:
+        with open(part, "r+b") as f:
             def flush():
                 if cur["id"] is not None:
                     f.seek(strips_start + int(cur["id"]) * strip_bytes)
@@ -882,7 +886,12 @@ def write_geotiff_distributed(df: DataFrame, meta: RasterMeta,
             flush()
         yield pd.DataFrame({"n": pd.Series([1], dtype="int64")})
 
-    base.mapInPandas(write_rows, schema="n long").count()
+    try:
+        base.mapInPandas(write_rows, schema="n long").count()
+    except BaseException:
+        os.remove(part)
+        raise
+    os.replace(part, path)
 
 
 def whitebox_to_geotiff(spark: SparkSession, dep_path: str,

@@ -8,6 +8,7 @@ from go_spatial_spark.cli import Console, _split_tool_args, main
 from go_spatial_spark.grid import (
     NODATA, RasterMeta, synthetic_dem, synthetic_dem_numpy,
 )
+from go_spatial_spark.sources import raster_io
 from go_spatial_spark.sources.raster_io import read_raster, write_raster
 from tests.test_kernels import golden_slope
 
@@ -70,6 +71,30 @@ def test_run_slope_file_roundtrip(spark, tmp_path):
     assert any("Wrote" in ln for ln in lines)
 
     m2, out = read_raster(spark, str(tmp_path / "out.tif"))
+    pdf = out.toPandas()
+    arr = np.full((rows, cols), NODATA)
+    arr[pdf["row"], pdf["col"]] = pdf["value"]
+    want = golden_slope(synthetic_dem_numpy(rows, cols), 8.0)
+    valid = want != NODATA
+    assert np.allclose(arr[valid], want[valid], atol=1e-6)
+
+
+def test_run_rewrites_tif_in_place(spark, tmp_path, monkeypatch):
+    """Input and output the same .tif, over the driver-assembly ceiling:
+    the distributed writer must not clobber the file its lazy input
+    scan still reads."""
+    rows, cols = 20, 20
+    path = tmp_path / "dem.tif"
+    write_raster(synthetic_dem(spark, rows, cols),
+                 RasterMeta(rows=rows, cols=cols), str(path))
+    monkeypatch.setattr(raster_io, "MAX_DRIVER_CELLS", 100)
+    con, lines = _console(spark)
+    con.cwd = str(tmp_path) + "/"
+    con.dispatch('run slope "dem.tif;dem.tif"')
+    assert any("Wrote" in ln for ln in lines)
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["dem.tif"]
+
+    _, out = read_raster(spark, str(path))
     pdf = out.toPandas()
     arr = np.full((rows, cols), NODATA)
     arr[pdf["row"], pdf["col"]] = pdf["value"]

@@ -5,7 +5,9 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from go_spatial_spark.grid import NODATA, RasterMeta, synthetic_dem
+from go_spatial_spark.grid import (
+    NODATA, RasterMeta, long_to_tiles, synthetic_dem,
+)
 from go_spatial_spark.sources import raster_io as io
 
 FIX = "/root/reference/geospatialfiles/tests/testdata"
@@ -229,3 +231,18 @@ def test_read_blocks_bit_exact(spark, tmp_path, case):
     got = np.full(shape, ND)
     got[pdf["row"], pdf["col"]] = pdf["value"]
     assert np.array_equal(got, want)
+
+
+@pytest.mark.parametrize("tile,exchanges", [(16, 1), (64, 0)])
+def test_one_task_scan_spreads_tiles(spark, tmp_path, tile, exchanges):
+    """A small file reads in one task, and a one-task input satisfies
+    any grouping as it stands. long_to_tiles must still hash-partition
+    a raster of more than one tile (3x3 tiles at 16), or every tile and
+    every stencil after it would run on one core; a one-tile raster
+    (tile 64) keeps the exchange-free plan."""
+    p, _ = _write_case(tmp_path, "tif_strip", 37, 45)
+    meta, df = io.read_raster(spark, p)
+    assert df.rdd.getNumPartitions() == 1
+    plan = long_to_tiles(df, meta, tile=tile)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == exchanges
