@@ -7,7 +7,11 @@ result to `<dir>/<name>` as Parquet the first time and *reads it back*
 on re-run — so a restarted driver skips completed stages. Alongside
 each stage, a row goes to `<dir>/_metrics.jsonl` with row count,
 per-partition row counts (lineage at partition/tile granularity), and
-wall time.
+wall time. The counts come from the Parquet footers of the `part-*`
+files just written, keyed by the write partition number in each file
+name, so recording them runs no Spark job. A fresh stage reads back
+with the schema it was written with, which spares the footer job of
+schema inference; a resumed stage infers it from the files.
 
 The tiled hydrology operators checkpoint with `ckpt_dir`: each of their
 perimeter-graph solves persists its pass-1 relation as one stage (fill:
@@ -20,9 +24,12 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
+from collections import Counter
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
 
 
 class CheckpointManager:
@@ -40,15 +47,19 @@ class CheckpointManager:
     def read_stage(self, spark: SparkSession, name: str) -> DataFrame:
         return spark.read.parquet(self._path(name))
 
-    def _record(self, name: str, df: DataFrame, wall_s: float) -> dict:
-        per_part = (df.groupBy(F.spark_partition_id().alias("pid"))
-                    .count().collect())
+    def _record(self, name: str, wall_s: float) -> dict:
+        per_part = Counter()
+        path = self._path(name)
+        for f in os.listdir(path):
+            m = re.match(r"part-(\d+)", f)
+            if m:
+                per_part[int(m.group(1))] += pq.read_metadata(
+                    os.path.join(path, f)).num_rows
         metrics = {
             "stage": name,
-            "rows": int(sum(r["count"] for r in per_part)),
+            "rows": sum(per_part.values()),
             "n_partitions": len(per_part),
-            "partition_rows": {int(r["pid"]): int(r["count"])
-                               for r in per_part},
+            "partition_rows": dict(sorted(per_part.items())),
             "wall_s": round(wall_s, 3),
             "ts": time.time(),
         }
@@ -65,8 +76,8 @@ class CheckpointManager:
         t0 = time.perf_counter()
         df = build()
         df.write.mode("overwrite").parquet(self._path(name))
-        out = self.read_stage(spark, name)
-        self._record(name, out, time.perf_counter() - t0)
+        out = spark.read.schema(df.schema).parquet(self._path(name))
+        self._record(name, time.perf_counter() - t0)
         return out
 
     def metrics(self) -> list[dict]:

@@ -68,6 +68,14 @@ _EXTRA_ARGS = {
 # tools that take files directly rather than an input grid
 _FILE_TOOLS = {"whitebox2geotiff", "printgeotifftags", "printlasinfo"}
 
+# tools that write several rasters: one output argument per value
+# column, in order, after the input (maximumElevationDeviation.go
+# :543-591 writes the magnitude, then the scale)
+_MULTI_OUT = {"maximumelevationdeviation": ("max_dev", "scale")}
+
+_OUT_EXTS = (".dep", ".tas", ".tif", ".tiff", ".rdc", ".rst", ".hdr",
+             ".flt", ".asc", ".txt", ".grd")
+
 
 def _int(a, i, d):
     return int(float(a[i])) if len(a) > i and a[i].strip() else d
@@ -168,7 +176,8 @@ class Console:
 
         # arg-count / input-existence validation (the reference prints
         # 'no such file or directory' and keeps the console alive)
-        need = 2 if key == "whitebox2geotiff" else 1
+        need = 2 if key == "whitebox2geotiff" else \
+            1 + len(_MULTI_OUT.get(key, ()))
         if len(args) < need:
             self.out(f"Tool arguments not specified for '{tool.name}'; "
                      f"type 'toolargs {tool.name}' for the argument list")
@@ -200,18 +209,25 @@ class Console:
             return df
 
         in_path = self._abspath(args[0])
-        out_path = self._abspath(args[1]) if len(args) > 1 else ""
-        if os.path.splitext(out_path)[1].lower() not in (
-                ".dep", ".tas", ".tif", ".tiff", ".rdc", ".rst", ".hdr",
-                ".flt", ".asc", ".txt", ".grd"):
-            out_path += ".tif"  # default, meanFilter.go:98-101
+        cols = _MULTI_OUT.get(key, (None,))
+        out_paths = []
+        for i in range(1, 1 + len(cols)):
+            p = self._abspath(args[i]) if len(args) > i else ""
+            if os.path.splitext(p)[1].lower() not in _OUT_EXTS:
+                p += ".tif"  # default, meanFilter.go:98-101
+            out_paths.append(p)
         meta, grid = read_raster(self.spark, in_path)
-        kwargs = _EXTRA_ARGS.get(key, lambda a: {})(args[2:])
+        kwargs = _EXTRA_ARGS.get(key, lambda a: {})(args[1 + len(cols):])
         out = registry.run_tool(self.spark, tool.name, grid, meta, **kwargs)
-        write_raster(out, meta, out_path)
+        if len(cols) > 1:
+            out = out.localCheckpoint()  # computed once, written per column
+        for col, p in zip(cols, out_paths):
+            write_raster(out if col is None
+                         else out.select("row", "col", col), meta, p)
         if self.bench_mode:
             self.out(f"Elapsed time: {time.time() - t0:.3f} s")
-        self.out(f"Wrote {out_path}")
+        for p in out_paths:
+            self.out(f"Wrote {p}")
         return out
 
     # -- REPL ----------------------------------------------------------

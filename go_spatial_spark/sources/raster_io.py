@@ -750,7 +750,10 @@ def _geotiff_header(meta: RasterMeta) -> tuple[bytes, int]:
     """IFD + out-of-line tag data for the strip-per-row uncompressed
     float64 layout -> (header bytes, strips_start offset). Shared by
     the driver and distributed writers so their files are
-    byte-identical."""
+    byte-identical. ImageWidth/ImageLength are SHORT up to 65,535 and
+    LONG above; the strip offsets are classic-TIFF 32-bit LONGs, so a
+    file that would pass 4 GiB raises ``ValueError`` here, before any
+    task writes."""
     rows, cols = meta.rows, meta.cols
     bo = "<"
     strip_bytes = cols * 8
@@ -777,6 +780,10 @@ def _geotiff_header(meta: RasterMeta) -> tuple[bytes, int]:
     offsets_off = data_off + len(overflow)
     overflow.extend(b"\x00" * (4 * rows))
     strips_start = data_off + len(overflow)
+    if strips_start + rows * strip_bytes > 1 << 32:
+        raise ValueError(
+            f"a {rows} x {cols} float64 GeoTIFF passes the 4 GiB limit of "
+            f"classic TIFF offsets")
     strip_offs = [strips_start + r * strip_bytes for r in range(rows)]
     overflow[offsets_off - data_off:offsets_off - data_off + 4 * rows] = \
         struct.pack(bo + "I" * rows, *strip_offs)
@@ -787,9 +794,12 @@ def _geotiff_header(meta: RasterMeta) -> tuple[bytes, int]:
     def long_(v):
         return struct.pack(bo + "I", v)
 
+    def dim(tag, v):
+        return (tag, 3, 1, short(v)) if v <= 0xFFFF else (tag, 4, 1, long_(v))
+
     entries = [
-        (256, 3, 1, short(cols)),
-        (257, 3, 1, short(rows)),
+        dim(256, cols),
+        dim(257, rows),
         (258, 3, 1, short(64)),
         (259, 3, 1, short(1)),
         (262, 3, 1, short(1)),

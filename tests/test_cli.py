@@ -4,6 +4,7 @@ the extension-dispatch reader/writer."""
 
 import numpy as np
 
+from go_spatial_spark import registry
 from go_spatial_spark.cli import Console, _split_tool_args, main
 from go_spatial_spark.grid import (
     NODATA, RasterMeta, synthetic_dem, synthetic_dem_numpy,
@@ -112,6 +113,33 @@ def test_run_default_tif_extension(spark, tmp_path):
     con.cwd = str(tmp_path) + "/"
     con.run("hillshade", ["dem.dep", "shade"])  # no extension
     assert (tmp_path / "shade.tif").exists()  # meanFilter.go:98-101
+
+
+def test_run_max_elev_deviation_writes_two_rasters(spark, tmp_path):
+    """MaximumElevationDeviation takes input, magnitude and scale paths,
+    then min/max/step, and writes max_dev and scale to their own files
+    (maximumElevationDeviation.go:543-591)."""
+    rows, cols = 24, 24
+    meta = RasterMeta(rows=rows, cols=cols)
+    grid = synthetic_dem(spark, rows, cols)
+    write_raster(grid, meta, str(tmp_path / "dem.dep"))
+    con, lines = _console(spark)
+    con.cwd = str(tmp_path) + "/"
+    con.dispatch('run MaximumElevationDeviation '
+                 '"dem.dep;mag.tif;scale.tif;2;6;2"')
+    assert sum("Wrote" in ln for ln in lines) == 2
+
+    want = registry.run_tool(spark, "MaximumElevationDeviation", grid, meta,
+                             scales=[2, 4, 6]).toPandas()
+    for name, col in (("mag.tif", "max_dev"), ("scale.tif", "scale")):
+        _, out = read_raster(spark, str(tmp_path / name))
+        pdf = out.toPandas()
+        got = np.full((rows, cols), NODATA)
+        got[pdf["row"], pdf["col"]] = pdf["value"]
+        exp = np.full((rows, cols), NODATA)
+        exp[want["row"], want["col"]] = want[col]
+        assert np.array_equal(got, exp)
+    assert set(np.unique(exp[exp != NODATA])) == {2.0, 4.0, 6.0}
 
 
 def test_main_flags(capsys):

@@ -25,12 +25,61 @@ def test_geotiff_distributed_matches_driver_read(spark):
     assert len(blocks) == 188
 
 
+def _lzw_encode(data: bytes) -> bytes:
+    """TIFF LZW as libtiff writes it (TIFF 6.0 section 13): MSB-first
+    codes from 9 bits, a Clear code first, one bit wider as soon as the
+    next table entry would not fit (the early change), a Clear and a
+    reset when the table reaches 4094 entries, and an EOI at the width
+    the decoder expects after the last code."""
+    clear, eoi = 256, 257
+    out = bytearray()
+    acc = nacc = 0
+
+    def put(code):
+        nonlocal acc, nacc
+        acc = (acc << width) | code
+        nacc += width
+        while nacc >= 8:
+            nacc -= 8
+            out.append((acc >> nacc) & 0xFF)
+        acc &= (1 << nacc) - 1
+
+    def grow():
+        nonlocal table, nxt, width
+        nxt += 1
+        if nxt == 4094:
+            put(clear)
+            table, nxt, width = {bytes([i]): i for i in range(256)}, 258, 9
+        elif nxt > (1 << width) - 1:
+            width += 1
+
+    table, nxt, width = {bytes([i]): i for i in range(256)}, 258, 9
+    put(clear)
+    w = b""
+    for b in data:
+        wc = w + bytes([b])
+        if wc in table:
+            w = wc
+            continue
+        put(table[w])
+        table[wc] = nxt
+        grow()
+        w = bytes([b])
+    if w:
+        put(table[w])
+        grow()
+    put(eoi)
+    if nacc:
+        out.append((acc << (8 - nacc)) & 0xFF)
+    return bytes(out)
+
+
 def _write_tiff(path, arr, rows_per_strip=None, tile=None, deflate=False,
-                predictor=False, nodata=None):
+                predictor=False, nodata=None, lzw=False):
     """Minimal little-endian classic TIFF of the one band ``arr`` (its
     dtype sets BitsPerSample and SampleFormat): strips of
     ``rows_per_strip`` rows, or ``tile`` x ``tile`` tiles zero-padded at
-    the ragged edges; optionally deflate with horizontal differencing
+    the ragged edges; optionally deflate or LZW, horizontal differencing
     (predictor 2, integer dtypes) and a GDAL_NODATA tag."""
     import struct
     import zlib
@@ -49,9 +98,10 @@ def _write_tiff(path, arr, rows_per_strip=None, tile=None, deflate=False,
         if predictor:  # integer differences wrap, as the cumsum decode
             b = np.concatenate([b[:, :1], np.diff(b, axis=1)], axis=1)
         raw = np.ascontiguousarray(b).tobytes()
-        payloads.append(zlib.compress(raw) if deflate else raw)
+        payloads.append(zlib.compress(raw) if deflate
+                        else _lzw_encode(raw) if lzw else raw)
     tags = {256: (4, [w]), 257: (4, [h]), 258: (3, [8 * a.itemsize]),
-            259: (3, [8 if deflate else 1]), 262: (3, [1]), 277: (3, [1]),
+            259: (3, [8 if deflate else 5 if lzw else 1]), 262: (3, [1]), 277: (3, [1]),
             339: (3, [{"u": 1, "i": 2, "f": 3}[a.dtype.kind]])}
     if predictor:
         tags[317] = (3, [2])
@@ -130,6 +180,26 @@ def test_distributed_geotiff_writer_byte_identical(spark, tmp_path):
     assert sym.count() == 0
 
 
+def test_geotiff_header_wide_raster(tmp_path):
+    """A width above 65,535 goes in as a LONG, and the reader's block
+    index finds every strip where the writer puts it."""
+    head, start = io._geotiff_header(RasterMeta(rows=10, cols=70000))
+    p = tmp_path / "wide.tif"
+    p.write_bytes(head)
+    _, tags = io._parse_tiff_ifd_seek(str(p))
+    assert (tags[256], tags[257]) == ([70000], [10])
+    assert io._tiff_blocks(tags) == [
+        (r, 0, 1, 70000, start + r * 70000 * 8, 70000 * 8)
+        for r in range(10)]
+
+
+def test_geotiff_header_over_4gib_raises():
+    """30000^2 float64 cells (7.2 GB) do not fit 32-bit strip offsets:
+    the header refuses before any strip is written."""
+    with pytest.raises(ValueError, match="4 GiB"):
+        io._geotiff_header(RasterMeta(rows=30000, cols=30000))
+
+
 def test_distributed_writer_rows_spanning_batches(spark, tmp_path):
     """A grid row whose cells span several Arrow batches must still
     produce ONE complete strip (regression: unsorted batches caused
@@ -182,9 +252,13 @@ def _write_case(tmp_path, case, rows, cols):
     arr[rng.random((rows, cols)) < 0.1] = ND
     if case.startswith("tif"):
         p = str(tmp_path / "r.tif")
+        # LZW strips of 20 rows fill the 4094-entry code table, so
+        # the decoder meets a Clear code mid-strip
         _write_tiff(p, arr, nodata=ND, tile=16 if "tiled" in case else None,
-                    rows_per_strip=None if "tiled" in case else 3,
-                    deflate="deflate" in case, predictor="pred2" in case)
+                    rows_per_strip=None if "tiled" in case
+                    else 20 if "lzw" in case else 3,
+                    deflate="deflate" in case, predictor="pred2" in case,
+                    lzw="lzw" in case)
     else:
         ext = {"tas_double": ".dep", "tas_float_be": ".dep", "flt": ".hdr",
                "rst": ".rdc"}[case]
@@ -199,7 +273,8 @@ def _write_case(tmp_path, case, rows, cols):
 
 
 @pytest.mark.parametrize("case", [
-    "tif_strip", "tif_tiled_ragged", "tif_deflate_pred2", "tas_double",
+    "tif_strip", "tif_tiled_ragged", "tif_deflate_pred2", "tif_lzw",
+    "tas_double",
     "tas_float_be", "flt", "rst", "tif_strip_256_default_conf"])
 def test_read_blocks_bit_exact(spark, tmp_path, case):
     """Every binary format reads bit-exact against the array that
