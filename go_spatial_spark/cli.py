@@ -175,10 +175,11 @@ class Console:
         t0 = time.time()
 
         # arg-count / input-existence validation (the reference prints
-        # 'no such file or directory' and keeps the console alive)
-        need = 2 if key == "whitebox2geotiff" else \
-            1 + len(_MULTI_OUT.get(key, ()))
-        if len(args) < need:
+        # 'no such file or directory' and keeps the console alive): the
+        # input, then one path per output raster
+        need = 1 if key in ("printgeotifftags", "printlasinfo") else \
+            1 + len(_MULTI_OUT.get(key, (None,)))
+        if len(args) < need or not all(a.strip() for a in args[:need]):
             self.out(f"Tool arguments not specified for '{tool.name}'; "
                      f"type 'toolargs {tool.name}' for the argument list")
             return None

@@ -130,7 +130,7 @@ def _register_builtins() -> None:
                              tile=tile)
     register(Tool("D8FlowAccumulation",
                   "D8 flow accumulation (upstream cell counts)",
-                  ["input DEM", "output grid", "log transform"], _d8))
+                  ["input DEM", "output grid"], _d8))
 
     def _fd8(spark, grid, meta, tile: int = 256, **kw):
         from go_spatial_spark.operators.hydrology import fd8_flow_accum

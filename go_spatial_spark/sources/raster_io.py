@@ -13,14 +13,18 @@ Format support mirrors the reference's registry
                  GDAL_NODATA)                            R (subset)
 - LAS LiDAR     (.las v1.x point records)                R
 
-Strategy per SURVEY.md: headers parse driver-side; payloads decode in
-executors. The binary formats (Whitebox, ArcGIS binary, Idrisi,
-GeoTIFF) share one block-range reader, `_read_blocks`: the driver
-builds a block index from the header alone (raw row strips, or TIFF
-strips/tiles), groups consecutive blocks into tasks with the split
-rule of Spark's own file scan, and each task seek-reads and decodes
-only its own blocks. At production scale the data lives in
-Parquet/Iceberg and these shims are the ingest edge. All cell values
+Strategy per SURVEY.md: headers parse and write driver-side; payloads
+decode and encode in executors. The binary formats (Whitebox, ArcGIS
+binary, Idrisi, GeoTIFF) share one block-range reader, `_read_blocks`,
+and one block-range writer, `_write_blocks`. The reader's driver builds
+a block index from the header alone (raw row strips, or TIFF
+strips/tiles), groups consecutive blocks into tasks with the split rule
+of Spark's own file scan, and each task seek-reads and decodes only its
+own blocks. The writer's driver writes the header and a NoData plane;
+each task of the input's own partitions then pwrites its cells at
+``start + (row * cols + col) * itemsize``. Only the two ASCII formats
+read and write through the driver. At production scale the data lives
+in Parquet/Iceberg and these shims are the ingest edge. All cell values
 land as float64 long form (row, col, value), NoData -> absent rows
 (raster.go:23-53 semantics: everything is float64 in memory).
 """
@@ -34,7 +38,7 @@ import zlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from go_spatial_spark.grid import NODATA, RasterMeta
 from go_spatial_spark.session import _parse_bytes
@@ -60,24 +64,23 @@ def _long_form(spark: SparkSession, arr: np.ndarray,
     return spark.createDataFrame(pdf, schema="row int, col int, value double")
 
 
-# Driver-assembly ceiling for single-file sinks: 64M cells = a 512 MB
-# float64 plane. Beyond it the driver-side toPandas would OOM; the
-# .tif path falls through to the distributed strip writer, other
-# formats raise (their production sink is Parquet).
+# Driver-assembly ceiling of the ASCII sinks: 64M cells = a 512 MB
+# float64 plane. Their text has no fixed cell offsets, so they collect
+# the raster on the driver; the binary sinks go through _write_blocks.
 MAX_DRIVER_CELLS = 64_000_000
 
 
-def _assemble_driver(df: DataFrame, meta: RasterMeta,
-                     max_cells: int = MAX_DRIVER_CELLS) -> np.ndarray:
-    """Collect a long-form raster into a dense driver-side array —
-    the fixture-parity path, guarded so a big CLI job fails loudly
-    instead of melting the driver."""
+def _assemble_driver(df: DataFrame, meta: RasterMeta) -> np.ndarray:
+    """Collect a long-form raster into a dense driver-side array for an
+    ASCII sink, guarded so a big job fails loudly instead of melting
+    the driver."""
     n_cells = meta.rows * meta.cols
-    if n_cells > max_cells:
+    if n_cells > MAX_DRIVER_CELLS:
         raise ValueError(
             f"raster {meta.rows}x{meta.cols} = {n_cells} cells exceeds "
-            f"the driver-assembly ceiling ({max_cells}); use "
-            f"write_geotiff_distributed or the Parquet sink")
+            f"the driver-assembly ceiling ({MAX_DRIVER_CELLS}) of the "
+            f"ASCII formats; write a binary format (.tif, .dep, .flt, "
+            f".rst) or the Parquet sink")
     pdf = df.toPandas()
     arr = np.full((meta.rows, meta.cols), meta.nodata, dtype=np.float64)
     arr[pdf["row"], pdf["col"]] = pdf["value"]
@@ -154,6 +157,82 @@ def _read_raw(spark: SparkSession, path: str, meta: RasterMeta,
                         meta.rows, meta.cols)
 
 
+def _write_blocks(df: DataFrame, meta: RasterMeta, path: str, dtype: str,
+                  head: bytes = b"") -> tuple[float, float]:
+    """Long form -> ``head`` + a row-major ``dtype`` payload, the write
+    half of _read_blocks: cell (r, c) goes at byte
+    ``len(head) + (r * cols + c) * itemsize``. The driver writes
+    ``head`` and a NoData plane (so absent cells need no code) to
+    ``path + ".part"``; one mapInArrow over the input's own partitions
+    (no exchange) pwrites each run of consecutive cells of each
+    flat-index-sorted Arrow batch. The part file replaces ``path`` once
+    every task is done (the input may be a lazy scan of ``path``) and
+    is removed if the job fails, or if a cell lies outside the grid
+    (never written; ``ValueError``). The path must open as the same
+    file on the driver and every executor (local or shared posix
+    storage). Returns the (min, max) of the values that are not
+    NoData, (0.0, 0.0) if none."""
+    rows, cols, nodata = meta.rows, meta.cols, meta.nodata
+    item = np.dtype(dtype).itemsize
+    start = len(head)
+    part = path + ".part"
+    with open(part, "wb") as f:
+        f.write(head)
+        fill = np.full(cols, nodata, np.float64).astype(dtype).tobytes()
+        for _ in range(rows):
+            f.write(fill)
+
+    def run(batches):
+        import pyarrow as pa
+        mn, mx, n, bad = np.inf, -np.inf, 0, ""
+        fd = os.open(part, os.O_WRONLY)
+        try:
+            for b in batches:
+                r, c, v = (b.column(k).to_numpy(zero_copy_only=False)
+                           for k in ("row", "col", "value"))
+                inside = (r >= 0) & (r < rows) & (c >= 0) & (c < cols)
+                if not inside.all():
+                    i = np.flatnonzero(~inside)[0]
+                    bad = bad or f"({r[i]}, {c[i]})"
+                    r, c, v = r[inside], c[inside], v[inside]
+                if not r.size:
+                    continue
+                idx = r.astype(np.int64) * cols + c
+                order = np.argsort(idx, kind="stable")
+                idx, v = idx[order], v[order].astype(np.float64)
+                valid = v[v != nodata]
+                if valid.size:
+                    mn = np.minimum(mn, valid.min())
+                    mx = np.maximum(mx, valid.max())
+                    n += valid.size
+                buf = memoryview(v.astype(dtype).tobytes())
+                cut = np.flatnonzero(np.diff(idx) != 1) + 1
+                for s, e in zip(np.r_[0, cut], np.r_[cut, idx.size]):
+                    os.pwrite(fd, buf[s * item:e * item],
+                              start + int(idx[s]) * item)
+        finally:
+            os.close(fd)
+        yield pa.RecordBatch.from_pydict(
+            {"mn": [float(mn)], "mx": [float(mx)], "n": [n], "bad": [bad]})
+
+    try:
+        out = df.select("row", "col", "value").mapInArrow(
+            run, "mn double, mx double, n long, bad string").collect()
+        bad = [o.bad for o in out if o.bad]
+        if bad:
+            raise ValueError(f"cell (row, col) = {bad[0]} lies outside "
+                             f"the {rows} x {cols} grid")
+    except BaseException:
+        os.remove(part)
+        raise
+    os.replace(part, path)
+    got = [o for o in out if o.n]
+    if not got:
+        return 0.0, 0.0
+    return (float(np.min([o.mn for o in got])),
+            float(np.max([o.mx for o in got])))
+
+
 # ---------------------------------------------------------------------------
 # Whitebox GAT — whiteboxRaster.go:349-505
 # ---------------------------------------------------------------------------
@@ -190,13 +269,10 @@ def read_whitebox(spark: SparkSession, dep_path: str):
 
 def write_whitebox(df: DataFrame, meta: RasterMeta, dep_path: str,
                    data_type: str = "FLOAT") -> None:
-    """Write long form to .dep/.tas (single-file sink: assembled on the
-    driver — a fixture-parity path, not the 100 TB sink, which is
-    df.write.parquet)."""
-    arr = _assemble_driver(df, meta)
-    valid = arr != meta.nodata
-    mn = float(arr[valid].min()) if valid.any() else 0.0
-    mx = float(arr[valid].max()) if valid.any() else 0.0
+    """Write long form to .dep/.tas: the .tas payload through
+    _write_blocks, then the .dep header with the written min/max."""
+    mn, mx = _write_blocks(df, meta, os.path.splitext(dep_path)[0] + ".tas",
+                           _WB_DTYPES[data_type])
     with open(dep_path, "w") as f:
         f.write(f"Min:\t{mn}\nMax:\t{mx}\n"
                 f"North:\t{meta.north}\nSouth:\t{meta.south}\n"
@@ -208,8 +284,6 @@ def write_whitebox(df: DataFrame, meta: RasterMeta, dep_path: str,
                 f"Display Min:\t{mn}\nDisplay Max:\t{mx}\n"
                 f"Preferred Palette:\tspectrum.pal\n"
                 f"NoData:\t{meta.nodata}\nByte Order:\tLITTLE_ENDIAN\n")
-    arr.astype(_WB_DTYPES[data_type]).tofile(
-        os.path.splitext(dep_path)[0] + ".tas")
 
 
 # ---------------------------------------------------------------------------
@@ -313,13 +387,12 @@ def read_arcgis_binary(spark: SparkSession, hdr_path: str):
 
 def write_arcgis_binary(df: DataFrame, meta: RasterMeta,
                         hdr_path: str) -> None:
-    arr = _assemble_driver(df, meta)
+    _write_blocks(df, meta, os.path.splitext(hdr_path)[0] + ".flt", "<f4")
     with open(hdr_path, "w") as f:
         f.write(f"NCOLS {meta.cols}\nNROWS {meta.rows}\n"
                 f"XLLCORNER {meta.west}\nYLLCORNER {meta.south}\n"
                 f"CELLSIZE {meta.cellsize_x}\nNODATA_VALUE {meta.nodata}\n"
                 f"BYTEORDER LSBFIRST\n")
-    arr.astype("<f4").tofile(os.path.splitext(hdr_path)[0] + ".flt")
 
 
 # ---------------------------------------------------------------------------
@@ -350,10 +423,8 @@ def read_idrisi(spark: SparkSession, rdc_path: str):
 
 def write_idrisi(df: DataFrame, meta: RasterMeta, rdc_path: str,
                  data_type: str = "real") -> None:
-    arr = _assemble_driver(df, meta)
-    valid = arr != meta.nodata
-    mn = float(arr[valid].min()) if valid.any() else 0.0
-    mx = float(arr[valid].max()) if valid.any() else 0.0
+    mn, mx = _write_blocks(df, meta, os.path.splitext(rdc_path)[0] + ".rst",
+                           _IDRISI_DTYPES[data_type])
     with open(rdc_path, "w") as f:
         f.write(f"file format : IDRISI Raster A.1\nfile title  : \n"
                 f"data type   : {data_type}\nfile type   : binary\n"
@@ -369,8 +440,6 @@ def write_idrisi(df: DataFrame, meta: RasterMeta, rdc_path: str,
                 f"value units : unspecified\nvalue error : unknown\n"
                 f"flag value  : {meta.nodata}\n"
                 f"flag def'n  : missing data\nlegend cats : 0\n")
-    arr.astype(_IDRISI_DTYPES[data_type]).tofile(
-        os.path.splitext(rdc_path)[0] + ".rst")
 
 
 # ---------------------------------------------------------------------------
@@ -724,11 +793,10 @@ def write_raster(df: DataFrame, meta: RasterMeta, path: str,
     if ext in (".dep", ".tas"):
         return write_whitebox(df, meta, os.path.splitext(path)[0] + ".dep")
     if ext in (".tif", ".tiff"):
-        # CLI-sized rasters assemble on the driver; big jobs take the
-        # distributed strip writer automatically (same bytes)
-        if meta.rows * meta.cols > MAX_DRIVER_CELLS:
-            return write_geotiff_distributed(df, meta, path)
-        return write_geotiff(df, meta, path)
+        # strip-per-row, uncompressed, float64: the reference writer's
+        # layout (geotiff.go:83, :256-268)
+        _write_blocks(df, meta, path, "<f8", _geotiff_header(meta)[0])
+        return None
     if ext in (".rdc", ".rst"):
         return write_idrisi(df, meta, os.path.splitext(path)[0] + ".rdc")
     if ext in (".hdr", ".flt"):
@@ -748,12 +816,11 @@ def write_raster(df: DataFrame, meta: RasterMeta, path: str,
 
 def _geotiff_header(meta: RasterMeta) -> tuple[bytes, int]:
     """IFD + out-of-line tag data for the strip-per-row uncompressed
-    float64 layout -> (header bytes, strips_start offset). Shared by
-    the driver and distributed writers so their files are
-    byte-identical. ImageWidth/ImageLength are SHORT up to 65,535 and
-    LONG above; the strip offsets are classic-TIFF 32-bit LONGs, so a
-    file that would pass 4 GiB raises ``ValueError`` here, before any
-    task writes."""
+    float64 layout -> (header bytes, strips_start offset); the strips
+    start right after the header. ImageWidth/ImageLength are SHORT up
+    to 65,535 and LONG above; the strip offsets are classic-TIFF 32-bit
+    LONGs, so a file that would pass 4 GiB raises ``ValueError`` here,
+    before any task writes."""
     rows, cols = meta.rows, meta.cols
     bo = "<"
     strip_bytes = cols * 8
@@ -827,89 +894,12 @@ def _geotiff_header(meta: RasterMeta) -> tuple[bytes, int]:
     return bytes(head), strips_start
 
 
-def write_geotiff(df: DataFrame, meta: RasterMeta, path: str) -> None:
-    """Single-file GeoTIFF sink (fixture-parity path; the production
-    sink is Parquet). Always strip-per-row, uncompressed, float64 —
-    the same layout choice as the reference writer (geotiff.go:83,
-    :256-268). Driver-assembled, so guarded by MAX_DRIVER_CELLS; the
-    over-ceiling path is write_geotiff_distributed."""
-    arr = _assemble_driver(df, meta).astype("<f8")
-    head, _ = _geotiff_header(meta)
-    with open(path, "wb") as f:
-        f.write(head)
-        f.write(arr.tobytes())
-
-
-def write_geotiff_distributed(df: DataFrame, meta: RasterMeta,
-                              path: str) -> None:
-    """Distributed strip writer: the driver writes only the O(rows)
-    header; every task range-writes its own rows' strips into the
-    shared file (strip-per-row layout makes row ranges disjoint, so
-    concurrent pwrite-style seek+write needs no coordination).
-    Produces a file byte-identical to write_geotiff. Requires the
-    path on storage visible to executors (local mode / cluster FS).
-    The tasks write a sibling ``.part`` file that replaces ``path``
-    only once every strip is in: the input may be a lazy scan of
-    ``path`` itself (a CLI run that rewrites its input)."""
-    head, strips_start = _geotiff_header(meta)
-    part = path + ".part"
-    with open(part, "wb") as f:
-        f.write(head)
-    cols, nodata = meta.cols, meta.nodata
-    strip_bytes = cols * 8
-    spark = df.sparkSession
-    # every grid row gets a strip (absent rows are all-NoData): the
-    # range frame left-joins the data and shuffles on row so one task
-    # owns each row completely
-    # sortWithinPartitions: a grid row's cells can span several Arrow
-    # batches of one partition; row-ordered batches let the writer
-    # keep exactly ONE strip buffer and flush it when the row id
-    # advances (without the sort, two partial writes of the same row
-    # would clobber each other)
-    base = spark.range(meta.rows).select(
-        F.col("id").cast("int").alias("row")) \
-        .join(df.select("row", "col", "value"), "row", "left") \
-        .repartition(max(1, min(meta.rows,
-                                4 * spark.sparkContext.defaultParallelism)),
-                     "row") \
-        .sortWithinPartitions("row")
-
-    def write_rows(it):
-        cur = {"id": None, "buf": None}
-        with open(part, "r+b") as f:
-            def flush():
-                if cur["id"] is not None:
-                    f.seek(strips_start + int(cur["id"]) * strip_bytes)
-                    f.write(cur["buf"].tobytes())
-            for pdf in it:
-                if pdf.empty:
-                    continue
-                for row_id, grp in pdf.groupby("row", sort=True):
-                    if row_id != cur["id"]:
-                        flush()
-                        cur["id"] = row_id
-                        cur["buf"] = np.full(cols, nodata, dtype="<f8")
-                    m = grp["col"].notna()
-                    if m.any():
-                        cur["buf"][grp.loc[m, "col"].astype(int)] = \
-                            grp.loc[m, "value"]
-            flush()
-        yield pd.DataFrame({"n": pd.Series([1], dtype="int64")})
-
-    try:
-        base.mapInPandas(write_rows, schema="n long").count()
-    except BaseException:
-        os.remove(part)
-        raise
-    os.replace(part, path)
-
-
 def whitebox_to_geotiff(spark: SparkSession, dep_path: str,
                         tif_path: str) -> None:
     """Whitebox2GeoTiff (tools/whiteboxRaster2GeoTiff.go:119-185):
     read -> NoData remap is identity here (same sentinel) -> write."""
     meta, df = read_whitebox(spark, dep_path)
-    write_geotiff(df, meta, tif_path)
+    write_raster(df, meta, tif_path)
 
 
 def las_info(spark: SparkSession, path: str) -> DataFrame:

@@ -9,7 +9,6 @@ from go_spatial_spark.cli import Console, _split_tool_args, main
 from go_spatial_spark.grid import (
     NODATA, RasterMeta, synthetic_dem, synthetic_dem_numpy,
 )
-from go_spatial_spark.sources import raster_io
 from go_spatial_spark.sources.raster_io import read_raster, write_raster
 from tests.test_kernels import golden_slope
 
@@ -80,28 +79,34 @@ def test_run_slope_file_roundtrip(spark, tmp_path):
     assert np.allclose(arr[valid], want[valid], atol=1e-6)
 
 
-def test_run_rewrites_tif_in_place(spark, tmp_path, monkeypatch):
-    """Input and output the same .tif, over the driver-assembly ceiling:
-    the distributed writer must not clobber the file its lazy input
-    scan still reads."""
+def _run_slope_in_place(spark, tmp_path, name):
+    """``run slope "<name>;<name>"``: the writer must not clobber the
+    file its lazy input scan still reads, and leaves no part file."""
     rows, cols = 20, 20
-    path = tmp_path / "dem.tif"
     write_raster(synthetic_dem(spark, rows, cols),
-                 RasterMeta(rows=rows, cols=cols), str(path))
-    monkeypatch.setattr(raster_io, "MAX_DRIVER_CELLS", 100)
+                 RasterMeta(rows=rows, cols=cols), str(tmp_path / name))
+    before = sorted(p.name for p in tmp_path.iterdir())
     con, lines = _console(spark)
     con.cwd = str(tmp_path) + "/"
-    con.dispatch('run slope "dem.tif;dem.tif"')
+    con.dispatch(f'run slope "{name};{name}"')
     assert any("Wrote" in ln for ln in lines)
-    assert sorted(p.name for p in tmp_path.iterdir()) == ["dem.tif"]
+    assert sorted(p.name for p in tmp_path.iterdir()) == before
 
-    _, out = read_raster(spark, str(path))
+    _, out = read_raster(spark, str(tmp_path / name))
     pdf = out.toPandas()
     arr = np.full((rows, cols), NODATA)
     arr[pdf["row"], pdf["col"]] = pdf["value"]
     want = golden_slope(synthetic_dem_numpy(rows, cols), 8.0)
     valid = want != NODATA
     assert np.allclose(arr[valid], want[valid], atol=1e-6)
+
+
+def test_run_rewrites_tif_in_place(spark, tmp_path):
+    _run_slope_in_place(spark, tmp_path, "dem.tif")
+
+
+def test_run_rewrites_dep_in_place(spark, tmp_path):
+    _run_slope_in_place(spark, tmp_path, "dem.dep")
 
 
 def test_run_default_tif_extension(spark, tmp_path):
@@ -163,6 +168,26 @@ def test_run_error_handling(spark):
     lines.clear()
     assert con.dispatch("run slope")  # REPL path, no args at all
     assert any("arguments not specified" in ln for ln in lines)
+
+
+def test_run_grid_tool_without_output(spark, tmp_path):
+    """A grid tool needs its input and one output path per raster it
+    writes; the input alone prints the console's message instead of
+    reaching the writer with an empty path."""
+    write_raster(synthetic_dem(spark, 8, 8), RasterMeta(rows=8, cols=8),
+                 str(tmp_path / "dem.dep"))
+    con, lines = _console(spark)
+    con.cwd = str(tmp_path) + "/"
+    for args in (["dem.dep"], ["dem.dep", " "]):
+        lines.clear()
+        assert con.run("slope", args) is None
+        assert any("arguments not specified" in ln for ln in lines)
+    lines.clear()
+    assert con.run("MaximumElevationDeviation", ["dem.dep", "mag.tif"]) \
+        is None
+    assert any("arguments not specified" in ln for ln in lines)
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["dem.dep",
+                                                          "dem.tas"]
 
 
 def test_meanfilter_y_defaults_to_x():

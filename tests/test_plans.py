@@ -147,3 +147,43 @@ def test_dev_traditional_is_hash_join(spark):
     # the neighbor lookup is a real equi-join on the shifted keys
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan \
         or "BroadcastHashJoin" in plan
+
+
+def test_raster_io_plans(spark, tmp_path, monkeypatch):
+    """The binary readers and the block-range writer over in-repo files:
+    Arrow-only Python everywhere (no BatchEvalPython), and each binary
+    write_raster runs one job of one stage with no Exchange in its plan
+    (the writer maps over the input's own partitions)."""
+    import os
+
+    from go_spatial_spark.sources import raster_io as io
+
+    fix = os.path.join(os.path.dirname(__file__), "fixtures", "fmtq")
+    meta, dem = io.read_arcgis_binary(spark, f"{fix}/dem64.hdr")
+    frames = [dem, io.read_las(spark, f"{fix}/pts64.las")]
+    writes = []
+    cls = type(dem)
+    map_in_arrow = cls.mapInArrow
+    monkeypatch.setattr(cls, "mapInArrow", lambda self, *a, **k: (
+        writes.append(map_in_arrow(self, *a, **k)) or writes[-1]))
+    sc = spark.sparkContext
+    for ext, reader in ((".tif", io.read_geotiff), (".dep", io.read_whitebox),
+                        (".hdr", io.read_arcgis_binary),
+                        (".rdc", io.read_idrisi)):
+        p = str(tmp_path / f"dem{ext}")
+        group = f"write_raster{ext}"
+        sc.setJobGroup(group, "write_raster")
+        try:
+            io.write_raster(dem, meta, p)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert len(jobs) == 1, ext
+        assert len(sc.statusTracker().getJobInfo(jobs[0]).stageIds) == 1, ext
+        frames.append(reader(spark, p)[1])
+    assert len(writes) == 4
+    for df in writes:
+        plan = _plan(df)
+        assert "MapInArrow" in plan and "Exchange" not in plan, plan
+    for df in frames + writes:
+        assert "BatchEvalPython" not in _plan(df)

@@ -102,7 +102,7 @@ def test_geotiff_write_roundtrip(spark, tmp_path):
                       east=float(cols), west=0.0)
     dem = synthetic_dem(spark, rows, cols)
     p = str(tmp_path / "w.tif")
-    io.write_geotiff(dem, meta, p)
+    io.write_raster(dem, meta, p)
     meta2, back = io.read_geotiff(spark, p)
     assert (meta2.rows, meta2.cols) == (rows, cols)
     assert meta2.nodata == meta.nodata
@@ -132,12 +132,13 @@ def test_geotiff_tags(spark):
 
 def test_geotiff_tags_of_written_file(spark, tmp_path):
     """The header parser behind every GeoTIFF read, on a file from
-    write_geotiff: all 13 tags the writer emits come back decoded."""
+    write_raster: all 13 tags the GeoTIFF writer emits come back
+    decoded."""
     rows, cols = 7, 11
     meta = RasterMeta(rows=rows, cols=cols, north=50.0, south=43.0,
                       east=16.5, west=5.5, nodata=-9999.0)
     p = str(tmp_path / "tags.tif")
-    io.write_geotiff(synthetic_dem(spark, rows, cols), meta, p)
+    io.write_raster(synthetic_dem(spark, rows, cols), meta, p)
     got = dict(io.geotiff_tags(spark, p).collect())
     assert sorted(got) == [256, 257, 258, 259, 262, 273, 277, 278, 279,
                            339, 33550, 33922, 42113]

@@ -1,12 +1,13 @@
-"""Scale paths of the file sources/sinks: the block-range GeoTIFF scan
-and the guarded / distributed writers."""
+"""Scale paths of the file sources/sinks: the block-range scan, the
+block-range writer and the guarded ASCII writers."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from go_spatial_spark.grid import (
-    NODATA, RasterMeta, long_to_tiles, synthetic_dem,
+    NODATA, RasterMeta, long_to_tiles, synthetic_dem, synthetic_dem_numpy,
+    tiles_to_long,
 )
 from go_spatial_spark.sources import raster_io as io
 
@@ -153,7 +154,7 @@ def test_geotiff_distributed_compressed(spark, tmp_path):
     assert np.array_equal(got, rng)
 
 
-def test_driver_writer_ceiling(spark):
+def test_driver_writer_ceiling(spark, tmp_path):
     big = RasterMeta(rows=100_000, cols=100_000)
     df = spark.range(1).select(
         F.lit(0).alias("row"), F.lit(0).alias("col"),
@@ -161,20 +162,21 @@ def test_driver_writer_ceiling(spark):
     with pytest.raises(ValueError, match="driver-assembly ceiling"):
         io._assemble_driver(df, big)
     with pytest.raises(ValueError, match="driver-assembly ceiling"):
-        io.write_whitebox(df, big, "/tmp/never.dep")
+        io.write_arcgis_ascii(df, big, str(tmp_path / "never.asc"))
+    assert not list(tmp_path.iterdir())
 
 
 def test_distributed_geotiff_writer_byte_identical(spark, tmp_path):
+    """The GeoTIFF is the header plus the dense float64 plane, byte for
+    byte, and it round-trips through the block reader."""
     meta = RasterMeta(rows=40, cols=30)
     dem = synthetic_dem(spark, 40, 30)
-    p1 = str(tmp_path / "driver.tif")
-    p2 = str(tmp_path / "dist.tif")
-    io.write_geotiff(dem, meta, p1)
-    io.write_geotiff_distributed(dem, meta, p2)
-    with open(p1, "rb") as f1, open(p2, "rb") as f2:
-        assert f1.read() == f2.read()
-    # and it round-trips through the block reader
-    meta2, back = io.read_geotiff(spark, p2)
+    p = str(tmp_path / "dist.tif")
+    io.write_raster(dem, meta, p)
+    with open(p, "rb") as f:
+        assert f.read() == io._geotiff_header(meta)[0] + \
+            synthetic_dem_numpy(40, 30).astype("<f8").tobytes()
+    meta2, back = io.read_geotiff(spark, p)
     assert back.count() == dem.count()
     sym = back.exceptAll(dem).unionAll(dem.exceptAll(back))
     assert sym.count() == 0
@@ -201,9 +203,9 @@ def test_geotiff_header_over_4gib_raises():
 
 
 def test_distributed_writer_rows_spanning_batches(spark, tmp_path):
-    """A grid row whose cells span several Arrow batches must still
-    produce ONE complete strip (regression: unsorted batches caused
-    partial-strip clobbering)."""
+    """A grid row whose cells span several Arrow batches still comes
+    out as ONE complete strip (regression: a writer that buffered rows
+    across unsorted batches clobbered partial strips)."""
     from pyspark.sql import functions as F
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "100")
@@ -214,14 +216,108 @@ def test_distributed_writer_rows_spanning_batches(spark, tmp_path):
             (F.col("id") / C).cast("int").alias("row"),
             (F.col("id") % C).cast("int").alias("col"),
             (F.col("id") % 977).cast("double").alias("value"))
-        p1 = str(tmp_path / "a.tif")
-        p2 = str(tmp_path / "b.tif")
-        io.write_geotiff(dem, meta, p1)
-        io.write_geotiff_distributed(dem, meta, p2)
-        with open(p1, "rb") as f1, open(p2, "rb") as f2:
-            assert f1.read() == f2.read()
+        p = str(tmp_path / "b.tif")
+        io.write_raster(dem, meta, p)
+        want = (np.arange(R * C) % 977).astype("<f8").tobytes()
+        with open(p, "rb") as f:
+            assert f.read() == io._geotiff_header(meta)[0] + want
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+
+def _dense_case(dtype, empty):
+    """A 37 x 45 plane for ``dtype``: about a tenth NoData holes and
+    one all-NoData 16^2 tile, or all NoData when ``empty``."""
+    rng = np.random.default_rng(45)
+    if np.dtype(dtype).kind == "f":
+        arr = rng.normal(100.0, 50.0, (37, 45))
+    else:  # integer payloads hold integral values in their range
+        arr = rng.integers(0 if dtype == "u1" else -300, 250,
+                           (37, 45)).astype(np.float64)
+    arr[rng.random(arr.shape) < 0.1] = NODATA
+    arr[16:32, 16:32] = NODATA
+    if empty:
+        arr[:] = NODATA
+    return arr
+
+
+def _header_minmax(path, keys):
+    with open(path) as f:
+        hdr = {k.strip().lower(): v.strip() for k, _, v in
+               (ln.partition(":") for ln in f.read().splitlines())}
+    return [float(hdr[k]) for k in keys]
+
+
+@pytest.mark.parametrize("ext,data_type", [
+    (".dep", "FLOAT"), (".dep", "DOUBLE"), (".dep", "INTEGER"),
+    (".rdc", "real"), (".rdc", "integer"), (".rdc", "byte"),
+    (".hdr", None), (".tif", None)])
+def test_write_blocks_byte_identical(spark, tmp_path, ext, data_type):
+    """Every binary format and data type writes the header plus
+    ``dense.astype(dtype).tobytes()``: NoData holes, an all-NoData tile
+    and ragged edge tiles (a tile-16 round trip of 37 x 45), a
+    five-partition input in Arrow batches of 100 cells that cut across
+    grid rows, and an empty raster. Whitebox and Idrisi headers carry
+    the min/max of the valid cells (0.0 for an empty raster)."""
+    dtype = {".dep": io._WB_DTYPES.get(data_type),
+             ".rdc": io._IDRISI_DTYPES.get(data_type),
+             ".hdr": "<f4", ".tif": "<f8"}[ext]
+    meta = RasterMeta(rows=37, cols=45, north=37.0, south=0.0, east=45.0,
+                      west=0.0)
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "100")
+    try:
+        for empty in (False, True):
+            dense = _dense_case(dtype, empty)
+            rr, cc = np.nonzero(dense != NODATA)
+            df = spark.createDataFrame(
+                [(int(r), int(c), float(dense[r, c])) for r, c in zip(rr, cc)],
+                "row int, col int, value double")
+            df = tiles_to_long(long_to_tiles(df, meta, tile=16), meta,
+                               tile=16).repartition(5)
+            p = str(tmp_path / f"w{ext}")
+            if ext == ".dep":
+                io.write_whitebox(df, meta, p, data_type=data_type)
+            elif ext == ".rdc":
+                io.write_idrisi(df, meta, p, data_type=data_type)
+            else:
+                io.write_raster(df, meta, p)
+            head = io._geotiff_header(meta)[0] if ext == ".tif" else b""
+            payload = p if ext == ".tif" else \
+                p[:-4] + {".dep": ".tas", ".rdc": ".rst", ".hdr": ".flt"}[ext]
+            with open(payload, "rb") as f:
+                assert f.read() == head + dense.astype(dtype).tobytes()
+            valid = dense[dense != NODATA]
+            want = [valid.min(), valid.max()] if valid.size else [0.0, 0.0]
+            if ext == ".dep":
+                assert _header_minmax(p, ("min", "max", "display min",
+                                          "display max")) == want * 2
+            elif ext == ".rdc":
+                assert _header_minmax(p, ("min. value", "max. value",
+                                          "display min", "display max")) \
+                    == want * 2
+            assert not list(tmp_path.glob("*.part"))
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+
+def test_write_rejects_cells_outside_grid(spark, tmp_path):
+    """A negative col would wrap to the far edge of a dense array, and
+    a row >= rows has no strip: the writer raises before writing such a
+    cell, and the file already at the path stays as it was."""
+    meta = RasterMeta(rows=4, cols=5)
+    p = tmp_path / "out.tif"
+    io.write_raster(spark.createDataFrame([(0, 0, 1.0)],
+                                          "row int, col int, value double"),
+                    meta, str(p))
+    before = p.read_bytes()
+    for row, col in ((1, -1), (4, 0)):
+        df = spark.createDataFrame([(0, 0, 1.0), (row, col, 2.0)],
+                                   "row int, col int, value double")
+        with pytest.raises(ValueError, match=r"outside the 4 x 5 grid"):
+            io.write_raster(df, meta, str(p))
+        assert p.read_bytes() == before
+        assert sorted(x.name for x in tmp_path.iterdir()) == ["out.tif"]
 
 
 ND = -32768.0
