@@ -21,7 +21,7 @@ from go_spatial_spark.grid import (
     RasterMeta, long_to_tiles, run_stencil, synthetic_dem,
     synthetic_dem_sql, tiles_to_long,
 )
-from go_spatial_spark import kernels, oracles
+from go_spatial_spark import kernels, oracles, registry
 from go_spatial_spark.geocode import geocode, geocode_sql
 from go_spatial_spark.operators import hydrology
 from go_spatial_spark.operators.spatial_join import (
@@ -251,13 +251,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         synthetic_dem(spark, GRID_ROWS, GRID_COLS), num_bins=5)
 
     q["diff_from_mean"] = lambda spark, sf: WS.diff_from_mean(
-        synthetic_dem(spark, GRID_ROWS, GRID_COLS), GRID_ROWS, GRID_COLS, r=8)
-    # the reference's own brute-force oracle tool as a first-class
-    # Catalyst query (exploded-offset equi-join; independent of the
-    # integral-image kernel that answers dev_from_mean)
-    q["dev_from_mean_traditional"] = lambda spark, sf: \
-        WS.dev_from_mean_traditional(
-            synthetic_dem(spark, GRID_ROWS, GRID_COLS), r=8)
+        synthetic_dem(spark, GRID_ROWS, GRID_COLS), GRID_ROWS, GRID_COLS, r=8,
+        tile=TILE)
+    q["dev_from_mean_traditional"] = lambda spark, sf: registry.run_tool(
+        spark, "DeviationFromMeanTraditional",
+        synthetic_dem(spark, GRID_ROWS, GRID_COLS), META, r=8, tile=TILE)
 
     def elev_pct_q(spark: SparkSession, sf: str) -> DataFrame:
         from go_spatial_spark.grid import synthetic_dem_numpy, NODATA
@@ -271,13 +269,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return tiles_to_long(out, META, tile=TILE, value_col="percentile")
     q["elevation_percentile"] = elev_pct_q
 
-    def max_dev_q(spark: SparkSession, sf: str) -> DataFrame:
-        dem = synthetic_dem(spark, GRID_ROWS, GRID_COLS)
-        mn, mx = dem.agg(F.min("value"), F.max("value")).first()
-        k = mn + (mx - mn) / 2.0
-        return WS.max_elev_deviation(_dem_tiles(spark), META, TILE,
-                                     scales=[4, 8, 12], k=k)
-    q["max_elev_deviation"] = max_dev_q
+    q["max_elev_deviation"] = lambda spark, sf: registry.run_tool(
+        spark, "MaximumElevationDeviation",
+        synthetic_dem(spark, GRID_ROWS, GRID_COLS), META, scales=[4, 8, 12],
+        tile=TILE)
 
     # --- hydrology ---------------------------------------------------------
     # the tiled hydrology operators use 48-cell tiles (a 2x2 grid), so
@@ -425,7 +420,7 @@ def oracle_sql() -> dict[str, str]:
     o["hillshade_trim"] = oracles.hillshade_trim_sql(GRID_ROWS, GRID_COLS)
     o["mean_filter"] = oracles.mean_filter_sql(GRID_ROWS, GRID_COLS, 2, 2)
     o["dev_from_mean"] = oracles.dev_from_mean_sql(GRID_ROWS, GRID_COLS, 8)
-    o["dev_from_mean_traditional"] = oracles.dev_from_mean_sql(
+    o["dev_from_mean_traditional"] = oracles.dev_from_mean_traditional_sql(
         GRID_ROWS, GRID_COLS, 8)
     o["fill_holes"] = oracles.fill_holes_sql(GRID_ROWS, GRID_COLS)
     o["quantiles"] = quantiles_oracle_sql(

@@ -254,26 +254,30 @@ def long_to_tiles(df: DataFrame, meta: RasterMeta,
 
 
 def tiles_to_long(tiles: DataFrame, meta: RasterMeta, tile: int = 256,
-                  value_col: str = "value") -> DataFrame:
-    """Unpack tile form to long form (valid cells only)."""
+                  value_col: str | tuple[str, ...] = "value") -> DataFrame:
+    """Unpack tile form to long form (valid cells only). A tuple of
+    value columns reads tiles that hold one (h, w) plane per column, in
+    order; a cell is valid where the first plane is not NoData."""
+    names = [value_col] if isinstance(value_col, str) else list(value_col)
     nodata = meta.nodata
 
     def unpack(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             outs = []
             for t in pdf.itertuples(index=False):
-                arr = np.frombuffer(t.data, dtype=np.float64).reshape(t.h, t.w)
-                mask = arr != nodata
+                arr = np.frombuffer(t.data, dtype=np.float64).reshape(
+                    len(names), t.h, t.w)
+                mask = arr[0] != nodata
                 rr, cc = np.nonzero(mask)
                 outs.append(pd.DataFrame({
                     "row": (rr + t.ty * tile).astype(np.int32),
                     "col": (cc + t.tx * tile).astype(np.int32),
-                    value_col: arr[mask],
-                }))
+                    **{n: plane[mask] for n, plane in zip(names, arr)}}))
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
-    return tiles.mapInPandas(unpack, schema=f"row int, col int, {value_col} double")
+    return tiles.mapInPandas(unpack, schema="row int, col int, " + ", ".join(
+        f"{n} double" for n in names))
 
 
 # ---------------------------------------------------------------------------
@@ -435,10 +439,13 @@ def run_stencil(
     ``kernel(padded, halo, ctx) -> out`` receives a float64 array of
     shape (h+2*halo, w+2*halo) where out-of-tile cells are filled from
     neighbor strips (or NoData at grid edges / missing tiles), and must
-    return the (h, w) output block, or the padded block itself (FD8 reads
-    each tile's neighbourhood; ``h`` and ``w`` still describe the tile
-    interior). ``ctx`` carries meta + the tile's
+    return the (h, w) output block, a stack of (h, w) planes (read back
+    with a tuple ``value_col`` of `tiles_to_long`), or the padded block
+    itself (FD8 reads each tile's neighbourhood; ``h`` and ``w`` still
+    describe the tile interior). ``ctx`` carries meta + the tile's
     global origin so kernels can reason about absolute coordinates.
+    A ``halo`` above ``tile`` raises ``ValueError``: strips come only
+    from the 8 adjacent tiles.
 
     Implementation: each tile emits its center plus up to 8 cropped edge
     strips addressed to neighbor tiles; a groupBy(ty,tx) applyInArrow
@@ -463,6 +470,8 @@ def run_stencil(
     from O(area) to O(perimeter*halo): at a 100 TB raster that is the
     difference between re-shuffling 100 TB per stencil and ~0.8% of it.
     """
+    if halo > tile:
+        raise ValueError(f"halo {halo} exceeds the tile size {tile}")
     rows, cols, nodata = meta.rows, meta.cols, meta.nodata
     n_ty = math.ceil(rows / tile)
     n_tx = math.ceil(cols / tile)

@@ -160,30 +160,17 @@ def mean_filter_kernel(padded: np.ndarray, halo: int, ctx) -> np.ndarray:
     return out
 
 
-def deviation_from_mean_kernel(padded: np.ndarray, halo: int, ctx) -> np.ndarray:
-    """DEV = ((z-k) - mean) / stdev over a (2r+1)^2 window
-    (deviationFromMean.go:300-330), including the reference's
-    integral-image edge quirk: the clamped exclusive prefix means grid
-    row 0 and col 0 are excluded from every window
-    (y1 = clamp(row-r-1, 0) -> rows y1+1..y2). ctx.extra: r, k,
-    plus grid dims for the global row0/col0 masking."""
+def _dev_window(padded: np.ndarray, work: np.ndarray, halo: int, ctx,
+                min_n: int) -> np.ndarray:
+    """DEV of the centre cells of ``padded`` over their windows in
+    ``work``; 0 where a window holds ``min_n`` or fewer valid cells or
+    its variance is not positive."""
     nodata = ctx.meta.nodata
     r = int(ctx.extra["r"])
     k = float(ctx.extra["k"])
     h = padded.shape[0] - 2 * halo
     w = padded.shape[1] - 2 * halo
     c = padded[halo:halo + h, halo:halo + w]
-
-    work = padded.copy()
-    # reproduce the edge quirk: global row 0 / col 0 never contribute.
-    # padded row i holds global row (ctx.row0 - halo + i).
-    i0 = halo - ctx.row0
-    if 0 <= i0 < padded.shape[0]:
-        work[i0, :] = nodata
-    j0 = halo - ctx.col0
-    if 0 <= j0 < padded.shape[1]:
-        work[:, j0] = nodata
-
     I, I2, IN = _box_integrals(work, halo, nodata, k)
     s = _window_sum(I, halo, h, w, r)
     s2 = _window_sum(I2, halo, h, w, r)
@@ -192,8 +179,39 @@ def deviation_from_mean_kernel(padded: np.ndarray, halo: int, ctx) -> np.ndarray
         v = (s2 - (s * s) / n) / n
         mean = s / n
         dev = ((c - k) - mean) / np.sqrt(v)
-    out = np.where((n > 0) & (v > 0), dev, 0.0)
+    out = np.where((n > min_n) & (v > 0), dev, 0.0)
     return np.where(c != nodata, out, nodata)
+
+
+def _without_grid_row0_col0(padded: np.ndarray, halo: int, ctx):
+    """``padded`` with grid row 0 and col 0 NoData: the reference's
+    clamped exclusive prefix (y1 = clamp(row-r-1, 0) -> rows y1+1..y2)
+    leaves them out of every window."""
+    work = padded.copy()
+    i0, j0 = halo - ctx.row0, halo - ctx.col0
+    if 0 <= i0 < padded.shape[0]:
+        work[i0, :] = ctx.meta.nodata
+    if 0 <= j0 < padded.shape[1]:
+        work[:, j0] = ctx.meta.nodata
+    return work
+
+
+def deviation_from_mean_kernel(padded: np.ndarray, halo: int, ctx) -> np.ndarray:
+    """DEV = ((z-k) - mean) / stdev over a (2r+1)^2 window
+    (deviationFromMean.go:300-330), including the reference's
+    integral-image edge quirk: grid row 0 and col 0 never contribute.
+    ctx.extra: r, k."""
+    return _dev_window(padded, _without_grid_row0_col0(padded, halo, ctx),
+                       halo, ctx, 0)
+
+
+def dev_from_mean_traditional_kernel(padded: np.ndarray, halo: int,
+                                     ctx) -> np.ndarray:
+    """DeviationFromMeanTraditional (deviationFromMeanTraditionalMethod.go
+    :174-299): DEV over the FULL window, grid row 0 and col 0 included,
+    and 0 unless the window holds more than two valid cells (:227-252,
+    ``if n > 2 { v = (sumSqr - sum*sum/n)/n ... }``). ctx.extra: r, k."""
+    return _dev_window(padded, padded, halo, ctx, 2)
 
 
 def fill_small_nodata_holes_kernel(padded: np.ndarray, halo: int, ctx) -> np.ndarray:

@@ -1,10 +1,11 @@
-"""Global-statistics operators: Quantiles (histogram-approximated
-ntile), DifferenceFromMean (fixed-point integral image as cascaded
-window functions), ElevationPercentile (integral histogram),
-MaximumElevationDeviation (multiscale DEV).
+"""Global- and window-statistics operators: Quantiles (histogram-
+approximated ntile), DifferenceFromMean (fixed-point integral image on
+full-width row bands), ElevationPercentile (integral histogram),
+MaximumElevationDeviation (every scale's DEV in one stencil).
 
-Quantiles reproduces tools/quantiles.go:163-280 exactly:
-  valueRange = ceil(max - min); binSize = valueRange / 10000
+Quantiles reproduces tools/quantiles.go:163-280, with the flat-raster
+guard of ElevationPercentile on the range:
+  valueRange = max(ceil(max - min), 1); binSize = valueRange / 10000
   bin = min(floor((z - min)/binSize), 9999)
   cdf[bin] = 100 * cumulative_count / n
   class = floor(cdf / (100/numBins)), clamped to numBins-1; output +1
@@ -18,9 +19,14 @@ the same two-pass shape the reference uses, distributed.
 from __future__ import annotations
 
 import math
+from dataclasses import replace
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+
+from go_spatial_spark.kernels import (
+    _window_sum, _without_grid_row0_col0, deviation_from_mean_kernel)
 
 HIGH_RES_BINS = 10000
 
@@ -30,8 +36,8 @@ def quantiles(grid: DataFrame, num_bins: int = 5,
     spark = grid.sparkSession
     mn, mx, n = grid.agg(
         F.min(value_col), F.max(value_col), F.count(value_col)).first()
-    value_range = math.ceil(mx - mn)
-    bin_size = value_range / float(HIGH_RES_BINS)
+    value_range = max(math.ceil(mx - mn), 1)  # flat-raster guard, as
+    bin_size = value_range / float(HIGH_RES_BINS)  # ElevationPercentile
 
     binned = grid.withColumn(
         "bin",
@@ -60,7 +66,8 @@ def quantiles_oracle_sql(dem_sql: str, num_bins: int = 5) -> str:
     WITH dem AS ({dem_sql}),
     s AS (SELECT min(value) AS mn, max(value) AS mx,
                  count(*) AS n FROM dem),
-    bz AS (SELECT mn, n, ceil(mx - mn) / {float(HIGH_RES_BINS)} AS bs FROM s),
+    bz AS (SELECT mn, n, greatest(ceil(mx - mn), 1)
+                 / {float(HIGH_RES_BINS)} AS bs FROM s),
     b AS (SELECT row, col,
                  least(CAST(floor((value - mn) / bs) AS BIGINT),
                        {HIGH_RES_BINS - 1}) AS bin
@@ -85,27 +92,79 @@ def quantiles_oracle_sql(dem_sql: str, num_bins: int = 5) -> str:
 # prefix sums of (z-k)*100 are truncated to uint64 per cell, then
 # accumulated down columns as integers (differenceFromMean.go:210-226).
 # The truncation depends on the absolute row prefix from column 0, so
-# the operator is NOT halo-computable — but it IS exactly a cascade of
-# two 1-D window functions plus 4 point lookups, i.e. pure Catalyst:
-#   rowpre(r,c) = SUM((z-k)*100) OVER (PARTITION BY row ORDER BY col)
-#   I(r,c)      = SUM(floor(rowpre)) OVER (PARTITION BY col ORDER BY row)
-# window corners use the reference's clamped indices
-# (y1=clamp(row-r-1,0,rows-1) etc.), reproduced verbatim.
+# the operator is NOT halo-computable on tiles, only on full-width rows.
 
-def _diff_from_mean_core_sql(dem_sql: str, rows: int, cols: int,
-                             r: int, dialect: str) -> str:
-    n = rows * cols
-    if dialect == "duckdb":
-        grid_sql = (f"SELECT (i // {cols})::INT AS row, "
-                    f"(i % {cols})::INT AS col FROM range(0, {n}) t(i)")
-    else:
-        grid_sql = (f"SELECT CAST(id / {cols} AS INT) AS row, "
-                    f"CAST(id % {cols} AS INT) AS col FROM range({n})")
-    mat = "MATERIALIZED" if dialect == "duckdb" else ""
+def diff_from_mean_band(z: np.ndarray, valid: np.ndarray, first: int,
+                        lo: int, hi: int, r: int, k: float) -> np.ndarray:
+    """DifferenceFromMean of grid rows lo..hi-1, given the values ``z``
+    and present-cell mask ``valid`` of the full-width grid rows
+    first..first+len(z)-1 (the band's rows and every row within r of
+    them). Window corners use the reference's clamped indices
+    (y1 = clamp(row-r-1, 0) etc.), so grid row 0 and col 0 never
+    contribute. 0.0 where the window is empty."""
+    m, cols = z.shape
+    zz = np.where(valid, (z - k) * 100.0, 0.0)
+    fixed = np.floor(np.cumsum(zz, axis=1)).astype(np.int64)  # sequential
+    cnt = np.cumsum(valid, axis=1, dtype=np.int64)
+    c = np.arange(cols)
+    x2, x1 = np.minimum(c + r, cols - 1), np.maximum(c - r - 1, 0)
+    # exclusive prefixes down the band: P[i] sums band rows < i
+    P = np.zeros((2, m + 1, cols), dtype=np.int64)
+    P[0, 1:] = np.cumsum(fixed[:, x2] - fixed[:, x1], axis=0)
+    P[1, 1:] = np.cumsum(cnt[:, x2] - cnt[:, x1], axis=0)
+    y = np.arange(lo, hi)
+    s, n = P[:, np.minimum(y + r, first + m - 1) - first + 1] \
+        - P[:, np.maximum(y - r - 1, 0) - first + 1]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        out = (z[lo - first:hi - first] - k) \
+            - (s.astype(np.float64) / 100.0) / n.astype(np.float64)
+    return np.where(n > 0, out, 0.0)
+
+
+def diff_from_mean(grid: DataFrame, rows: int, cols: int, r: int = 8,
+                   tile: int = 256) -> DataFrame:
+    """One pass over row bands of max(1, tile^2 // cols) rows: k =
+    min(value) from one aggregate, an explode in the JVM sends each
+    cell to every band within r rows of it, and one Arrow task per
+    band runs `diff_from_mean_band`. A task holds about tile^2 cells
+    plus 2r halo rows of ``cols`` cells, ~100 bytes each in NumPy."""
+    k = grid.agg(F.min("value")).first()[0]
+    band = max(1, tile * tile // cols)
+
+    def run(key, table):
+        lo = key[0].as_py() * band
+        hi = min(lo + band, rows)
+        first = max(lo - r, 0)
+        z = np.zeros((min(hi + r, rows) - first, cols))
+        valid = np.zeros(z.shape, dtype=bool)
+        at = (table.column("row").to_numpy() - first,
+              table.column("col").to_numpy())
+        z[at] = table.column("value").to_numpy()
+        valid[at] = True
+        out = diff_from_mean_band(z, valid, first, lo, hi, r, k)
+        oy, ox = np.nonzero(valid[lo - first:hi - first])
+        return pa.table({"row": pa.array((oy + lo).astype(np.int32)),
+                         "col": pa.array(ox.astype(np.int32)),
+                         "diff": pa.array(out[oy, ox])})
+
+    def to_band(off):
+        return F.floor((F.col("row") + off) / band).cast("int")
+    return (grid.select("row", "col", "value", F.explode(F.sequence(
+        F.greatest(to_band(-r), F.lit(0)),
+        F.least(to_band(r), F.lit((rows - 1) // band)))).alias("band"))
+        .groupBy("band")
+        .applyInArrow(run, schema="row int, col int, diff double"))
+
+
+def diff_from_mean_oracle_sql(dem_sql: str, rows: int, cols: int,
+                              r: int = 8) -> str:
+    """DuckDB oracle: the fixed-point integral image as two cascaded
+    window functions over the dense grid, then four corner joins."""
     return f"""
-    WITH dem AS {mat} ({dem_sql}),
+    WITH dem AS MATERIALIZED ({dem_sql}),
     k AS (SELECT min(value) AS kv FROM dem),
-    grid AS ({grid_sql}),
+    grid AS (SELECT (i // {cols})::INT AS row, (i % {cols})::INT AS col
+             FROM range(0, {rows * cols}) t(i)),
     cells AS (
       SELECT g.row, g.col, d.value,
              CASE WHEN d.value IS NULL THEN 0.0
@@ -149,85 +208,6 @@ def _diff_from_mean_core_sql(dem_sql: str, rows: int, cols: int,
                 ELSE 0.0 END AS diff
     FROM corners
     """
-
-
-def dev_from_mean_traditional(dem: DataFrame, r: int = 8,
-                              literal: bool = False) -> DataFrame:
-    """DeviationFromMeanTraditional — the reference's own brute-force
-    oracle tool (deviationFromMeanTraditionalMethod.go:174-299) as a
-    first-class Catalyst plan: the (2r+1)^2 window scan becomes an
-    exploded-offset EQUI-join (offsets generated by an in-row
-    explode(sequence(...)) — no join, stays inside whole-stage
-    codegen; the neighbor lookup is a hash join on shifted (row, col)
-    keys — never a nested-loop range join), grouped per cell.
-
-    Two edge-semantics modes (identical at every interior cell; they
-    differ only in the first row/column band):
-
-    * ``literal=False`` (default — the driver-row twin): reproduces
-      the integral-image tool's edge quirk (global row 0 / col 0
-      never contribute, deviationFromMean.go:300-330) via the
-      nr>=1/nc>=1 join predicate, so it is the brute-force TWIN of
-      ``dev_from_mean`` and the two share one oracle and can be
-      cross-checked cell-for-cell. Non-positive variance or an empty
-      window emits 0.
-    * ``literal=True``: the actual DeviationFromMeanTraditional tool
-      — FULL window including row/col 0, and output zeroed when
-      n <= 2 (deviationFromMeanTraditionalMethod.go:227-252:
-      ``if n > 2 { v = (sumSqr - sum*sum/n)/n; ... } else { 0 }``).
-      Verified against an independent NumPy window scan in
-      tests/test_kernels.py.
-
-    Exact cross-engine: window sums of the dyadic-rational DEM are
-    order-free exact (see module docstring).
-    """
-    mn, mx = dem.agg(F.min("value"), F.max("value")).first()
-    k = float(mn + (mx - mn) / 2.0)
-    w = 2 * r + 1
-    c = (dem.select(F.col("row").alias("r0"), F.col("col").alias("c0"),
-                    F.col("value").alias("z"),
-                    F.explode(F.sequence(F.lit(0), F.lit(w * w - 1)))
-                    .alias("oid"))
-         .select("r0", "c0", "z",
-                 ((F.col("oid") / w).cast("int") - F.lit(r)).alias("dy"),
-                 ((F.col("oid") % w).cast("int") - F.lit(r)).alias("dx")))
-    n = dem.select(F.col("row").alias("nr"), F.col("col").alias("nc"),
-                   F.col("value").alias("nv"))
-    cond = (F.col("nr") == F.col("r0") + F.col("dy")) \
-        & (F.col("nc") == F.col("c0") + F.col("dx"))
-    if not literal:
-        cond = cond & (F.col("nr") >= 1) & (F.col("nc") >= 1)
-    j = c.join(n, cond, "left")
-    zz = F.col("nv") - F.lit(k)
-    g = (j.groupBy("r0", "c0", "z")
-         .agg(F.sum(zz).alias("s1"),
-              F.sum(zz * zz).alias("s2"),
-              F.count("nv").alias("cnt")))
-    v = (F.col("s2") - (F.col("s1") * F.col("s1")) / F.col("cnt")) \
-        / F.col("cnt")
-    dev = ((F.col("z") - F.lit(k)) - F.col("s1") / F.col("cnt")) \
-        / F.sqrt(v)
-    n_guard = (F.col("cnt") > 2) if literal else (F.col("cnt") > 0)
-    return g.select(
-        F.col("r0").alias("row"), F.col("c0").alias("col"),
-        F.when(n_guard & (v > 0), dev).otherwise(0.0)
-        .alias("dev"))
-
-
-def diff_from_mean(grid: DataFrame, rows: int, cols: int,
-                   r: int = 8) -> DataFrame:
-    """Spark implementation = the same SQL through Catalyst (window
-    functions + equi-joins are all JVM-side; no Python in the path)."""
-    from go_spatial_spark.grid import synthetic_dem_sql  # noqa: F401
-    spark = grid.sparkSession
-    grid.createOrReplaceTempView("__dem_dfm")
-    sql = _diff_from_mean_core_sql("SELECT * FROM __dem_dfm", rows, cols, r, "spark")
-    return spark.sql(sql)
-
-
-def diff_from_mean_oracle_sql(dem_sql: str, rows: int, cols: int,
-                              r: int = 8) -> str:
-    return _diff_from_mean_core_sql(dem_sql, rows, cols, r, "duckdb")
 
 
 # ---------------------------------------------------------------------------
@@ -310,7 +290,7 @@ def elevation_percentile_kernel(padded: np.ndarray, halo: int, ctx):
     """Per-tile integral histogram over coarse bins; percentile =
     100*(numLess + valProb[j]*g[bin])/N (elevationPercentile.go:398-422).
     The clamped-prefix quirk == grid row 0 / col 0 excluded (see
-    deviation_from_mean_kernel)."""
+    kernels._without_grid_row0_col0)."""
     nodata = ctx.meta.nodata
     r = int(ctx.extra["r"])
     mn = ctx.extra["mn"]
@@ -323,22 +303,13 @@ def elevation_percentile_kernel(padded: np.ndarray, halo: int, ctx):
     w = padded.shape[1] - 2 * halo
     c = padded[halo:halo + h, halo:halo + w]
 
-    work = padded.copy()
-    i0 = halo - ctx.row0
-    if 0 <= i0 < padded.shape[0]:
-        work[i0, :] = nodata
-    j0 = halo - ctx.col0
-    if 0 <= j0 < padded.shape[1]:
-        work[:, j0] = nodata
-
+    work = _without_grid_row0_col0(padded, halo, ctx)
     valid = work != nodata
-    j_hi = np.zeros(work.shape, dtype=np.int64)
     with np.errstate(invalid="ignore"):
         jv = np.floor((work - mn) / bin_size)
     jv = np.where(valid, jv, 0).astype(np.int64)
     jv[jv >= HIGH_RES_BINS] = HIGH_RES_BINS - 1
-    j_hi = jv
-    coarse = np.where(valid, bin_num[j_hi], -1)
+    coarse = np.where(valid, bin_num[jv], -1)
 
     H, W = work.shape
     g = np.zeros((num_bins, h, w), dtype=np.int64)
@@ -346,7 +317,7 @@ def elevation_percentile_kernel(padded: np.ndarray, halo: int, ctx):
         plane = (coarse == b).astype(np.int64)
         I = np.zeros((H + 1, W + 1), dtype=np.int64)
         I[1:, 1:] = plane.cumsum(0).cumsum(1)
-        g[b] = _window_sum_int(I, halo, h, w, r)
+        g[b] = _window_sum(I, halo, h, w, r)
 
     # center high-res bin / coarse bin (computed on the *unmasked* z)
     cv = c != nodata
@@ -367,14 +338,6 @@ def elevation_percentile_kernel(padded: np.ndarray, halo: int, ctx):
                        + vp * g_bin.astype(np.float64)) / N
     out = np.where(cv & (N > 0), pct, ctx.meta.nodata)
     return out
-
-
-def _window_sum_int(I, halo, h, w, r):
-    a = I[halo + r + 1:halo + r + 1 + h, halo + r + 1:halo + r + 1 + w]
-    b = I[halo - r:halo - r + h, halo - r:halo - r + w]
-    c = I[halo - r:halo - r + h, halo + r + 1:halo + r + 1 + w]
-    d = I[halo + r + 1:halo + r + 1 + h, halo - r:halo - r + w]
-    return a + b - c - d
 
 
 def elevation_percentile_oracle_sql(dem_sql: str, rows: int, cols: int,
@@ -423,27 +386,25 @@ def elevation_percentile_oracle_sql(dem_sql: str, rows: int, cols: int,
 # MaximumElevationDeviation — maximumElevationDeviation.go:269-621
 # ---------------------------------------------------------------------------
 
-def max_elev_deviation(dem_tiles, meta, tile: int, scales: list[int],
-                       k: float) -> DataFrame:
-    """Multiscale DEV: loop r over scales (driver-side, like the
-    reference's r = min..max step loop at :355), track max |DEV| and
-    the scale where it occurs (strict >, so the smallest scale wins
-    ties — reference :408-424). Two outputs: signed magnitude + scale."""
-    from go_spatial_spark.grid import run_stencil, tiles_to_long
-    from go_spatial_spark.kernels import deviation_from_mean_kernel
-    from pyspark.sql import Window
-    parts = None
-    for r in scales:
-        out = run_stencil(dem_tiles, meta, deviation_from_mean_kernel,
-                          halo=r, tile=tile, ctx_extra={"r": r, "k": k})
-        long = tiles_to_long(out, meta, tile=tile, value_col="dev")
-        long = long.withColumn("scale", F.lit(r))
-        parts = long if parts is None else parts.unionByName(long)
-    w = Window.partitionBy("row", "col").orderBy(
-        F.abs(F.col("dev")).desc(), F.col("scale").asc())
-    return (parts.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select("row", "col", F.col("dev").alias("max_dev"), "scale"))
+def max_elev_deviation_kernel(padded: np.ndarray, halo: int, ctx):
+    """Multiscale DEV on one tile at halo max(scales): for each scale r,
+    ascending, DEV of the block cropped to halo r (the very input a
+    halo-r stencil gives the DEV kernel), keeping the max |DEV| and its
+    scale (strict >, so the smallest scale wins ties — reference
+    :408-424). Returns the signed magnitude and scale planes."""
+    h = padded.shape[0] - 2 * halo
+    w = padded.shape[1] - 2 * halo
+    best = scale = None
+    for r in sorted(ctx.extra["scales"]):
+        dev = deviation_from_mean_kernel(
+            padded[halo - r:halo + h + r, halo - r:halo + w + r], r,
+            replace(ctx, extra={**ctx.extra, "r": r}))
+        if best is None:
+            best, scale = dev, np.full(dev.shape, float(r))
+            continue
+        wins = np.abs(dev) > np.abs(best)
+        best, scale = np.where(wins, dev, best), np.where(wins, r, scale)
+    return np.stack([best, scale])
 
 
 def max_elev_deviation_oracle_sql(dev_sql_for_scale, scales: list[int]) -> str:

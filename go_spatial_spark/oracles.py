@@ -124,6 +124,16 @@ def mean_filter_sql(rows: int, cols: int, rx: int = 2, ry: int = 2) -> str:
 def dev_from_mean_sql(rows: int, cols: int, r: int = 8) -> str:
     """deviationFromMean.go:300-330 incl. the edge quirk (grid row 0 /
     col 0 excluded from every window by the clamped exclusive prefix)."""
+    return _dev_window_sql(rows, cols, r, first=1, min_cnt=0)
+
+
+def dev_from_mean_traditional_sql(rows: int, cols: int, r: int = 8) -> str:
+    """deviationFromMeanTraditionalMethod.go:174-299: full window, n > 2."""
+    return _dev_window_sql(rows, cols, r, first=0, min_cnt=2)
+
+
+def _dev_window_sql(rows: int, cols: int, r: int, first: int,
+                    min_cnt: int) -> str:
     dem = synthetic_dem_sql(rows, cols)
     return f"""
     WITH dem AS MATERIALIZED ({dem}),
@@ -137,11 +147,11 @@ def dev_from_mean_sql(rows: int, cols: int, r: int = 8) -> str:
              count(n.value) AS cnt
       FROM dem c
       LEFT JOIN dem n
-        ON n.row BETWEEN greatest(c.row - {r}, 1) AND c.row + {r}
-       AND n.col BETWEEN greatest(c.col - {r}, 1) AND c.col + {r}
+        ON n.row BETWEEN greatest(c.row - {r}, {first}) AND c.row + {r}
+       AND n.col BETWEEN greatest(c.col - {r}, {first}) AND c.col + {r}
       GROUP BY c.row, c.col, c.value)
     SELECT row, col,
-           CASE WHEN cnt > 0
+           CASE WHEN cnt > {min_cnt}
                  AND (s2 - (s1 * s1) / cnt) / cnt > 0
                 THEN ((value - (SELECT k FROM kk)) - s1 / cnt)
                      / sqrt((s2 - (s1 * s1) / cnt) / cnt)

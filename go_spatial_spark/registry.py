@@ -19,6 +19,7 @@ from go_spatial_spark.grid import (
     RasterMeta, long_to_tiles, run_stencil, synthetic_dem, tiles_to_long,
 )
 from go_spatial_spark import kernels
+from go_spatial_spark.operators import window_stats as WS
 
 
 @dataclass
@@ -67,17 +68,34 @@ def run_tool(spark: SparkSession, name: str, grid: DataFrame,
     return out
 
 
-def _stencil_tool(kernel, halo, out_col, defaults=None):
+def _stencil_tool(kernel, halo, out_col, defaults=None, prep=None):
+    """``kernel`` as one stencil; ctx.extra: ``defaults``, the call's
+    arguments and ``prep(grid, meta, extra)``. The halo is the widest of
+    ``halo``, rx, ry, r and scales; the tile widens to it if needed."""
     def fn(spark, grid, meta, tile: int = 256, **kw):
-        extra = dict(defaults or {})
-        extra.update(kw)
-        tiles = long_to_tiles(grid, meta, tile=tile)
-        h = max([halo] + [int(extra[k]) for k in ("rx", "ry", "r")
-                          if k in extra])
-        out = run_stencil(tiles, meta, kernel, halo=h, tile=tile,
-                          ctx_extra=extra or None)
+        extra = {**(defaults or {}), **kw}
+        h = max([halo, *extra.get("scales", ())]
+                + [int(extra[k]) for k in ("rx", "ry", "r") if k in extra])
+        if prep:
+            extra.update(prep(grid, meta, extra))
+        tile = max(tile, h)
+        out = run_stencil(long_to_tiles(grid, meta, tile=tile), meta, kernel,
+                          halo=h, tile=tile, ctx_extra=extra or None)
         return tiles_to_long(out, meta, tile=tile, value_col=out_col)
     return fn
+
+
+def _mid_range(grid, meta, extra):
+    """k of the DEV family: the mid-range of the values."""
+    mn, mx = grid.agg(F.min("value"), F.max("value")).first()
+    return {"k": mn + (mx - mn) / 2.0}
+
+
+def _elev_pct_maps(grid, meta, extra):
+    """ElevationPercentile's maps: only the 10k-bin histogram is collected."""
+    mn, bs, bn, vp = WS.elevation_percentile_maps_distributed(
+        grid, meta.nodata, int(extra["num_bins"]))
+    return {"mn": mn, "bin_size": bs, "bin_num": bn, "val_prob": vp}
 
 
 def _register_builtins() -> None:
@@ -100,20 +118,14 @@ def _register_builtins() -> None:
                   _stencil_tool(kernels.fill_small_nodata_holes_kernel, 2,
                                 "value")))
 
-    def _dev(spark, grid, meta, tile: int = 256, r: int = 8, **kw):
-        mn, mx = grid.agg(F.min("value"), F.max("value")).first()
-        k = mn + (mx - mn) / 2.0
-        tiles = long_to_tiles(grid, meta, tile=tile)
-        out = run_stencil(tiles, meta, kernels.deviation_from_mean_kernel,
-                          halo=r, tile=tile, ctx_extra={"r": r, "k": k})
-        return tiles_to_long(out, meta, tile=tile, value_col="dev")
     register(Tool("DeviationFromMean",
                   "Deviation from mean elevation (windowed z-score)",
-                  ["input grid", "output grid", "neighbourhood size"], _dev))
+                  ["input grid", "output grid", "neighbourhood size"],
+                  _stencil_tool(kernels.deviation_from_mean_kernel, 0, "dev",
+                                {"r": 8}, _mid_range)))
 
     def _quant(spark, grid, meta, num_bins: int = 5, **kw):
-        from go_spatial_spark.operators.window_stats import quantiles
-        return quantiles(grid, num_bins=num_bins)
+        return WS.quantiles(grid, num_bins=num_bins)
     register(Tool("Quantiles", "Transforms values into quantile classes",
                   ["input grid", "output grid", "number of bins"], _quant))
 
@@ -167,55 +179,39 @@ def _register_builtins() -> None:
                   ["input DEM", "input streams", "output DEM"],
                   _breach_streams))
 
-    def _diff_mean(spark, grid, meta, r: int = 8, **kw):
-        from go_spatial_spark.operators.window_stats import diff_from_mean
-        return diff_from_mean(grid, meta.rows, meta.cols, r=r)
+    def _diff_mean(spark, grid, meta, r: int = 8, tile: int = 256, **kw):
+        return WS.diff_from_mean(grid, meta.rows, meta.cols, r=r, tile=tile)
     register(Tool("DifferenceFromMean",
                   "Difference from mean elevation (windowed)",
                   ["input grid", "output grid", "neighbourhood size"],
                   _diff_mean))
 
-    def _dev_trad(spark, grid, meta, r: int = 8, **kw):
-        # the traditional method IS the DEV range-join expression
-        # (deviationFromMeanTraditionalMethod.go:174-299) — same output
-        # as the integral-image tool, brute-force plan
-        return _REGISTRY["deviationfrommean"].fn(spark, grid, meta,
-                                                 r=r, **kw)
     register(Tool("DeviationFromMeanTraditional",
-                  "Brute-force DEV (the reference's oracle variant; "
+                  "DEV over the full window, zero unless it holds more "
+                  "than two cells (the reference's brute-force variant; "
                   "unregistered in the reference)",
                   ["input grid", "output grid", "neighbourhood size"],
-                  _dev_trad))
+                  _stencil_tool(kernels.dev_from_mean_traditional_kernel, 0,
+                                "dev", {"r": 8}, _mid_range)))
 
-    def _elev_pct(spark, grid, meta, r: int = 5, num_bins: int = 10, **kw):
-        from go_spatial_spark.operators import window_stats as WS
-        # global prep never pulls cells to the driver: only the
-        # bounded 10k-bin histogram is collected
-        mn, bs, bn, vp = WS.elevation_percentile_maps_distributed(
-            grid, meta.nodata, num_bins)
-        tile = int(kw.get("tile", 256))
-        out = run_stencil(long_to_tiles(grid, meta, tile=tile), meta,
-                          WS.elevation_percentile_kernel, halo=r, tile=tile,
-                          ctx_extra={"r": r, "mn": mn, "bin_size": bs,
-                                     "bin_num": bn, "val_prob": vp,
-                                     "num_bins": num_bins})
-        return tiles_to_long(out, meta, tile=tile, value_col="percentile")
     register(Tool("ElevationPercentile",
                   "Local elevation percentile (integral histogram)",
                   ["input grid", "output grid", "neighbourhood size",
-                   "number of bins"], _elev_pct))
+                   "number of bins"],
+                  _stencil_tool(WS.elevation_percentile_kernel, 0,
+                                "percentile", {"r": 5, "num_bins": 10},
+                                _elev_pct_maps)))
 
-    def _max_dev(spark, grid, meta, scales=(4, 8, 12), tile: int = 256,
-                 **kw):
-        from go_spatial_spark.operators import window_stats as WS
-        mn, mx = grid.agg(F.min("value"), F.max("value")).first()
-        k = mn + (mx - mn) / 2.0
-        return WS.max_elev_deviation(long_to_tiles(grid, meta, tile=tile),
-                                     meta, tile, scales=list(scales), k=k)
+    # the reference's r = min..max step loop (:355) in one stencil
+    max_dev = _stencil_tool(WS.max_elev_deviation_kernel, 0,
+                            ("max_dev", "scale"), {"scales": (4, 8, 12)},
+                            _mid_range)
     register(Tool("MaximumElevationDeviation",
                   "Multiscale max |DEV| + scale raster",
                   ["input grid", "output magnitude", "output scale",
-                   "min scale", "max scale", "step"], _max_dev))
+                   "min scale", "max scale", "step"],
+                  lambda *a, **kw: max_dev(*a, **kw).withColumn(
+                      "scale", F.col("scale").cast("int"))))
 
     def _wb2gt(spark, grid, meta, input_file: str = None,
                output_file: str = None, **kw):
@@ -247,12 +243,10 @@ def _register_builtins() -> None:
                   ["input file"], _las_info))
 
     def _hs_trim(spark, grid, meta, tile: int = 256, **kw):
-        from go_spatial_spark.operators.window_stats import (
-            hillshade_display_trim)
         shade = run_stencil(long_to_tiles(grid, meta, tile=tile), meta,
                             kernels.hillshade_kernel, halo=1, tile=tile,
                             output="long")
-        return hillshade_display_trim(shade)
+        return WS.hillshade_display_trim(shade)
     register(Tool("HillshadeDisplayTrim",
                   "Hillshade display min/max at 1% histogram tails",
                   ["input DEM", "output (new_min,new_max)"], _hs_trim))

@@ -171,8 +171,14 @@ def _write_blocks(df: DataFrame, meta: RasterMeta, path: str, dtype: str,
     (never written; ``ValueError``). The path must open as the same
     file on the driver and every executor (local or shared posix
     storage). Returns the (min, max) of the values that are not
-    NoData, (0.0, 0.0) if none."""
+    NoData, (0.0, 0.0) if none. A NoData value that ``dtype`` cannot
+    hold raises ``ValueError`` before any file is made: its cells would
+    read back as valid values."""
     rows, cols, nodata = meta.rows, meta.cols, meta.nodata
+    with np.errstate(invalid="ignore", over="ignore"):
+        held = np.float64(nodata).astype(dtype)
+    if not np.array_equal(held, nodata, equal_nan=True):
+        raise ValueError(f"NoData {nodata} does not fit {dtype} ({path})")
     item = np.dtype(dtype).itemsize
     start = len(head)
     part = path + ".part"

@@ -2,6 +2,7 @@
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from go_spatial_spark.grid import (
     NODATA, RasterMeta, long_to_tiles, run_stencil, synthetic_dem,
@@ -76,6 +77,16 @@ def test_halo_assembly_identity(spark):
             want9 += pad[1 + dy:1 + dy + rows, 1 + dx:1 + dx + cols]
     want9 = np.where(want != NODATA, want9, NODATA)
     assert np.array_equal(got, want9)
+
+
+def test_run_stencil_rejects_halo_wider_than_tile(spark):
+    """Halo strips come only from the 8 adjacent tiles, so a halo wider
+    than the tile would read cells two tiles away as NoData."""
+    meta = RasterMeta(rows=40, cols=37)
+    tiles = long_to_tiles(synthetic_dem(spark, 40, 37), meta, tile=16)
+    run_stencil(tiles, meta, lambda p, h, c: p, halo=16, tile=16)
+    with pytest.raises(ValueError, match="halo 17 exceeds the tile size 16"):
+        run_stencil(tiles, meta, lambda p, h, c: p, halo=17, tile=16)
 
 
 def test_reflect_boundary_policy(spark):

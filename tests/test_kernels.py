@@ -232,15 +232,13 @@ def test_fill_holes_golden(spark, dem_np):
 
 
 def test_dev_traditional_literal_golden(spark, dem_np):
-    """literal=True must match the ACTUAL DeviationFromMeanTraditional
-    tool semantics (deviationFromMeanTraditionalMethod.go:227-252):
+    """The DeviationFromMeanTraditional tool must match the reference
+    tool's semantics (deviationFromMeanTraditionalMethod.go:227-252):
     FULL window including global row/col 0, population variance,
     output zeroed when n <= 2 or v <= 0 — checked against an
     independent NumPy window scan (different loop order, same f64
     arithmetic)."""
-    from go_spatial_spark.grid import synthetic_dem
-    from go_spatial_spark.operators.window_stats import (
-        dev_from_mean_traditional)
+    from go_spatial_spark import registry
 
     r = 3
     valid = dem_np != NODATA
@@ -266,11 +264,13 @@ def test_dev_traditional_literal_golden(spark, dem_np):
                     want[row, col] = ((z - k) - s1 / n) / np.sqrt(v)
 
     dem = synthetic_dem(spark, ROWS, COLS)
-    got_rows = dev_from_mean_traditional(dem, r=r, literal=True).collect()
+    got_rows = registry.run_tool(spark, "DeviationFromMeanTraditional", dem,
+                                 RasterMeta(rows=ROWS, cols=COLS), r=r,
+                                 tile=TILE).collect()
     got = np.zeros_like(dem_np)
     for rr in got_rows:
         got[rr.row, rr.col] = rr.dev
-    # the first row/col band MUST now contribute (the non-literal twin
-    # excludes it) and n<=2 zeros apply; interior agrees with either
+    # the first row/col band contributes (DeviationFromMean excludes
+    # it) and the n<=2 zeros apply
     assert np.allclose(got, want, rtol=0, atol=0), \
         np.argwhere(got != want)[:5]

@@ -41,10 +41,7 @@ def test_pip_broadcasts_polygons(spark, sf01):
 # - hillshade_trim: cumulative sums over the groupBy(bin) histogram —
 #   <= 256 rows reach the unpartitioned window, whatever the raster
 #   size (the map-side partial agg collapses the corpus first).
-# - diff_from_mean: the scalar min(value) subquery — a global agg
-#   whose SinglePartition exchange moves one partial row per input
-#   partition.
-_BOUNDED_SINGLE_PARTITION = {"hillshade_trim", "diff_from_mean"}
+_BOUNDED_SINGLE_PARTITION = {"hillshade_trim"}
 
 
 def test_no_row_python_udfs_and_no_unbounded_single_partition(spark, sf01):
@@ -132,21 +129,37 @@ def test_knn_exhaustive_ring_explode_is_pruned(spark, sf01):
     assert "CartesianProduct" not in plan
 
 
-def test_dev_traditional_is_hash_join(spark):
-    """The (2r+1)^2 window scan must compile to a broadcast-offset
-    EQUI-join (hash join on shifted (row,col) keys), never a
-    BroadcastNestedLoopJoin / range join — at 100x raster sizes a
-    nested-loop over cells x offsets is quadratic death."""
-    from go_spatial_spark.grid import synthetic_dem
-    from go_spatial_spark.operators.window_stats import (
-        dev_from_mean_traditional)
-    dem = synthetic_dem(spark, 32, 32)
-    plan = _plan(dev_from_mean_traditional(dem, r=2))
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-    # the neighbor lookup is a real equi-join on the shifted keys
-    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan \
-        or "BroadcastHashJoin" in plan
+def test_window_tools_run_one_pass(spark):
+    """DifferenceFromMean (row bands), MaximumElevationDeviation (one
+    stencil over all scales) and DeviationFromMeanTraditional (DEV's
+    stencil) at 96^2, tile 32: no join, window or SinglePartition
+    exchange; one Python pass behind one exchange (the stencils add
+    long_to_tiles' repartition); and the job count per call, final
+    collect included, at most what it measures here."""
+    from go_spatial_spark import registry
+    from go_spatial_spark.grid import RasterMeta, synthetic_dem
+    meta = RasterMeta(rows=96, cols=96)
+    dem = synthetic_dem(spark, 96, 96)
+    sc = spark.sparkContext
+    for name, exchanges, max_jobs in (
+            ("DifferenceFromMean", 1, 4),
+            ("MaximumElevationDeviation", 2, 5),
+            ("DeviationFromMeanTraditional", 2, 5)):
+        group = f"window_tool_{name}"
+        sc.setJobGroup(group, name)
+        try:
+            df = registry.run_tool(spark, name, dem, meta, tile=32)
+            plan = _plan(df)
+            df.toPandas()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        for op in ("Join", "Window", "SinglePartition"):
+            assert op not in plan, (name, op, plan)
+        assert plan.count("FlatMapGroupsInArrow") == 1, (name, plan)
+        assert sum("Exchange" in ln for ln in plan.splitlines()) \
+            == exchanges, (name, plan)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) \
+            <= max_jobs, name
 
 
 def test_raster_io_plans(spark, tmp_path, monkeypatch):

@@ -225,7 +225,7 @@ def test_distributed_writer_rows_spanning_batches(spark, tmp_path):
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
 
-def _dense_case(dtype, empty):
+def _dense_case(dtype, empty, nodata):
     """A 37 x 45 plane for ``dtype``: about a tenth NoData holes and
     one all-NoData 16^2 tile, or all NoData when ``empty``."""
     rng = np.random.default_rng(45)
@@ -234,10 +234,10 @@ def _dense_case(dtype, empty):
     else:  # integer payloads hold integral values in their range
         arr = rng.integers(0 if dtype == "u1" else -300, 250,
                            (37, 45)).astype(np.float64)
-    arr[rng.random(arr.shape) < 0.1] = NODATA
-    arr[16:32, 16:32] = NODATA
+    arr[rng.random(arr.shape) < 0.1] = nodata
+    arr[16:32, 16:32] = nodata
     if empty:
-        arr[:] = NODATA
+        arr[:] = nodata
     return arr
 
 
@@ -258,18 +258,20 @@ def test_write_blocks_byte_identical(spark, tmp_path, ext, data_type):
     and ragged edge tiles (a tile-16 round trip of 37 x 45), a
     five-partition input in Arrow batches of 100 cells that cut across
     grid rows, and an empty raster. Whitebox and Idrisi headers carry
-    the min/max of the valid cells (0.0 for an empty raster)."""
+    the min/max of the valid cells (0.0 for an empty raster). A byte
+    payload cannot hold the default NoData and takes 255."""
     dtype = {".dep": io._WB_DTYPES.get(data_type),
              ".rdc": io._IDRISI_DTYPES.get(data_type),
              ".hdr": "<f4", ".tif": "<f8"}[ext]
+    nodata = 255.0 if dtype == "u1" else NODATA
     meta = RasterMeta(rows=37, cols=45, north=37.0, south=0.0, east=45.0,
-                      west=0.0)
+                      west=0.0, nodata=nodata)
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "100")
     try:
         for empty in (False, True):
-            dense = _dense_case(dtype, empty)
-            rr, cc = np.nonzero(dense != NODATA)
+            dense = _dense_case(dtype, empty, nodata)
+            rr, cc = np.nonzero(dense != nodata)
             df = spark.createDataFrame(
                 [(int(r), int(c), float(dense[r, c])) for r, c in zip(rr, cc)],
                 "row int, col int, value double")
@@ -287,7 +289,7 @@ def test_write_blocks_byte_identical(spark, tmp_path, ext, data_type):
                 p[:-4] + {".dep": ".tas", ".rdc": ".rst", ".hdr": ".flt"}[ext]
             with open(payload, "rb") as f:
                 assert f.read() == head + dense.astype(dtype).tobytes()
-            valid = dense[dense != NODATA]
+            valid = dense[dense != nodata]
             want = [valid.min(), valid.max()] if valid.size else [0.0, 0.0]
             if ext == ".dep":
                 assert _header_minmax(p, ("min", "max", "display min",
@@ -299,6 +301,21 @@ def test_write_blocks_byte_identical(spark, tmp_path, ext, data_type):
             assert not list(tmp_path.glob("*.part"))
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+
+@pytest.mark.parametrize("ext,data_type", [(".rdc", "byte"),
+                                           (".dep", "BYTE")])
+def test_write_rejects_nodata_the_payload_cannot_hold(spark, tmp_path, ext,
+                                                     data_type):
+    """The default NoData -32768 does not fit a byte payload: every
+    NoData cell would read back as a valid value, so the writer raises
+    before it makes any file."""
+    meta = RasterMeta(rows=4, cols=5)
+    df = spark.createDataFrame([(0, 0, 1.0)], "row int, col int, value double")
+    write = io.write_idrisi if ext == ".rdc" else io.write_whitebox
+    with pytest.raises(ValueError, match="NoData -32768.0 does not fit"):
+        write(df, meta, str(tmp_path / f"out{ext}"), data_type=data_type)
+    assert not list(tmp_path.iterdir())
 
 
 def test_write_rejects_cells_outside_grid(spark, tmp_path):
